@@ -1,12 +1,16 @@
 """Seeded synthetic tables for the benchmark.
 
 Writes the ten tables the program reads (`graft.Tables.names`), one
-parquet file each, with the same physical schemas and value domains as the
-program's reference test data: a TPC-H-like star schema, an `events`
-stream, a `documents` corpus over a small vocabulary with a share of
-near-duplicate documents, and unit-norm float embeddings. Every value is
-drawn from `numpy.random.RandomState(seed)`, so one seed always gives
-byte-identical inputs; sizes do not depend on the seed.
+parquet file each, with the physical schemas of the program's reference
+test data at scale factor 0.01: a TPC-H-like star schema, an `events`
+stream, a `documents` corpus and unit-norm float embeddings. Every
+value is drawn from `numpy.random.RandomState(seed)`, so one seed always
+gives byte-identical inputs; sizes do not depend on the seed.
+
+Each constant and distribution below is set from a figure measured on
+the reference tables with profile_tables.py (the figures are quoted next
+to each; README.md, "Inputs", lists the reference and the generated
+values side by side).
 
 Usage: python3 gen.py <out_dir> <seed>
 """
@@ -17,11 +21,13 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Row counts of the 0.01 scale factor of the reference data.
+# Row counts of the reference tables at scale factor 0.01.
 SIZES = dict(customer=1500, supplier=100, part=2000, orders=15000,
              lineitem=60000, events=10000, users=150, documents=500,
              embeddings=500)
 EMBED_DIM = 64
+# 25 of the reference's 500 documents end in the token "dup"; 24 of them
+# are another document plus that token.
 DUP_SHARE = 0.05
 
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
@@ -33,7 +39,11 @@ PART_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod",
              "widget"]
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 LANGS = ["en", "de", "es", "fr", "zh"]
+# reference: en=218 of 500, the other four 64..75 each
 LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
+# The reference corpus uses exactly these 30 tokens (plus "dup"), drawn
+# uniformly: token counts have a coefficient of variation of 0.032, as a
+# multinomial draw gives (0.033).
 VOCAB = ("a agg batch big column customer data fast filter group hash join "
          "key line merge order part query row scan slow small sort spark "
          "stream table the value vector window").split()
@@ -73,6 +83,8 @@ def tables(seed):
         "s_name": [f"Supplier#{i:09d}" for i in range(n["supplier"])],
         "s_nationkey": rng.randint(0, 25, n["supplier"]).astype(np.int32),
         "s_acctbal": money(rng, -999.99, 9999.99, n["supplier"])})
+    # reference: uniform foreign keys (4.07 lineitems per order, max 13;
+    # 10.0 orders per customer, max 25), 2399 distinct order dates
     pk = np.arange(n["part"], dtype=np.int64)
     out["part"] = pa.table({
         "p_partkey": pk,
@@ -105,6 +117,9 @@ def tables(seed):
         "l_shipdate": ts_col(
             EPOCH_1995 + rng.randint(1, 2500, nl) * DAY_US)})
     ne = n["events"]
+    # reference: 30.0 days spanned, gaps with a coefficient of variation of
+    # 0.995 (exponential), 49..86 events per each of 150 users (uniform
+    # keys), values with min 0.01, median 34.6, mean 49.6 (exponential)
     gaps = rng.exponential(30 * DAY_US / ne, ne).astype(np.int64)
     out["events"] = pa.table({
         "event_id": np.arange(ne, dtype=np.int64),
@@ -126,8 +141,10 @@ def tables(seed):
 
 
 def documents(rng, nd):
-    """Random texts over VOCAB; DUP_SHARE of them are a copy of another
-    document with one extra token, so they are near-duplicates."""
+    """Random texts over VOCAB, 10..99 tokens each (reference: min 10,
+    median 56, max 99, flat histogram); DUP_SHARE of them are a copy of
+    another document with the extra token "dup", so they are
+    near-duplicates."""
     texts = [" ".join(rng.choice(VOCAB, rng.randint(10, 100)))
              for _ in range(nd)]
     dups = rng.choice(nd, int(nd * DUP_SHARE), replace=False)

@@ -5,11 +5,12 @@ Usage (from the root of a checkout):
   python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
   python3 perfbench/run.py --summary [--seed <n>]
 
-One run builds the program from the checkout's sources (once per source
-tree; sbt, offline), generates the seed's tables (gen.py) and runs the
-workload in a fresh JVM (perfbench.Harness): session set-up and warm-up,
-a cold pass, warm passes for --seconds, then an untimed pass that writes
-every result for the DuckDB oracle compare (check.py). The last stdout
+One run builds the program from the checkout's sources (when they differ
+from the last build; sbt, offline), generates the tables (gen.py, once)
+and runs the workload in a fresh JVM (perfbench.Harness): session set-up
+and warm-up, a cold pass, an untimed pass that writes every result for
+the DuckDB oracle compare (check.py), then warm passes sized by
+--seconds. The seed permutes the workload's query order. The last stdout
 line is one JSON object with `correct`, `attempted`, `failed` and
 `metrics`: the end-to-end metrics with --trace 0, the per-layer metrics
 with --trace 1. --summary runs every workload once untraced and prints
@@ -32,6 +33,7 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
 WORKLOADS = ["relational", "algebra_llm"]
 HEAP = "3g"
+DATA_SEED = 1
 JVM_TIMEOUT_S = 150
 BUILD_TIMEOUT_S = 840
 # What spark-submit adds on JDK 17 (the program's build.sbt sets the same).
@@ -68,19 +70,29 @@ def run_proc(cmd, timeout, what, **kw):
 
 
 def source_files():
-    roots = [os.path.join(ROOT, "src", "main"), os.path.join(ROOT, "project"),
-             os.path.join(HERE, "src"), os.path.join(HERE, "project")]
+    """Every file the build reads: all of both source trees, and the build
+    definitions (build.sbt, project/*.scala|sbt|properties) of both builds."""
     files = [os.path.join(ROOT, "build.sbt"), os.path.join(HERE, "build.sbt")]
-    for r in roots:
+    roots = [(os.path.join(ROOT, "src", "main"), True),
+             (os.path.join(HERE, "src"), True),
+             (os.path.join(ROOT, "project"), False),
+             (os.path.join(HERE, "project"), False)]
+    for r, every_file in roots:
         for d, dirs, names in os.walk(r):
             dirs[:] = sorted(x for x in dirs if x not in ("target", "project"))
             files += [os.path.join(d, n) for n in sorted(names)
-                      if n.endswith((".scala", ".java", ".sbt", ".properties"))]
+                      if every_file or n.endswith((".scala", ".sbt",
+                                                   ".properties"))]
     return files
 
 
 def build():
-    """Compile the program and the client; returns the run classpath."""
+    """Compile the program and the client; returns the run classpath.
+
+    Every build writes to the same target directories, so one stamp holds
+    the source hash of the last successful build and its classpath. sbt
+    runs whenever the sources differ from that build; the stamp is removed
+    first, so a failed or cut build never leaves a matching one behind."""
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
             and os.path.isdir(os.path.join(ROOT, "src", "main"))):
         fail("no program sources next to perfbench/ (build.sbt, src/main)")
@@ -89,10 +101,14 @@ def build():
         h.update(os.path.relpath(f, ROOT).encode())
         with open(f, "rb") as fh:
             h.update(fh.read())
-    stamp = os.path.join(WORK, f"classpath-{h.hexdigest()[:16]}")
+    digest = h.hexdigest()
+    stamp = os.path.join(WORK, "last-build.json")
     if os.path.exists(stamp):
         with open(stamp) as fh:
-            return fh.read()
+            last = json.load(fh)
+        if last["sources"] == digest:
+            return last["classpath"]
+        os.remove(stamp)
     env = dict(os.environ, COURSIER_MODE="offline")
     if "SBT_OPTS" not in env:
         opts = ["-Dsbt.offline=true", "-Xmx2g"]
@@ -116,16 +132,20 @@ def build():
     if code != 0 or os.path.join(HERE, "target") not in cp:
         fail(f"build failed, see {os.path.join(WORK, 'build.log')}")
     with open(stamp, "w") as fh:
-        fh.write(cp)
+        json.dump({"sources": digest, "classpath": cp}, fh)
     return cp
 
 
-def tables(seed):
+def tables():
+    """The tables every run reads. Like the reference data they are the
+    same for every seed; the seed permutes the query order. Work that
+    depends on the data (dedup and BPE iteration counts, memo sizes) then
+    does not vary from run to run."""
     import gen
-    d = os.path.join(WORK, "data", f"seed-{seed}")
+    d = os.path.join(WORK, "data", f"seed-{DATA_SEED}")
     if not os.path.exists(os.path.join(d, "done")):
         shutil.rmtree(d, ignore_errors=True)
-        gen.write(d, seed)
+        gen.write(d, DATA_SEED)
         open(os.path.join(d, "done"), "w").close()
     return d
 
@@ -164,13 +184,15 @@ def unit(name):
 
 def run(workload, seed, seconds, trace):
     cp = build()
-    data = tables(seed)
+    data = tables()
     out = os.path.join(WORK, "out", f"{workload}-{seed}")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
+    t0 = time.time()
     r = harness(cp, ["--data", data, "--mode", "run", "--workload", workload,
                      "--seed", str(seed), "--seconds", str(seconds),
                      "--trace", str(trace), "--out", out], "run.log")
+    jvm_s = time.time() - t0
 
     import check
     con = check.connect(data)
@@ -179,6 +201,7 @@ def run(workload, seed, seconds, trace):
         why = check.mismatch(con, q["oracle"], os.path.join(out, q["name"]))
         if why:
             wrong[q["name"]] = why
+    check_s = time.time() - t0 - jvm_s
     calls_per_query = 1 + r["warm_passes"]
     failed_queries = sorted(set(r["failed_queries"]) | set(wrong))
     failed = r["failed_calls"] + calls_per_query * len(
@@ -188,10 +211,17 @@ def run(workload, seed, seconds, trace):
     log(f"{workload} seed={seed} order={' '.join(r['order'])}")
     log(f"{workload}: setup_s={r['setup_s']:.3f} "
         f"cold_e2e_s={r['cold_e2e_s']:.3f} "
-        f"warm_e2e_s={r['warm_e2e_s']:.3f} ({r['warm_passes']} warm passes) "
+        f"warm_e2e_s={r['warm_e2e_s']:.3f} (median of "
+        f"{' '.join(f'{x:.3f}' for x in r['warm_pass_s'])}) "
         f"resident_cache_mb={r['resident_cache_mb']:.2f} "
         f"failed_frac={failed / attempted:.4f} heap_mb={r['heap_mb']} "
         f"memo_budget_mb={r['memo_budget_mb']:.1f} cores={r['cores']}")
+    log(f"{workload}: jvm {jvm_s:.1f} s (untimed check pass "
+        f"{r['verify_s']:.1f} s), oracle compare {check_s:.1f} s")
+    log(f"{workload}: checked " + ", ".join(
+        f"{q['name']} {'WRONG' if q['name'] in wrong else 'ok'} "
+        f"({'oracle' if q['oracle'] else 'non-empty'})"
+        for q in r["queries"]))
     for name, why in sorted(wrong.items()):
         log(f"{workload}: WRONG {name}: {why}")
     for name in r["failed_queries"]:
@@ -200,7 +230,15 @@ def run(workload, seed, seconds, trace):
     if trace:
         metrics = {k: {"value": v, "unit": unit(k)}
                    for k, v in r["layers"].items()}
-        log(f"trace written to {os.path.join(out, 'trace.json')}")
+        trace_path = os.path.join(out, "trace.json")
+        with open(trace_path) as fh:
+            calls = json.load(fh)["calls"]
+        # planning is clipped to the write's span (millisecond clocks)
+        over = [f"{c['pass']} {c['query']}" for c in calls
+                if c["spans"]["plan_s"] > c["spans"]["write_s"] + 0.002]
+        if over:
+            fail(f"plan_s exceeds the write span for: {', '.join(over)}")
+        log(f"trace written to {trace_path}")
     else:
         metrics = {
             "setup_s": {"value": r["setup_s"], "unit": "s"},
@@ -218,7 +256,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=15)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--summary", action="store_true",
                     help="run every workload once and print a table")
@@ -226,12 +264,12 @@ def main():
                     help="time every query cold by count() and by noop")
     a = ap.parse_args()
     if a.dual:
-        cp, data = build(), tables(a.seed)
+        cp, data = build(), tables()
         r = {s: harness(cp, ["--data", data, "--mode", "dual", "--sink", s],
                         f"dual-{s}.log", timeout=900)["seconds"]
              for s in ("count", "noop")}
         print(json.dumps({
-            "seed": a.seed, "cores": os.cpu_count(), "heap": HEAP,
+            "data_seed": DATA_SEED, "cores": os.cpu_count(), "heap": HEAP,
             "queries": {q: {"count_s": r["count"][q], "noop_s": r["noop"][q]}
                         for q in r["noop"]},
             "total_count_s": sum(v for v in r["count"].values() if v >= 0),

@@ -5,7 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.{ListenerBusAccess, Success}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -14,10 +15,15 @@ import Harness.{Call, Pass, obj, str}
 /** Attributes Spark's own events to the query call that caused them.
   *
   * Each call runs under its own job group; a SparkListener files jobs,
-  * stages and task metrics under that group, and a QueryExecutionListener
-  * records the planning phases (`QueryExecution.tracker`) of the call's
-  * noop write. After each call the listener bus is drained, so every
-  * event is filed before the next call starts.
+  * stages and task metrics under that group. Planning time is the part of
+  * the noop write covered by `QueryPlanningTracker` phases: those of the
+  * frame's own tracker and of every query execution the write reports to
+  * a QueryExecutionListener. A tracker merges a repeated phase into (first
+  * start, last end), so a phase the frame already went through before the
+  * write would reach back into construct time; each phase is therefore
+  * clipped to the write's span, and overlapping phases count once. After
+  * each call the listener bus is drained, so every event is filed before
+  * the next call starts.
   */
 final class Tracer(spark: SparkSession) {
 
@@ -37,12 +43,15 @@ final class Tracer(spark: SparkSession) {
   final class Record(val call: Call, val pass: String) {
     val jobs = mutable.ArrayBuffer[(Int, Int, Int)]() // id, stages, skipped
     val stages = mutable.LinkedHashMap[Int, Stage]()
+    val phases = mutable.ArrayBuffer[(Long, Long)]() // start, end (ms)
     var planS = 0.0
     var compiles = 0L
   }
 
   private val records = mutable.ArrayBuffer[Record]()
   private var current: Record = _
+  // the frame being written and the write's start (ms)
+  private var writing: Option[(QueryPlanningTracker, Long)] = None
   private var compilesAtBegin = 0L
   private val byGroup = mutable.Map[String, Record]()
   private val stageRecord = mutable.Map[Int, Record]()
@@ -98,9 +107,7 @@ final class Tracer(spark: SparkSession) {
   private val qeListener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit = Tracer.this.synchronized {
-      // the noop write in overwrite mode runs as an "overwrite" command
-      if (current != null && funcName == "overwrite")
-        current.planS += qe.tracker.phases.values.map(_.durationMs).sum / 1e3
+      if (current != null) current.phases ++= spans(qe.tracker)
     }
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
@@ -121,14 +128,42 @@ final class Tracer(spark: SparkSession) {
     spark.sparkContext.setJobGroup(group, s"$pass ${call.q.name}")
   }
 
+  /** The call's frame is about to be written. */
+  def write(df: DataFrame): Unit = synchronized {
+    writing = Some((df.queryExecution.tracker, System.currentTimeMillis()))
+  }
+
+  /** The write has ended (or the call failed). */
   def end(): Unit = {
+    val endMs = System.currentTimeMillis()
     ListenerBusAccess.drain(spark.sparkContext)
     spark.sparkContext.clearJobGroup()
     synchronized {
-      current.compiles =
+      val r = current
+      r.compiles =
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compilesAtBegin
+      writing.foreach { case (t, startMs) =>
+        r.phases ++= spans(t)
+        r.planS = covered(r.phases.toSeq, startMs, endMs) / 1e3
+      }
+      writing = None
       current = null
     }
+  }
+
+  private def spans(t: QueryPlanningTracker): Seq[(Long, Long)] =
+    t.phases.values.map(p => (p.startTimeMs, p.endTimeMs)).toSeq
+
+  /** Milliseconds of [from, to] covered by at least one of `spans`. */
+  private def covered(spans: Seq[(Long, Long)], from: Long, to: Long): Long = {
+    var total = 0L
+    var reach = from
+    for ((s, e) <- spans.sortBy(_._1)) {
+      val lo = math.max(s, reach)
+      val hi = math.min(e, to)
+      if (hi > lo) { total += hi - lo; reach = hi }
+    }
+    total
   }
 
   private def of(pass: String) = records.filter(_.pass == pass).toSeq
@@ -203,7 +238,8 @@ final class Tracer(spark: SparkSession) {
       s"""{"query":${str(r.call.q.name)},"module":${str(r.call.module)},""" +
         s""""pass":${str(r.pass)},"ok":${s.ok},"compiles":${r.compiles},""" +
         s""""spans":${obj(Seq("query_s" -> query,
-          "construct_s" -> s.construct, "plan_s" -> r.planS,
+          "construct_s" -> s.construct, "write_s" -> s.write,
+          "plan_s" -> r.planS,
           "exec_s" -> (s.write - r.planS), "cleanup_s" -> s.cleanup))},""" +
         s""""jobs":$jobs}"""
     }.mkString(s"""{"calls_per_pass":$callsPerPass,"calls":[""", ",\n",
