@@ -14,7 +14,8 @@ the DuckDB oracle compare (check.py), then warm passes sized by
 line is one JSON object with `correct`, `attempted`, `failed` and
 `metrics`: the end-to-end metrics with --trace 0, the per-layer metrics
 with --trace 1. --summary runs every workload once untraced and prints
-the end-to-end figures with the resident cache and the failed share.
+the end-to-end figures with the wall times, the resident cache and the
+failed share.
 --dual times every query of the program once cold by count() and once by
 the noop sink and prints both. See README.md for the metrics.
 """
@@ -211,7 +212,8 @@ def run(workload, seed, seconds, trace):
     log(f"{workload} seed={seed} order={' '.join(r['order'])}")
     log(f"{workload}: setup_s={r['setup_s']:.3f} "
         f"cold_e2e_s={r['cold_e2e_s']:.3f} "
-        f"warm_e2e_s={r['warm_e2e_s']:.3f} (median of "
+        f"warm_e2e_s={r['warm_e2e_s']:.3f} cold_cpu_s={r['cold_cpu_s']:.3f} "
+        f"warm_cpu_s={r['warm_cpu_s']:.3f} (passes "
         f"{' '.join(f'{x:.3f}' for x in r['warm_pass_s'])}) "
         f"resident_cache_mb={r['resident_cache_mb']:.2f} "
         f"failed_frac={failed / attempted:.4f} heap_mb={r['heap_mb']} "
@@ -240,12 +242,10 @@ def run(workload, seed, seconds, trace):
             fail(f"plan_s exceeds the write span for: {', '.join(over)}")
         log(f"trace written to {trace_path}")
     else:
-        metrics = {
-            "setup_s": {"value": r["setup_s"], "unit": "s"},
-            "cold_e2e_s": {"value": r["cold_e2e_s"], "unit": "s"},
-            "warm_e2e_s": {"value": r["warm_e2e_s"], "unit": "s"},
-        }
-    summary = dict(failed_queries=failed_queries,
+        metrics = {k: {"value": r[k], "unit": "s"}
+                   for k in ("setup_s", "cold_cpu_s", "warm_cpu_s")}
+    summary = dict(cold_e2e_s=r["cold_e2e_s"], warm_e2e_s=r["warm_e2e_s"],
+                   failed_queries=failed_queries,
                    resident_cache_mb=r["resident_cache_mb"],
                    failed_frac=failed / attempted)
     return {"correct": failed == 0, "attempted": attempted, "failed": failed,
@@ -256,7 +256,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--summary", action="store_true",
                     help="run every workload once and print a table")
@@ -277,18 +277,19 @@ def main():
             indent=1))
         return
     if a.summary:
-        print(f"{'workload':<15}{'setup_s':>10}{'cold_e2e_s':>12}"
-              f"{'warm_e2e_s':>12}{'resident_cache_mb':>19}"
-              f"{'failed_frac':>13}  failed queries")
+        print(f"{'workload':<15}{'setup_s':>10}{'cold_cpu_s':>12}"
+              f"{'warm_cpu_s':>12}{'cold_e2e_s':>12}{'warm_e2e_s':>12}"
+              f"{'resident_cache_mb':>19}{'failed_frac':>13}  failed queries")
         for w in WORKLOADS:
             res, s = run(w, a.seed, a.seconds, 0)
             m = res["metrics"]
             print(f"{w:<15}{m['setup_s']['value']:>10.3f}"
-                  f"{m['cold_e2e_s']['value']:>12.3f}"
-                  f"{m['warm_e2e_s']['value']:>12.3f}"
+                  f"{m['cold_cpu_s']['value']:>12.3f}"
+                  f"{m['warm_cpu_s']['value']:>12.3f}"
+                  f"{s['cold_e2e_s']:>12.3f}{s['warm_e2e_s']:>12.3f}"
                   f"{s['resident_cache_mb']:>19.2f}{s['failed_frac']:>13.4f}"
                   f"  {' '.join(s['failed_queries']) or '-'}", flush=True)
-        print("units: setup_s, cold_e2e_s, warm_e2e_s in s; "
+        print("units: setup_s and the _cpu_s and _e2e_s columns in s; "
               "resident_cache_mb in MB; failed_frac is a fraction of calls")
         return
     if a.workload is None:

@@ -50,11 +50,11 @@ object Harness {
       "q_dedup_pipeline", "q_bpe_train"))
 
   /** Nominal seconds of one warm pass of either workload at 4 vCPUs. */
-  val nominalWarmS = 5.0
+  val nominalWarmS = 3.5
 
   /** Warm passes that fit `seconds` at the nominal pass time: at least
-    * three and an odd number, so the reported median is one measured
-    * pass. The count depends only on `seconds`, never on how fast the
+    * three and an odd number, so each query's median is one measured
+    * call. The count depends only on `seconds`, never on how fast the
     * host runs, so every run does the same work. */
   def warmPasses(seconds: Double): Int = {
     val n = math.max(3, math.round(seconds / nominalWarmS).toInt)
@@ -105,7 +105,7 @@ object Harness {
     val verifyS = (System.nanoTime() - verifyStart) / 1e9
     val warm = (1 to warmPasses(opt("seconds").toDouble))
       .map(_ => runPass(spark, data, order, "warm", tracer))
-    val warmMedian = median(warm.map(_.wall))
+    val warmMedian = warmE2e(warm)
     val failures = (cold.failed ++ warm.flatMap(_.failed)).distinct
     val attempted = order.size * (1 + warm.size)
     val failedCalls = cold.failed.size + warm.map(_.failed.size).sum
@@ -118,7 +118,9 @@ object Harness {
           "memo.rebuild_s" -> Memo.rebuildSeconds,
           "memo.budget_mb" -> budgetMb,
           "cache.resident_mb" -> residentMb,
-          "traced.cold_e2e_s" -> cold.wall)
+          "traced.cold_e2e_s" -> cold.wall,
+          "traced.warm_e2e_s" -> warmMedian,
+          "traced.cold_cpu_s" -> cold.cpu)
       Files.writeString(Paths.get(out, "trace.json"),
         t.traceJson(order.size, cold +: warm))
       metrics
@@ -129,6 +131,7 @@ object Harness {
         s""""oracle":${c.q.oracle.map(str).getOrElse("null")}}"""
     }.mkString("[", ",", "]")
     emit(s"""{"setup_s":$setupS,"cold_e2e_s":${cold.wall},""" +
+      s""""cold_cpu_s":${cold.cpu},"warm_cpu_s":${warmCpu(warm)},""" +
       s""""warm_e2e_s":$warmMedian,"warm_passes":${warm.size},""" +
       s""""warm_pass_s":${warm.map(_.wall).mkString("[", ",", "]")},""" +
       s""""verify_s":$verifyS,""" +
@@ -163,7 +166,15 @@ object Harness {
 
   /** The session `graft.Bench` builds: all cores, one shuffle partition
     * per core, UTC, no UI, AQE allowed to re-coalesce cached plans. The
-    * memo gets the harness-default budget, half the nominal storage pool. */
+    * memo gets the harness-default budget, half the nominal storage pool.
+    *
+    * One setting differs from `Bench`: the generated-code cache holds 1024
+    * classes, not Spark's default 100. A workload's cold pass compiles 120
+    * (relational) to 220 (algebra_llm) classes, so at 100 entries every
+    * warm pass compiled 51 to 107 of them again, about 30 ms each, and how
+    * many depended on the query order, that is on the seed: warm passes
+    * moved by up to 40 % from seed to seed. With the larger cache a warm
+    * pass compiles nothing; cold compiles are unchanged. */
   def session(scratch: String): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
@@ -172,6 +183,7 @@ object Harness {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.local.dir", s"$scratch/spark-local")
       .config("spark.sql.warehouse.dir", s"$scratch/spark-warehouse")
@@ -204,12 +216,14 @@ object Harness {
   }
 
   /** One span per query call; `construct` is the `Q.fn` call, `write` the
-    * noop materialization, `cleanup` the `Cleanup` after it. */
+    * noop materialization, `cleanup` the `Cleanup` after it, and `cpu` the
+    * CPU seconds the program's threads spent over all three. */
   final case class Span(call: Call, construct: Double, write: Double,
-      cleanup: Double, ok: Boolean)
+      cleanup: Double, ok: Boolean, cpu: Double)
 
   final case class Pass(name: String, wall: Double, spans: Seq[Span]) {
     def failed: Seq[String] = spans.filterNot(_.ok).map(_.call.q.name)
+    def cpu: Double = spans.map(_.cpu).sum
   }
 
   def runPass(spark: SparkSession, data: String, order: Seq[Call],
@@ -219,6 +233,7 @@ object Harness {
     var lastResult = start
     for (c <- order) {
       tracer.foreach(_.begin(c, pass))
+      val cpu0 = threadCpu()
       val t0 = System.nanoTime()
       var t1 = t0
       val ok = try {
@@ -237,11 +252,31 @@ object Harness {
       lastResult = t2
       Cleanup(spark)
       val t3 = System.nanoTime()
+      val cpu = cpuSince(cpu0)
       tracer.foreach(_.end())
-      spans += Span(c, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, ok)
+      spans += Span(c, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, ok,
+        cpu)
     }
     Pass(pass, (lastResult - start) / 1e9, spans.toSeq)
   }
+
+  private val threads = java.lang.management.ManagementFactory
+    .getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** CPU nanoseconds of every live Java thread, by thread id. The JIT
+    * compiler and garbage-collector threads are hidden from the thread
+    * bean and are not in it. */
+  def threadCpu(): Map[Long, Long] = {
+    val ids = threads.getAllThreadIds
+    ids.zip(threads.getThreadCpuTime(ids)).filter(_._2 >= 0).toMap
+  }
+
+  /** CPU seconds the program's threads spent since `before`: the client
+    * thread, Spark's task, scheduler and shuffle threads, anything the
+    * program starts. A thread that ended in between is not counted. */
+  def cpuSince(before: Map[Long, Long]): Double =
+    threadCpu().iterator.map { case (id, ns) =>
+      ns - before.getOrElse(id, 0L) }.sum / 1e9
 
   /** Untimed: each result in full, one parquet file per query, for the
     * oracle compare (a query whose result is missing fails it). It runs
@@ -257,6 +292,20 @@ object Harness {
       }
       Cleanup(spark)
     }
+
+  /** One warm pass as the sum, over the queries, of each query's median
+    * call over the warm passes; a call runs from `Q.fn` to the end of the
+    * `Cleanup` after its write. A host stall that slows part of one pass
+    * then moves no query's median. */
+  def warmE2e(warm: Seq[Pass]): Double =
+    sumOfMedians(warm, s => s.construct + s.write + s.cleanup)
+
+  /** The same for the CPU seconds the program's threads spend in a call. */
+  def warmCpu(warm: Seq[Pass]): Double = sumOfMedians(warm, _.cpu)
+
+  def sumOfMedians(warm: Seq[Pass], f: Span => Double): Double =
+    warm.flatMap(_.spans).groupBy(_.call.q.name).values
+      .map(ss => median(ss.map(f))).sum
 
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
