@@ -304,7 +304,7 @@ object Bench {
       // are ~3.1 KB — physically larger than the tail window — so the
       // line still carries the slowest-N that fit (~80 with this
       // header), never all of them.
-      s"""{"metric":"total","value":${math.rint(total * 100) / 100},"unit":"sec","measure":"min-of-reps memo-marginal; target/bench.json","host_drift_note":"1.4x host drift; cmp per-query","memo_builds_sec":$memoBuildsSec,"memo_builds_wall_sec":$memoBuildsWallSec,"memo_evictions":${Memo.evictions},"memo_rebuilds":${Memo.rebuilds},"memo_rebuild_sec":${Memo.rebuildSeconds},"nqueries":${results.size},"full":"target/bench.json","failed":$failed,"sf":"$sfDir","queries":$qpart}"""
+      s"""{"metric":"total","value":${math.rint(total * 100) / 100},"unit":"sec","measure":"${measure.take(40)}","host_drift_note":"${driftNote.take(40)}","memo_builds_sec":$memoBuildsSec,"memo_builds_wall_sec":$memoBuildsWallSec,"memo_evictions":${Memo.evictions},"memo_rebuilds":${Memo.rebuilds},"memo_rebuild_sec":${Memo.rebuildSeconds},"nqueries":${results.size},"full":"target/bench.json","failed":$failed,"sf":"$sfDir","queries":$qpart}"""
     }
     val fitting = (byTime.size to 0 by -1).view.map(compact)
       .find(_.length <= budget).getOrElse(compact(0))

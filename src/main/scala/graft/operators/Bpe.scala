@@ -1,37 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Distributed BPE (byte-pair-encoding) tokenizer TRAINING — the
-  * corpus-scale companion to the BPE-ish segmentation counters
-  * (`q_bpe_count`): learn the merge table itself from the corpus, the way
-  * an LLM data pipeline trains its tokenizer before anything else runs.
+/** BPE (byte-pair-encoding) tokenizer TRAINING — the corpus-scale
+  * companion to the BPE-ish segmentation counters (`q_bpe_count`): learn
+  * the merge table itself from the corpus, the way an LLM data pipeline
+  * trains its tokenizer before anything else runs.
   *
-  * Classic greedy BPE (Sennrich et al., ACL 2016 — public), restated for
-  * Spark's execution model. Each round:
-  *
-  *   1. count adjacent symbol pairs — a NARROW per-document pass
-  *      (symbols never leave their row) into one aggregate whose
-  *      exchange is |distinct pairs| × ~24 bytes, with map-side partial
-  *      aggregation; corpus bytes never shuffle;
-  *   2. argmax over the pair counts with a deterministic total
-  *      tie-break (count desc, then lexicographic) — a driver scalar,
-  *      like the Bahmani cost probe;
-  *   3. apply the merge — another narrow per-document pass (greedy
-  *      left-to-right, the sequential BPE semantics exactly).
-  *
-  * So a K-merge training run is K narrow passes + K pair aggregates and
-  * nothing else; the evolving corpus is re-materialized every
-  * `checkpointEvery` rounds (eager localCheckpoint, same lineage-cut
-  * discipline as the Bahmani/CC loops) so plan depth stays bounded. The
-  * driver holds the merge table (K rows) and each round's argmax — never
-  * rows of the corpus.
-  *
-  * Counts words (whitespace-split, then character symbols) WITH
-  * multiplicity, the reference BPE formulation; training on the distinct
-  * word-shape table with frequency weights (the classic wordpiece
-  * speedup) composes on top by feeding `wordCounts` in directly.
+  * Classic greedy BPE (Sennrich et al., ACL 2016 — public), trained as
+  * they define it: on the weighted word-type table, not on raw text.
+  * Spark does the corpus-scale part — tokenize and aggregate to one row
+  * per distinct word ([[wordCounts]], or [[wordCountsFrom]] a
+  * pre-aggregated term table). [[train]] collects that table once and
+  * runs the exact greedy loop on the driver, so the driver footprint is
+  * one row per distinct word (Zipf keeps it orders of magnitude below
+  * the corpus). Each round counts adjacent symbol pairs weighted by word
+  * multiplicity, takes the argmax under a total tie-break (count desc,
+  * then left asc, then right asc) and applies it greedily left to right
+  * inside every word. [[segment]] replays a learned table as one narrow
+  * pass over a Dataset.
   */
 object Bpe {
 
@@ -92,128 +80,17 @@ object Bpe {
     out.toArray
   }
 
-  /** How many top pairs each training round fetches for batched
-    * selection ([[train]]): a driver-side scalar list, so the fetch is
-    * the same TakeOrdered job shape at any K; 32 comfortably covers the
-    * measured per-round acceptance (2–8 on the corpus vocabularies). */
-  private val batchK = 32
-
   /** Learn `numMerges` merges. Returns the merge table in rank order.
-    * Deterministic: the argmax tie-break is total (count desc, left asc,
-    * right asc), so the learned table is independent of partitioning.
     *
-    * Batched selection (round-15 verdict #5 — the loop was driver-argmax
-    * bound: one aggregate job per merge): each round fetches the top
-    * [[batchK]] pairs and accepts the longest SORTED PREFIX whose pairs
-    * are pairwise non-interacting, then applies the whole batch in one
-    * narrow map. The accepted sequence is PROVABLY the sequential greedy
-    * sequence: walking the sorted list, a pair is accepted only while it
-    * shares no symbol with any earlier-accepted pair's {left, right,
-    * left+right} — counts of symbol-disjoint pairs are invariant under a
-    * merge (a merge only destroys pairs touching its endpoints and only
-    * creates pairs containing its concatenation, whose counts are
-    * bounded by the destroyed ones), so each accepted pair is still the
-    * exact argmax at its rank, ties included (the first sharing pair
-    * ends the batch precisely because its count may have decayed or, if
-    * it equals the concatenated symbol, grown). Pinned differentially
-    * against [[trainSequential]] in PipelineOpsSpec; merge counts are
-    * recorded from the shared aggregate, which the invariance argument
-    * makes equal to the sequential per-round counts. */
-  def train(words: Dataset[Word], numMerges: Int,
-      checkpointEvery: Int = 8): Seq[Merge] = {
-    import words.sparkSession.implicits._
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var cur = words.localCheckpoint(true)
-    // the checkpoint whose blocks the current lineage reads — superseded
-    // snapshots are unpersisted as soon as the next one materializes, so
-    // a long training run holds exactly ONE corpus snapshot, not
-    // numMerges/checkpointEvery of them (advisor finding, round 4)
-    var liveCkpt = cur
-    var sinceCkpt = 0
-    var done = false
-    while (merges.size < numMerges && !done) {
-      // adjacent-pair counts, weighted by word multiplicity: narrow
-      // flatMap (pairs stay inside their row) + ONE DataFrame aggregate —
-      // groupBy(l, r).sum stays in Tungsten with map-side partial
-      // aggregation (the typed groupByKey/reduceGroups form it replaces
-      // dragged every pair through the tuple codec)
-      val top = cur.flatMap { w =>
-        (0 until w.syms.length - 1).iterator
-          .map(i => (w.syms(i), w.syms(i + 1), w.n))
-      }
-        .toDF("l", "r", "n")
-        .groupBy("l", "r").agg(sum("n").as("n"))
-        .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .head(batchK)
-      if (top.isEmpty) done = true
-      else {
-        // batch acceptance: the sorted prefix of pairwise-disjoint pairs
-        // (symbols AND concatenations — see scaladoc); capped at the
-        // remaining merge budget. TIE GUARDS: a merge's freshly created
-        // pairs carry counts bounded by the touched originals, so a
-        // strictly smaller candidate can never be overtaken — but an
-        // EQUAL-count new pair could win the lexicographic tie-break
-        // (its concatenated symbol sorts arbitrarily). Stop before
-        // accepting a pair whose count (a) ties any touched pair in the
-        // fetched list, or (b) ties the last fetched row while the list
-        // was cut at batchK (unseen equal-count touched pairs may exist
-        // below the cut). Stopping early is always exact — the batch is
-        // just a shorter prefix.
-        val fullList = top.length < batchK
-        val lastN = top(top.length - 1).getLong(2)
-        val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        val used = scala.collection.mutable.Set.empty[String]
-        var stop = false
-        var i = 0
-        while (!stop && i < top.length &&
-            merges.size + batch.size < numMerges) {
-          val (l, r, n) = (top(i).getString(0), top(i).getString(1),
-            top(i).getLong(2))
-          def tieTouched: Boolean = {
-            var j = i + 1
-            var hit = false
-            while (!hit && j < top.length && top(j).getLong(2) == n) {
-              hit = used(top(j).getString(0)) || used(top(j).getString(1))
-              j += 1
-            }
-            hit
-          }
-          if (used(l) || used(r)) stop = true
-          else if (batch.nonEmpty &&
-              ((!fullList && n == lastN) || tieTouched)) stop = true
-          else {
-            batch += ((l, r, n))
-            used += l; used += r; used += (l + r)
-            i += 1
-          }
-        }
-        batch.foreach { case (l, r, n) =>
-          merges += Merge(merges.size, l, r, n)
-        }
-        val pairs = batch.map { case (l, r, _) => (l, r) }.toArray
-        val next = cur.map { w =>
-          var syms = w.syms
-          var j = 0
-          while (j < pairs.length) {
-            syms = mergeWord(syms, pairs(j)._1, pairs(j)._2); j += 1
-          }
-          Word(syms, w.n)
-        }
-        // lineage cut on MERGES applied since the last cut (the plan now
-        // deepens by one map per BATCH, but per-pass recompute cost still
-        // tracks merges folded since the checkpoint)
-        sinceCkpt += batch.size
-        cur = if (sinceCkpt >= checkpointEvery) {
-          sinceCkpt = 0
-          val ck = next.localCheckpoint(true) // eager: materializes BEFORE
-          liveCkpt.unpersist(blocking = false) // ...the old blocks drop
-          liveCkpt = ck
-          ck
-        } else next
-      }
-    }
-    merges.toSeq
-  }
+    * Collects the word-type table once (the driver then holds one row
+    * per distinct word, which is why BPE trains on this table rather
+    * than on raw text) and runs the exact greedy loop
+    * ([[trainSequential]]) on it. Deterministic: the argmax tie-break is
+    * total (count desc, left asc, right asc), so the learned table is
+    * independent of partitioning and row order. Stops early when no
+    * word has two symbols left. */
+  def train(words: Dataset[Word], numMerges: Int): Seq[Merge] =
+    trainSequential(words.collect().toSeq, numMerges)
 
   /** Segment words with a learned merge table (rank order — BPE apply
     * is the same greedy loop the trainer ran). Narrow. */
@@ -228,8 +105,10 @@ object Bpe {
     }
   }
 
-  /** Sequential reference trainer (driver-side, tiny inputs) — the
-    * differential baseline for [[train]]. Same tie-break. */
+  /** The greedy BPE loop over an in-memory word-type table: each round
+    * recounts adjacent pairs weighted by word multiplicity, merges the
+    * argmax under the total tie-break (count desc, left asc, right asc)
+    * into every word with [[mergeWord]], and records its count. */
   private[graft] def trainSequential(words: Seq[Word],
       numMerges: Int): Seq[Merge] = {
     var cur = words.map(w => (w.syms.toSeq, w.n))

@@ -489,12 +489,14 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
-  /** BPE tokenizer TRAINING over the corpus ([[Bpe]]): 24 merge rounds,
-    * each one narrow pair-count pass + one |distinct pairs|-bounded
-    * aggregate + a driver argmax scalar. Spark-deterministic (total
-    * argmax tie-break) but iterative-argmax is not SQL-expressible →
-    * rows-only check; the differential gate is the sequential-reference
-    * equality in PipelineOpsSpec. */
+  /** BPE tokenizer TRAINING over the corpus ([[Bpe]]): 24 greedy merges
+    * learned on the driver from the distinct-word table, collected once
+    * (driver footprint: one row per distinct word). Deterministic
+    * (total argmax tie-break: count desc, left asc, right asc), but the
+    * iterative argmax is not SQL-expressible → no DuckDB oracle. Its
+    * checks are in PipelineOpsSpec: every merge is the exact argmax of
+    * the pair counts after the merges before it, and this query's rows
+    * equal the trainer run over `Bpe.wordCounts(documents)`. */
   private val qBpeTrain = Q.noOracle("q_bpe_train") { (s, d) =>
     import s.implicits._
     // word multiplicities from the memoized tf matrix (identical
@@ -503,9 +505,11 @@ object PipelineQueries {
     val merges = Bpe.train(Bpe.wordCountsFrom(
       TextQueries.tfMatrix(s, d).groupBy("term")
         .agg(sum("tf").as("n"))), 24)
+    // already in rank order, and a local table keeps its row order: an
+    // orderBy would add a range-partition sample job and a shuffle job
+    // to sort 24 driver-side rows
     merges.map(m => (m.rank.toLong, m.left, m.right, m.count))
       .toDF("rank", "left", "right", "count")
-      .orderBy("rank")
   }
 
   private val stopEn = Seq("the", "a", "of", "and", "to", "is", "in")

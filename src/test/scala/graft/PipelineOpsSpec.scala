@@ -438,27 +438,72 @@ class PipelineOpsSpec extends SparkSpec {
     Bpe.mergeWord(Array("x"), "a", "b").toSeq shouldBe Seq("x")
   }
 
-  test("distributed BPE training equals the sequential reference") {
+  /** Adjacent-pair counts of a segmented word table, weighted by word
+    * multiplicity — recomputed here, independently of the trainer. */
+  private def bpePairCounts(words: Seq[graft.operators.Bpe.Word]) =
+    words.flatMap(w => w.syms.toSeq.sliding(2).collect {
+      case Seq(l, r) => ((l, r), w.n)
+    }).groupMapReduce(_._1)(_._2)(_ + _)
+
+  test("property: every BPE merge is the exact argmax after the merges before it") {
     import graft.operators.Bpe
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir).limit(120)
-    val words = Bpe.wordCounts(docs)
-    val distributed = Bpe.train(words, 16)
-    val sequential = Bpe.trainSequential(words.collect().toSeq, 16)
-    distributed shouldBe sequential
-    // ranks dense, counts non-increasing is NOT guaranteed by BPE, but
-    // every merged pair must have appeared at least twice to be useful
-    distributed.map(_.rank) shouldBe (0 until distributed.length)
-    // segmenting with the learned table reaches the trainer's fixpoint:
-    // re-counting pairs after apply finds none of the merged pairs left
-    val seg = Bpe.segment(words, distributed).collect()
-    val mergedPairs = distributed.map(m => (m.left, m.right)).toSet
-    seg.foreach { w =>
-      w.syms.sliding(2).foreach { p =>
-        if (p.length == 2)
-          mergedPairs should not contain ((p(0), p(1)))
+    // words built from runs of one letter over a 2–3-letter alphabet:
+    // runs make the same symbol reachable by different merges (a+aa vs
+    // aa+a), pairs whose counts grow after a merge, and count ties
+    // (multiplicities 1–5) — the cases a shortcut over the pair-count
+    // argmax gets wrong
+    val tableGen: Gen[(Seq[Bpe.Word], Int)] = for {
+      alphabet <- Gen.oneOf("ab", "abc")
+      run = for {
+        c <- Gen.oneOf(alphabet.toSeq)
+        len <- Gen.choose(1, 4)
+      } yield c.toString * len
+      word = Gen.choose(1, 3).flatMap(Gen.listOfN(_, run)).map(_.mkString)
+      nWords <- Gen.choose(1, 6)
+      ws <- Gen.listOfN(nWords, Gen.zip(word, Gen.choose(1L, 5L)))
+      numMerges <- Gen.choose(1, 8)
+    } yield (ws.distinctBy(_._1).map { case (w, n) =>
+      Bpe.Word(w.map(_.toString).toArray, n) }, numMerges)
+    (1 to 40).foreach { k =>
+      val (table, numMerges) = tableGen(Gen.Parameters.default, Seed(k))
+        .getOrElse(sys.error(s"generator failed at seed $k"))
+      val words = table.toDS()
+      val merges = Bpe.train(words, numMerges)
+      withClue(s"[seed $k] ${table.map(w => w.syms.mkString -> w.n)} " +
+          s"numMerges=$numMerges merges=$merges: ") {
+        merges.map(_.rank) shouldBe merges.indices
+        merges.indices.foreach { r =>
+          val counts = bpePairCounts(
+            Bpe.segment(words, merges.take(r)).collect().toSeq)
+          val ((l, rt), n) = counts.minBy { case ((a, b), c) => (-c, a, b) }
+          (merges(r).left, merges(r).right, merges(r).count) shouldBe
+            ((l, rt, n))
+        }
+        // fixpoint: applying the whole table leaves none of its pairs,
+        // and a table shorter than asked for leaves no pair at all
+        val left = bpePairCounts(Bpe.segment(words, merges).collect().toSeq)
+        left.keySet.intersect(merges.map(m => (m.left, m.right)).toSet) shouldBe empty
+        if (merges.length < numMerges) left shouldBe empty
       }
     }
+  }
+
+  test("q_bpe_train rows equal the trainer over wordCounts(documents) at sf0.01") {
+    import graft.operators.Bpe
+    val sf01 = "/root/testdata/sf0.01"
+    val rows = SparkEntry.queries("q_bpe_train")(spark, sf01).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    // the query reads word counts off the memoized tf matrix
+    // (Bpe.wordCountsFrom); the reference tokenizes the documents afresh
+    val expected = Bpe.trainSequential(
+      Bpe.wordCounts(Tables.documents(spark, sf01)).collect().toSeq, 24)
+    expected should have length 24
+    rows.toSeq shouldBe expected.map(m =>
+      (m.rank.toLong, m.left, m.right, m.count))
+    Cleanup(spark)
   }
 
   test("substring-dup matches the window-shingle recomputation on raw strings") {
