@@ -36,22 +36,11 @@ object Bench {
         .getOrCreate()
     if (settle) spark.conf.set("graft.cleanup.settleScratch", "true")
     spark.sparkContext.setLogLevel("WARN")
-    // pinned-byte memo budget: SPARK_GRAFT_MEMO_BUDGET overrides; the
-    // HARNESS DEFAULT (round-15 verdict #9) is half the nominal storage
-    // pool (maxHeap × memory.fraction × storageFraction — exact in local
-    // mode), so corpus-width pins (sh8Counts, tfMatrix, candidate lists)
-    // EVICT cost-aware at big sf instead of warn-and-OOM. At the gate the
-    // working set (~0.5 GB at sf0.1) sits far under any realistic heap's
-    // budget — 0 evictions by design, bench comparability unchanged.
-    val memoBudget = sys.env.get("SPARK_GRAFT_MEMO_BUDGET").getOrElse {
-      def frac(k: String, dflt: Double) = spark.conf.getOption(k)
-        .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(dflt)
-      val pool = Runtime.getRuntime.maxMemory *
-        frac("spark.memory.fraction", 0.6) *
-        frac("spark.memory.storageFraction", 0.5)
-      (pool / 2).toLong.toString
-    }
-    spark.conf.set("graft.memo.maxPinnedBytes", memoBudget)
+    // pinned-byte memo budget (round-15 verdict #9): half the nominal
+    // storage pool with a floor, or SPARK_GRAFT_MEMO_BUDGET
+    // (Memo.harnessBudget). At the gate the working set (~0.5 GB at
+    // sf0.1) sits under it — 0 evictions by design.
+    Memo.setHarnessBudget(spark)
     // optional override of the edge-checkpoint storage dispatch (the
     // round-13 serialized-vs-deserialized A/B: 0 forces SER everywhere,
     // a huge value forces the deserialized default everywhere)

@@ -504,11 +504,7 @@ object Memo {
     // accumulate strong references to dead SparkContexts here
     warnedContexts.removeIf(_.isStopped)
     if (warnedContexts.contains(s.sparkContext)) return false
-    def fracConf(key: String, dflt: Double): Double = s.conf.getOption(key)
-      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(dflt)
-    val pool = (Runtime.getRuntime.maxMemory *
-      fracConf("spark.memory.fraction", 0.6) *
-      fracConf("spark.memory.storageFraction", 0.5)).toLong
+    val pool = storagePool(s)
     val warn = bytes > pool / 2 && warnedContexts.add(s.sparkContext)
     if (warn)
       log.warn(s"graft.Memo pins $bytes bytes of materialized frames " +
@@ -519,6 +515,35 @@ object Memo {
         s"boundaries.")
     warn
   }
+
+  /** Nominal storage pool in bytes: process max heap ×
+    * `spark.memory.fraction` × `spark.memory.storageFraction` (exact in
+    * local mode, where the driver heap IS the cluster memory). */
+  private def storagePool(s: SparkSession): Long = {
+    def frac(key: String, dflt: Double): Double = s.conf.getOption(key)
+      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(dflt)
+    (Runtime.getRuntime.maxMemory * frac("spark.memory.fraction", 0.6) *
+      frac("spark.memory.storageFraction", 0.5)).toLong
+  }
+
+  /** The harness memo budget for a nominal storage pool of `pool` bytes:
+    * half the pool, floored at the whole pool or 1 GiB, whichever is
+    * smaller. Half alone falls under the sf0.1 working set (~0.5 GB)
+    * below a ~3.4 GB heap, and the suite then evicts and rebuilds
+    * mid-run; with the floor any heap from ~1.7 GB covers it. Storage
+    * may borrow idle execution memory, so a budget of the whole nominal
+    * pool still fits. */
+  private[graft] def harnessBudget(pool: Long): Long =
+    math.max(pool / 2, math.min(pool, 1L << 30))
+
+  /** Sets `graft.memo.maxPinnedBytes` the way Bench and Verify run:
+    * `SPARK_GRAFT_MEMO_BUDGET` (bytes) when set, else [[harnessBudget]]
+    * of this session's storage pool. Cost-aware eviction then bounds
+    * corpus-width pins (sh8Counts, tfMatrix, candidate lists) at big sf
+    * instead of warn-and-OOM. */
+  private[graft] def setHarnessBudget(s: SparkSession): Unit =
+    s.conf.set("graft.memo.maxPinnedBytes", sys.env.getOrElse(
+      "SPARK_GRAFT_MEMO_BUDGET", harnessBudget(storagePool(s)).toString))
 
   /** Test hook: forget which contexts already got the unbounded-memo
     * advisory (so a spec can assert the first-crossing semantics). */

@@ -1,17 +1,62 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
   * One parquet file per table under `<sfDir>/<name>.parquet`.
+  *
+  * Schema cache: `spark.read.parquet(path)` infers the schema with a
+  * Spark job that reads the parquet footer, so every read used to cost
+  * one job. [[apply]] infers a path's schema once and then reads with
+  * `spark.read.schema(cached).parquet(path)`, which runs no job.
+  *  - Key: the path plus every explicitly set conf that changes parquet
+  *    inference (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+  *    `spark.sql.caseSensitive`). A read under `nanosAsLong` and one
+  *    without it therefore resolve under separate keys, which keeps
+  *    [[events]]'s conf scoping and re-probe working unchanged.
+  *  - Staleness: an entry holds the path's [[Memo.fingerprint]] taken
+  *    before inference; a read that sees a different fingerprint infers
+  *    again. A path the fingerprint cannot list (not on the local
+  *    filesystem, or a listing that failed) is never cached, so such a
+  *    read infers every time, as before.
+  *  - Failures: a failed inference is not cached; a missing or
+  *    unreadable path throws on every call.
+  * The cache is JVM-wide and unbounded, one small entry per (path,
+  * confs) pair; the session is not part of the key.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private final case class Resolved(fingerprint: Long, schema: StructType)
+
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[(String, String)]), Resolved]
+
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
+
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (path, inferenceConfs(spark))
+    val fp = Memo.fingerprint(path)
+    val hit = schemas.get(key)
+    if (hit != null && hit.fingerprint == fp)
+      spark.read.schema(hit.schema).parquet(path)
+    else {
+      val df = spark.read.parquet(path) // infers eagerly; throws uncached
+      if (fp > 0) schemas.put(key, Resolved(fp, df.schema))
+      df
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")
@@ -67,7 +112,7 @@ object Tables {
     // reads to BIGINT instead of failing loudly)
     var keepConf = false
     try {
-      val raw = apply(s, d, "events") // schema resolves eagerly here
+      val raw = apply(s, d, "events") // schema resolves (or is cached) here
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType) {
         // nanos-encoded or plain BIGINT? Probe with the conf restored:
         // TIMESTAMP(NANOS) fails resolution then; plain BIGINT succeeds

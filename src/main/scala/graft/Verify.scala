@@ -30,19 +30,8 @@ object Verify {
         .getOrCreate()
     if (settle) spark.conf.set("graft.cleanup.settleScratch", "true")
     spark.sparkContext.setLogLevel("WARN")
-    // pinned-byte memo budget, same default as Bench (round-15 verdict
-    // #9): SPARK_GRAFT_MEMO_BUDGET overrides, else half the nominal
-    // storage pool — corpus-width pins evict cost-aware at big sf
-    // instead of warn-and-OOM; far above the gate working set.
-    val memoBudget = sys.env.get("SPARK_GRAFT_MEMO_BUDGET").getOrElse {
-      def frac(k: String, dflt: Double) = spark.conf.getOption(k)
-        .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(dflt)
-      val pool = Runtime.getRuntime.maxMemory *
-        frac("spark.memory.fraction", 0.6) *
-        frac("spark.memory.storageFraction", 0.5)
-      (pool / 2).toLong.toString
-    }
-    spark.conf.set("graft.memo.maxPinnedBytes", memoBudget)
+    // pinned-byte memo budget, same default as Bench
+    Memo.setHarnessBudget(spark)
     // optional edge-checkpoint storage dispatch override (see Bench)
     sys.env.get("SPARK_GRAFT_SER_CKPT_BYTES").foreach(b =>
       spark.conf.set("graft.graph.serializedCheckpointBytes", b))

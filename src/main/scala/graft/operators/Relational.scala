@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -637,11 +638,21 @@ object Relational {
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) {
     (s, d) =>
       val cents = round(col("l_extendedprice") * 100).cast("long")
-      Tables.lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(round(percentile(cents, lit(0.5)) / 100.0, 6).as("p50"),
-          round(percentile(cents, lit(0.95)) / 100.0, 6).as("p95"))
+      p50p95(Tables.lineitem(s, d), "l_returnflag", cents)
         .orderBy("l_returnflag")
+  }
+
+  /** Exact p50 and p95 of `cents` per `key`, as `round(p / 100, 6)`,
+    * from ONE `percentile` aggregate over both fractions: each group
+    * buffers, serializes and sorts its values once, not once per
+    * percentile. */
+  private[graft] def p50p95(df: DataFrame, key: String,
+      cents: Column): DataFrame = {
+    val p = col("percentiles")
+    df.groupBy(key)
+      .agg(percentile(cents, array(lit(0.5), lit(0.95))).as("percentiles"))
+      .select(col(key), round(p(0) / 100.0, 6).as("p50"),
+        round(p(1) / 100.0, 6).as("p95"))
   }
 
   /** X5+: tolerance-bounded as-of join — the feature-store freshness

@@ -197,6 +197,18 @@ class MemoSpec extends SparkSpec {
     }
   }
 
+  test("harness budget is half the storage pool, floored at min(pool, 1 GiB)") {
+    val gib = 1L << 30
+    // small pools get the whole pool (a 3 GB heap: 921.6 MB)
+    Memo.harnessBudget(966367641L) shouldBe 966367641L
+    Memo.harnessBudget(0L) shouldBe 0L
+    // between 1 and 2 GiB the floor is 1 GiB
+    Memo.harnessBudget(3 * gib / 2) shouldBe gib
+    // from 2 GiB on, half the pool is above the floor
+    Memo.harnessBudget(2 * gib) shouldBe gib
+    Memo.harnessBudget(8 * gib) shouldBe 4 * gib
+  }
+
   test("unbounded memo warns once per context at the first storage-pool crossing") {
     Memo.resetWarnLatch()
     try {

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,7 +15,9 @@ import org.apache.spark.sql.types._
   * three scale factors — so a silent testdata regeneration is caught by a
   * fast red spec instead of at gate time (the round-6 failure mode: the
   * driver re-encoded events.ts from TIMESTAMP(NANOS) to TIMESTAMP_NTZ
-  * micros mid-round and 14 queries + 6 suites went red).
+  * micros mid-round and 14 queries + 6 suites went red). Also pins the
+  * loaders' schema cache: its schemas, its zero-job reads and the rules
+  * that make it infer again.
   */
 class TablesSpec extends SparkSpec {
 
@@ -117,6 +121,116 @@ class TablesSpec extends SparkSpec {
     // one generation that ever shipped as long)
     ev.schema("ts").dataType shouldBe TimestampType
     ev.select(unix_micros($"ts")).as[Long].head() shouldBe micros
+  }
+
+  // ---- Schema cache -----------------------------------------------------
+
+  /** Spark jobs `f` launches from this thread (tagged by a job group, so
+    * another thread's jobs never count), with the listener bus drained
+    * before and after. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "TablesSpec")
+    try {
+      val out = f
+      ListenerBusDrain.drain(sc)
+      (out, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("schema cache: every table's cached schema equals the inferred one") {
+    for (name <- Tables.names) {
+      Tables(spark, sfDir, name) // fills the cache
+      val (cached, jobs) = jobsOf(Tables(spark, sfDir, name).schema)
+      withClue(s"$name: ") {
+        jobs shouldBe 0
+        cached shouldBe spark.read.parquet(s"$sfDir/$name.parquet").schema
+      }
+    }
+  }
+
+  test("schema cache: a second lineitem read launches no Spark job") {
+    Tables.lineitem(spark, sfDir)
+    val (df, jobs) = jobsOf(Tables.lineitem(spark, sfDir))
+    jobs shouldBe 0
+    // the read with the cached schema still scans the data
+    df.limit(1).count() shouldBe 1L
+  }
+
+  test("schema cache: a table rewritten at the same path is re-inferred") {
+    import spark.implicits._
+    val dir = tmp("graft-rewrite")
+    val path = s"$dir/t.parquet"
+    Seq((1L, "a")).toDF("id", "s").write.mode("overwrite").parquet(path)
+    Tables(spark, dir, "t").schema.fieldNames shouldBe Array("id", "s")
+    Tables(spark, dir, "t") // cached now
+    Seq((2.5, 7, true)).toDF("x", "y", "z")
+      .write.mode("overwrite").parquet(path)
+    val (df, jobs) = jobsOf(Tables(spark, dir, "t"))
+    jobs should be >= 1
+    df.schema.map(f => f.name -> f.dataType) shouldBe
+      Seq("x" -> DoubleType, "y" -> IntegerType, "z" -> BooleanType)
+    df.as[(Double, Int, Boolean)].collect() shouldBe Array((2.5, 7, true))
+  }
+
+  test("schema cache: changing spark.sql.parquet.binaryAsString infers again") {
+    // a parquet file without Spark's schema metadata, whose un-annotated
+    // binary column the conf decides between BINARY and STRING
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val key = "spark.sql.parquet.binaryAsString"
+    val dir = tmp("graft-binary")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required binary b; }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/t.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "x"))
+    finally w.close()
+    spark.conf.unset(key)
+    try {
+      Tables(spark, dir, "t").schema("b").dataType shouldBe BinaryType
+      spark.conf.set(key, "true")
+      val (asString, inferJobs) = jobsOf(Tables(spark, dir, "t"))
+      inferJobs should be >= 1
+      asString.schema("b").dataType shouldBe StringType
+      asString.collect().map(_.getString(0)) shouldBe Array("x")
+      // both keys stay cached: neither read infers again
+      jobsOf(Tables(spark, dir, "t"))._2 shouldBe 0
+      spark.conf.unset(key)
+      val (asBinary, jobs) = jobsOf(Tables(spark, dir, "t"))
+      jobs shouldBe 0
+      asBinary.schema("b").dataType shouldBe BinaryType
+    } finally spark.conf.unset(key)
+  }
+
+  test("schema cache: a missing path throws on every call") {
+    val dir = "/nonexistent-graft-dir"
+    intercept[Exception](Tables.lineitem(spark, dir))
+    intercept[Exception](Tables.lineitem(spark, dir))
+    // and a cached table that disappears throws, not serves its schema
+    import spark.implicits._
+    val tdir = tmp("graft-vanish")
+    Seq(1L).toDF("id").write.parquet(s"$tdir/t.parquet")
+    Tables(spark, tdir, "t")
+    Tables(spark, tdir, "t")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$tdir/t.parquet"))
+    intercept[Exception](Tables(spark, tdir, "t"))
+    intercept[Exception](Tables(spark, tdir, "t"))
   }
 
   // ---- Testdata schema canary ------------------------------------------
