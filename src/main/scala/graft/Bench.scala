@@ -17,23 +17,7 @@ object Bench {
     // suites at big sf don't inherit the dead-shuffle ENOSPC cascade
     // (Cleanup scaladoc). The two cleaner confs are STATIC — builder-time.
     val settle = sys.env.get("SPARK_GRAFT_SETTLE").exists(_.trim == "1")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      // cached plans pin their partitioning unless AQE is allowed to
-      // re-coalesce them; without this the model-boundary persists
-      // (TWCNB ntc, tf) force 32-partition stages onto kilobyte tables —
-      // measured 3-6x wall and ~25x task count on the TWCNB trio
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      // normalizeTs's NTZ->TIMESTAMP cast is only identity under a UTC
-      // session zone (Tables.scala scaladoc); pin it here too so bench
-      // timings measure the same instants Verify checks, host TZ-independent
-      .config("spark.sql.session.timeZone", "UTC")
-    val spark =
-      (if (settle) Cleanup.settleBuilderConfs(builder0) else builder0)
-        .getOrCreate()
+    val spark = HarnessSession.builder(cpus, settle, shufParts).getOrCreate()
     if (settle) spark.conf.set("graft.cleanup.settleScratch", "true")
     spark.sparkContext.setLogLevel("WARN")
     // pinned-byte memo budget (round-15 verdict #9): half the nominal
@@ -41,14 +25,6 @@ object Bench {
     // (Memo.harnessBudget). At the gate the working set (~0.5 GB at
     // sf0.1) sits under it — 0 evictions by design.
     Memo.setHarnessBudget(spark)
-    // optional override of the edge-checkpoint storage dispatch (the
-    // round-13 serialized-vs-deserialized A/B: 0 forces SER everywhere,
-    // a huge value forces the deserialized default everywhere)
-    sys.env.get("SPARK_GRAFT_SER_CKPT_BYTES").foreach(b =>
-      spark.conf.set("graft.graph.serializedCheckpointBytes", b))
-    // optional eviction-policy override (lru = the round-13 A/B control)
-    sys.env.get("SPARK_GRAFT_MEMO_POLICY").foreach(p =>
-      spark.conf.set("graft.memo.evictionPolicy", p))
     // Untimed warm-up: JVM/codegen/scheduler spin-up otherwise lands on
     // whichever query happens to run first, skewing its number by ~4s.
     // Exercise each hot code path once (vectorized parquet read, hash agg
@@ -85,35 +61,15 @@ object Bench {
     // One-time shared builds (graft.Memo) run TIMED before the measured
     // passes: every per-query number below is then a clean MARGINAL cost
     // (the memo-hit path from rep 1), and the artifact itself carries the
-    // excluded one-time figure as memo_builds_sec — cross-round
-    // comparison needs no SCALE.md exegesis (round-9 verdict gap #1).
-    // Cold end-to-end suite cost ≈ value + memo_builds_sec. Subset runs
-    // (local iteration) skip the upfront build — min-of-reps drops any
-    // lazy build into the first rep anyway — and record -1 (unmeasured).
-    // Build-phase concurrency (round-16, guide §2.6): the shared builds
-    // are independent jobs whose sub-second tasks leave most of local[32]
-    // idle when run back to back — the serial build region was ~40% of
-    // cold suite cost in round 15. Overlap them from a small FIFO pool,
-    // dependency-ordered (MemoProbe.builderDeps; Memo's concurrency
-    // contract makes overlapped builds of DISTINCT keys safe — the
-    // transient sweep defers to the end-of-phase Cleanup). BOTH figures
-    // are published: memo_builds_sec stays the summed per-builder time
-    // (comparable with every prior artifact, though overlap inflates the
-    // individual addends via contention) and memo_builds_wall_sec is the
-    // cold end-to-end cost a user actually waits. SPARK_GRAFT_BUILD_THREADS=1
-    // restores the exact sequential path (per-builder Cleanup boundaries
-    // — the big-sf discipline: at sf10 a boundary-less build stretch kept
-    // every entry in-flight and the byte budget powerless; budgeted
-    // big-sf probes should run sequential).
-    // default 8 measured best on the 32-core gate (wall 51.4 s serial →
-    // 31.8 s at 4 threads → 16.6 s at 8; the critical path is
-    // edgeFrames → rankShared ≈ 13.4 s, so 8 is near the floor)
-    val buildThreads = sys.env.get("SPARK_GRAFT_BUILD_THREADS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(8)
+    // excluded one-time figure as memo_builds_sec. Cold end-to-end suite
+    // cost ≈ value + memo_builds_sec. Subset runs (local iteration) skip
+    // the upfront build — min-of-reps drops any lazy build into the first
+    // rep anyway — and record -1 (unmeasured). The builders run one after
+    // another, in MemoProbe.builders' dependency order, on this thread.
     var memoBuildsWallSec = -1.0
     val memoBuildsSec: Double =
       if (args.nonEmpty) -1.0
-      else if (buildThreads <= 1) {
+      else {
         // timed per builder, NOT around the loop: the inter-builder
         // Cleanup is hygiene, not build work — with SPARK_GRAFT_SETTLE=1
         // it runs the scratch settle poll (≥2 s/builder), which would
@@ -145,41 +101,6 @@ object Bench {
         }
         memoBuildsWallSec = math.rint((System.nanoTime() - wallT0) / 1e7) / 100
         math.rint(buildNanos / 1e7) / 100
-      } else {
-        val wallT0 = System.nanoTime()
-        val buildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(buildThreads)
-        val futs = scala.collection.mutable
-          .LinkedHashMap[String, java.util.concurrent.Future[_]]()
-        MemoProbe.builders(spark, sfDir).foreach { case (name, b) =>
-          // deps were submitted earlier (builders is dependency-ordered),
-          // so a FIFO pool can never deadlock on the waits below
-          val deps = MemoProbe.builderDeps.getOrElse(name, Nil).map(futs)
-          futs(name) = pool.submit(new Runnable {
-            def run(): Unit = {
-              // dep wait is NOT build time; a failed dep is fine — the
-              // nested memo call inside this builder rebuilds it inline
-              deps.foreach(f =>
-                try f.get() catch { case _: Exception => () })
-              spark.sparkContext.setJobDescription(s"memo build: $name")
-              val t0 = System.nanoTime()
-              try b() catch { case scala.util.control.NonFatal(e) =>
-                System.err.println(s"[bench] shared build $name failed: " +
-                  e.getMessage)
-              }
-              buildNanos.addAndGet(System.nanoTime() - t0)
-            }
-          })
-        }
-        pool.shutdown()
-        pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
-        // ONE Cleanup for the phase: it must not run concurrently with
-        // builds (Memo's concurrency contract), and it declares the memo
-        // query boundary + frees every deferred transient sweep at once
-        Cleanup(spark)
-        memoBuildsWallSec = math.rint((System.nanoTime() - wallT0) / 1e7) / 100
-        math.rint(buildNanos.get() / 1e7) / 100
       }
     // optional args = subset of query names (local iteration), run in ARG
     // order — the first query absorbs residual JIT warm-up, so subset
@@ -196,8 +117,13 @@ object Bench {
       // record -1 on failure: a swallowed exception must not masquerade
       // as a (fast) timing. NonFatal only — a fatal JVM error would make
       // every later timing a lie (see the shared-build loop above).
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case scala.util.control.NonFatal(_) => false }
+      // The noop sink materializes the whole result; count() would let
+      // Catalyst drop the final sort, the projections and unused
+      // aggregates, timing a smaller query than the one a user runs.
+      val ok = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        true
+      } catch { case scala.util.control.NonFatal(_) => false }
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       // cache/checkpoint hygiene happens OUTSIDE the timed region: each
       // rep starts with no SPARK state (caches/checkpoints cleared) but
@@ -246,7 +172,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.collect { case (k, v) if v < 0 => s"\"$k\"" }
       .mkString("[", ",", "]")
-    val measure = "min-of-reps, warm page cache, memo-marginal " +
+    val measure = "noop sink, min-of-reps, warm page cache, memo-marginal " +
       "(one-time shared builds excluded; their cost is memo_builds_sec, " +
       "-1 when not measured)"
     // cross-round comparisons must lead with the per-query median-ratio

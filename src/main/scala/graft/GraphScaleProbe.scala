@@ -63,15 +63,10 @@ object GraphScaleProbe {
     // ON here: this probe exists for big-sf runs, where they are the
     // difference between a green family and an ENOSPC cascade
     // (mechanism + measurements in the Cleanup scaladoc / SCALE.md r13)
-    val spark = Cleanup.settleBuilderConfs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts.toString)
+    val spark = HarnessSession.builder(cpus, settle = true,
+        shufParts.toString)
       .config("spark.sql.warehouse.dir", warehouse)
       .config("spark.buffer.pageSize", pageSize)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("SPARK_GRAFT_MEMO_BUDGET").foreach(b =>

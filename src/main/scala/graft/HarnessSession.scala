@@ -1,0 +1,40 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session builder of the harness mains (Bench, Verify,
+  * PlanAudit, MemoProbe, GraphScaleProbe, StreamBench) and of the test
+  * fixture, so each of them plans and runs under the same confs. Callers
+  * chain only their own extras and call `getOrCreate()`.
+  */
+object HarnessSession {
+  /** `local[cpus]` with `cpus` shuffle partitions. */
+  def builder(cpus: String, settle: Boolean): SparkSession.Builder =
+    builder(cpus, settle, cpus)
+
+  /** `local[cpus]` with `shufflePartitions` shuffle partitions (the big-sf
+    * knob: partitions scale with data, not cores), plus:
+    *  - session time zone UTC: `Tables.normalizeTs`'s NTZ→TIMESTAMP cast
+    *    is only identity under UTC, so every main measures and checks the
+    *    same instants whatever the host zone;
+    *  - UI off;
+    *  - `canChangeCachedPlanOutputPartitioning`: cached plans pin their
+    *    partitioning unless AQE may re-coalesce them; without it the
+    *    model-boundary persists (TWCNB ntc, tf) force `cpus`-partition
+    *    stages onto kilobyte tables — measured 3-6x wall and ~25x tasks
+    *    on the TWCNB trio;
+    *  - with `settle`, the static cleaner confs of big-sf mode
+    *    ([[Cleanup.settleBuilderConfs]]).
+    */
+  def builder(cpus: String, settle: Boolean,
+      shufflePartitions: String): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
+    if (settle) Cleanup.settleBuilderConfs(b) else b
+  }
+}

@@ -64,31 +64,21 @@ import org.apache.spark.sql.SparkSession
   * [[rebuilds]]/[[rebuildSeconds]] ledger the recompute tax budgeted
   * runs pay.
   *
-  * Concurrency contract: CONCURRENT BUILDS of distinct keys are
-  * supported (round-16 — the harness's upfront build phase runs
-  * independent builders from a small thread pool, guide §2.6): the
-  * build-time persistent-RDD diff is context-global, so an overlapped
-  * build window may capture a sibling's fresh blocks — entry
-  * registration tolerates that (over-pinning co-pins, safe under the
-  * remove-then-diff release), and the eager transient sweep, the one
-  * unsafe step, detects the overlap and defers to the caller's next
-  * [[Cleanup]] (see `buildThreads`). Two threads racing the SAME key
-  * still resolve first-writer-wins (the loser's value is dropped; its
-  * blocks are freed at the next Cleanup) — schedule distinct keys per
-  * wave to avoid duplicate work. [[Cleanup]]'s sweep must NOT run
-  * concurrently with builds: it would free in-flight, not-yet-registered
-  * checkpoints; the harness runs it only at wave/query boundaries.
-  * Pin-sparing ([[pinnedRddIds]]) matches on the shared SparkContext,
-  * not session identity — Cleanup from any session of a context spares
-  * every sibling session's pins, which over-spares (safe) rather than
-  * frees a sibling's live checkpoint.
+  * Concurrency contract: builds of any keys from any threads are
+  * serialised by one JVM-wide lock (Spark allows one active context per
+  * JVM), so a build's context-global persistent-RDD diff holds only its
+  * own blocks and its eager transient sweep is always safe; two threads
+  * racing one key build it once. [[Cleanup]]'s sweep must NOT run
+  * concurrently with a build: it would free in-flight, not-yet-registered
+  * checkpoints. Pin-sparing ([[pinnedRddIds]]) matches on the shared
+  * SparkContext, not session identity — Cleanup from any session of a
+  * context spares every sibling session's pins, which over-spares (safe)
+  * rather than frees a sibling's live checkpoint.
   */
 object Memo {
   private final case class Entry(value: AnyRef, rddIds: Set[Int],
       fingerprint: Long, buildNanos: Long) {
-    // recency stamp for the byte-budget eviction TIEBREAK; mutated under
-    // the single-threaded build discipline the concurrency contract
-    // already requires, so a plain volatile is enough.
+    // recency stamp for the byte-budget eviction TIEBREAK
     @volatile var lastUse: Long = 0L
   }
 
@@ -120,31 +110,13 @@ object Memo {
     touched.removeIf(_._1.sparkContext eq s.sparkContext)
 
   // monotonic use counter (NOT wall time: two uses in one millisecond
-  // must still order) — drives least-recently-used eviction.
+  // must still order) — the eviction order's recency tiebreak.
   private val useTick = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  // ---- concurrent-build window tracking (round-16) -------------------
-  // The harness's upfront build phase now runs INDEPENDENT builders from
-  // a small thread pool (guide §2.6 — the round-15 verdict's top ask:
-  // the serial build region was ~40% of cold suite cost). The only part
-  // of applyImpl that is unsafe under overlap is the eager
-  // transient-block sweep: `added` is a context-GLOBAL persistent-RDD
-  // diff, so build A's sweep window can capture build B's fresh blocks
-  // and unpersist B's not-yet-registered checkpoints (B's consumers then
-  // die with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Entry REGISTRATION is
-  // already overlap-tolerant (added ∩ keep can only over-pin siblings'
-  // registered blocks — co-pinning is safe by the remove-then-diff
-  // release discipline), so the fix is to detect an overlapped build
-  // window and SKIP the sweep there: the dead transients are freed by
-  // the caller's next [[Cleanup]] (the harness runs one per build wave
-  // and per query), which spares exactly the pinned ids. Nested builds
-  // on ONE thread (rankShared → edgeFrames) are not overlap — the
-  // per-thread set membership keeps their sweep behavior byte-identical
-  // to the sequential discipline.
-  private val buildThreads =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
-  private val stampClock = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val overlapStamp = new java.util.concurrent.atomic.AtomicLong(0L)
+  // serialises every miss path of applyImpl (see the Concurrency
+  // contract); a Java monitor is reentrant, so a nested build on the
+  // building thread (rankShared → edgeFrames) enters it again
+  private val buildLock = new Object
 
   // never-repeating sentinel for a fingerprint listing that failed
   // mid-walk: unique per failure AND disjoint from the digest value
@@ -243,42 +215,35 @@ object Memo {
     // long-lived embedding scenario the budget machinery targets
     touched.removeIf(k => k._1.sparkContext.isStopped)
     val k = (s, key)
-    val hit = m.get(k)
-    if (hit != null) {
-      if (hit.fingerprint == fp) {
+    // a live entry with a matching fingerprint, counted as a use
+    def live(): Option[T] = Option(m.get(k)).filter(_.fingerprint == fp)
+      .map { hit =>
         hit.lastUse = useTick.incrementAndGet()
         touched.add(k)
-        return hit.value.asInstanceOf[T]
+        hit.value.asInstanceOf[T]
       }
-      // data under the key's directory changed since the build: the
-      // memoized frames describe bytes that no longer exist — release
-      // the stale pins and fall through to a rebuild
-      releaseEntry(s, k, hit, blocking = false)
-    }
-    // Compute OUTSIDE the map's lock, then first-writer-wins: several
-    // builders are themselves memo consumers (kCoreShared →
-    // coOccurEdgesCk, lpaAssignment → weightedEdges), and a nested
-    // computeIfAbsent on one ConcurrentHashMap throws "Recursive
-    // update" whenever the two keys land in the same bin — a
-    // session-identity-hash-dependent flake. Harness builds run
-    // sequentially, so a racing duplicate build is theoretical; if it
-    // happens the loser's value is simply dropped (its blocks stay
-    // until release/session end — bounded node/edge-width frames).
+    live().getOrElse(buildLock.synchronized {
+      // re-check under the lock: a racing caller may have built the key
+      live().getOrElse(build(s, k, fp)(f))
+    })
+  }
+
+  /** The miss path of [[applyImpl]]; runs under `buildLock`. Builds
+    * under the lock, not inside `computeIfAbsent`: several builders are
+    * themselves memo consumers (kCoreShared → coOccurEdgesCk,
+    * lpaAssignment → weightedEdges), and a nested computeIfAbsent on one
+    * ConcurrentHashMap throws "Recursive update" whenever the two keys
+    * land in the same bin. */
+  private def build[T <: AnyRef](s: SparkSession, k: (SparkSession, String),
+      fp: Long)(f: => T): T = {
+    val stale = m.get(k)
+    // data under the key's directory changed since the build: the
+    // memoized frames describe bytes that no longer exist — release the
+    // stale pins before the rebuild
+    if (stale != null) releaseEntry(s, k, stale, blocking = false)
     val before = s.sparkContext.getPersistentRDDs.keySet
-    // overlap window open: my start stamp precedes any overlap mark a
-    // concurrent build (or this one, seeing a concurrent build already
-    // in flight) sets during the window
-    val myStart = stampClock.incrementAndGet()
-    val firstForThread = buildThreads.add(Thread.currentThread())
-    if (buildThreads.size > 1) overlapStamp.set(stampClock.incrementAndGet())
     val buildT0 = System.nanoTime()
-    // the thread stays registered through the SWEEP below (not just
-    // through f): a build starting between our diff and our unpersist
-    // pass must still mark this window overlapped
-    val v = try f catch { case e: Throwable =>
-      if (firstForThread) buildThreads.remove(Thread.currentThread())
-      throw e
-    }
+    val v = f
     val buildNanos = System.nanoTime() - buildT0
     // rebuild ledger: a build for a key this JVM has built before (same
     // context) is recompute the memo already paid once — evictions and
@@ -296,7 +261,7 @@ object Memo {
       // entry/touched maps use above.
       val ctxId = contextLedgerId(s)
       everBuilt.removeIf(_._1 != ctxId)
-      if (!everBuilt.add((ctxId, key))) {
+      if (!everBuilt.add((ctxId, k._2))) {
         rebuildTick.incrementAndGet()
         rebuildNanosTotal.addAndGet(buildNanos)
       }
@@ -316,34 +281,22 @@ object Memo {
     val keep: Set[Int] =
       if (vFrames.isEmpty) added
       else vFrames.flatMap(reachableRddIds).toSet ++ pinnedRddIds(s)
-    // overlap check happens with this thread still registered, so any
-    // build racing this window has marked (or will see and mark) the
-    // overlap stamp; an overlapped diff may hold a SIBLING's in-flight
-    // blocks, so the eager transient sweep is skipped — the caller's
-    // next Cleanup frees the same blocks (it spares only pinned ids).
-    if (buildThreads.size > 1)
-      overlapStamp.set(stampClock.incrementAndGet())
-    val overlapped = overlapStamp.get() >= myStart
-    if (!overlapped) {
-      val persisted = s.sparkContext.getPersistentRDDs
-      added.diff(keep).foreach(id =>
-        persisted.get(id).foreach(_.unpersist(blocking = false)))
-    }
-    if (firstForThread) buildThreads.remove(Thread.currentThread())
+    val persisted = s.sparkContext.getPersistentRDDs
+    added.diff(keep).foreach(id =>
+      persisted.get(id).foreach(_.unpersist(blocking = false)))
     val entry = Entry(v, added.intersect(keep), fp, buildNanos)
     entry.lastUse = useTick.incrementAndGet()
-    val prev = m.putIfAbsent(k, entry)
-    val out = if (prev != null) prev.value.asInstanceOf[T] else v
+    m.put(k, entry)
     touched.add(k)
     enforceBudget(s, k)
-    out
+    v
   }
 
   /** Optional pinned-byte budget: `graft.memo.maxPinnedBytes` (unset =
     * unlimited, the harness default — its whole working set is ~8
     * bounded builds). When the context's pinned storage exceeds the
-    * budget, evict least-recently-USED entries of this context — never
-    * the entry just touched — unpersisting their blocks; a later call
+    * budget, evict entries of this context in cost-aware order (below) —
+    * never the entry just touched — unpersisting their blocks; a later call
     * for an evicted key simply rebuilds (the same path a fingerprint
     * change takes). This bounds the memo's executor-storage footprint
     * for an embedding application that streams many datasets through
@@ -414,12 +367,7 @@ object Memo {
         .map(id => sizeOf.getOrElse(id, 0L)).sum
       def score(e: Entry): Double =
         freeable(e) / math.max(e.buildNanos / 1e9, 1e-3)
-      // graft.memo.evictionPolicy=lru restores the pre-round-13 pure
-      // recency order — kept as the A/B control for the policy
-      // measurement (SCALE.md round-13), not a recommended setting
-      if (s.conf.getOption("graft.memo.evictionPolicy")
-          .contains("lru")) acc.sortBy(_._2.lastUse)
-      else acc.map { case (k, e) => (k, e, score(e)) }
+      acc.map { case (k, e) => (k, e, score(e)) }
         .sortBy { case (_, e, sc) => (-sc, e.lastUse) }
         .map { case (k, e, _) => (k, e) }
     }
@@ -511,7 +459,7 @@ object Memo {
         s"with no graft.memo.maxPinnedBytes budget set — past half the " +
         s"nominal storage pool ($pool bytes). Long-lived sessions that " +
         s"stream many datasets should set graft.memo.maxPinnedBytes " +
-        s"(LRU eviction) or call Memo.release(session) at dataset " +
+        s"(cost-aware eviction) or call Memo.release(session) at dataset " +
         s"boundaries.")
     warn
   }

@@ -14,9 +14,10 @@ import org.apache.spark.sql.SparkSession
   * line. Run: `sbt "runMain graft.MemoProbe [sfDir]"`.
   */
 object MemoProbe {
-  /** The shared builders in dependency order — the probe times each one
-    * here; [[Bench]] runs the same list once, timed in total, before its
-    * first measured pass so the emitted `memo_builds_sec` is exactly the
+  /** The shared builders in dependency order (a builder's nested memo
+    * calls come earlier in the list) — the probe times each one here;
+    * [[Bench]] runs the same list once, sequentially, before its first
+    * measured pass so the emitted `memo_builds_sec` is exactly the
     * one-time cost its per-query marginals exclude. */
   def builders(s: SparkSession, d: String): Seq[(String, () => Any)] = Seq(
     "edgeFrames" -> (() => operators.Graph.edgeFrames(s, d)),
@@ -40,33 +41,10 @@ object MemoProbe {
     "matB" -> (() => operators.CooViews.matB(s, d)),
     "matS" -> (() => operators.CooViews.matS(s, d)))
 
-  /** Memo-level dependencies BETWEEN the [[builders]] — which earlier
-    * builder each one consumes through a nested memo call. Drives the
-    * concurrent build phase in [[Bench]] (guide §2.6): a builder may
-    * start once its dependencies completed; independent roots overlap.
-    * [[builders]] lists dependencies before dependents, so submitting
-    * in list order into a FIFO pool can never deadlock (a dependent
-    * only waits on tasks already started or finished). */
-  val builderDeps: Map[String, Seq[String]] = Map(
-    "rankShared" -> Seq("edgeFrames"),
-    "pprShared" -> Seq("edgeFrames"),
-    "kCoreShared" -> Seq("coOccurEdgesCk"),
-    "lpaAssignment" -> Seq("weightedEdges"),
-    "bfsShared" -> Seq("weightedEdges"),
-    "twcnbModel" -> Seq("tfMatrix"),
-    "qualitySig" -> Seq("tfMatrix"))
-
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = HarnessSession.builder(cpus, settle = false).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // builders are eager (localCheckpoint(true)), so wall time around the
     // call IS the materialization cost; warm-up once on sf0.001 to keep

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries so
   * the scale properties (filter/projection pushdown, broadcast joins,
   * whole-stage codegen spans, shuffle counts) can be inspected and tracked.
@@ -12,14 +10,10 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args0: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // let AQE re-coalesce cached-plan output (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // same-instants guarantee as Verify/Bench (Tables.normalizeTs scaladoc)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // plans at the bench's shape: local[$SPARK_GRAFT_CPUS] (default 32)
+    // with as many shuffle partitions
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = HarnessSession.builder(cpus, settle = false).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (d, args) = args0.toSeq match {
       case Seq("-d", dir, rest @ _*) => (dir, rest.toArray)

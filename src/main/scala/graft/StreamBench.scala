@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -57,12 +56,7 @@ object StreamBench {
     val split = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLIT", "0.7").toDouble
     val pipelines = sys.env.getOrElse("SPARK_GRAFT_STREAM_PIPELINES",
       "monitor,sessionize,ingest").split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = HarnessSession.builder(cpus, settle = false).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

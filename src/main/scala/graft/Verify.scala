@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -17,24 +16,11 @@ object Verify {
     // boundaries so a big-sf oracle sweep doesn't ENOSPC-cascade on dead
     // shuffle files (Cleanup scaladoc; the cleaner confs are static)
     val settle = sys.env.get("SPARK_GRAFT_SETTLE").exists(_.trim == "1")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE re-coalesce cached-plan output (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (settle) Cleanup.settleBuilderConfs(builder0) else builder0)
-        .getOrCreate()
+    val spark = HarnessSession.builder(cpus, settle, shufParts).getOrCreate()
     if (settle) spark.conf.set("graft.cleanup.settleScratch", "true")
     spark.sparkContext.setLogLevel("WARN")
     // pinned-byte memo budget, same default as Bench
     Memo.setHarnessBudget(spark)
-    // optional edge-checkpoint storage dispatch override (see Bench)
-    sys.env.get("SPARK_GRAFT_SER_CKPT_BYTES").foreach(b =>
-      spark.conf.set("graft.graph.serializedCheckpointBytes", b))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

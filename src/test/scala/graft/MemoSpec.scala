@@ -37,39 +37,67 @@ class MemoSpec extends SparkSpec {
   }
 
   test("concurrent builds of distinct keys: every entry survives the overlapped windows") {
-    // round-16: the bench's build phase overlaps independent builders —
-    // the context-global RDD diff must not let one build's transient
-    // sweep free a sibling's in-flight checkpoints (the sweep defers to
-    // Cleanup when windows overlap; survival after Cleanup is the
-    // observable property)
+    // Memo's build lock serialises builds of any keys from any threads,
+    // so each build's context-global RDD diff holds only its own blocks
+    // and its transient sweep runs at once, not at the next Cleanup
     Memo.clear(); Cleanup(spark)
-    val barrier = new java.util.concurrent.CyclicBarrier(4)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+    import java.util.concurrent.TimeUnit.SECONDS
+    import org.apache.spark.sql.DataFrame
+    def rddIds(df: org.apache.spark.sql.Dataset[_]): Set[Int] =
+      df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+    val barrier = new CyclicBarrier(4)
+    val pool = Executors.newCachedThreadPool()
+    val transients = new java.util.concurrent.ConcurrentLinkedQueue[Int]
     val futs = (0 until 4).map { i =>
-      pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-        def call(): org.apache.spark.sql.DataFrame =
+      pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = {
+          // all four callers reach Memo at once
+          barrier.await(30, SECONDS)
           Memo(spark, s"memospec.conc$i") {
-            // hold all four build windows open simultaneously
-            barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-            // a transient the sequential path would sweep eagerly
+            // a transient the build's eager sweep must free
             val t = spark.range(1000).localCheckpoint(true)
+            rddIds(t).foreach(transients.add(_))
             t.select(col("id"), (col("id") + i).as("v"))
               .localCheckpoint(true)
           }
+        }
       })
     }
-    val frames = futs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
-    pool.shutdown()
-    // the wave-boundary Cleanup frees deferred transients, spares pins
+    val frames = futs.map(_.get(120, SECONDS))
+    // before any Cleanup: every build's transient is already gone
+    transients.size shouldBe 4
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    transients.forEach(id => persisted should not contain id)
     Cleanup(spark)
     frames.zipWithIndex.foreach { case (f, i) =>
       f.count() shouldBe 1000
       f.agg(min(col("v"))).head().getLong(0) shouldBe i.toLong
       // later consumers get the registered entry, not a rebuild
-      (Memo[org.apache.spark.sql.DataFrame](spark, s"memospec.conc$i") {
+      (Memo[DataFrame](spark, s"memospec.conc$i") {
         fail("unexpected rebuild after concurrent build")
       } eq f) shouldBe true
     }
+    // two threads racing ONE key run its body exactly once
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val race = new CyclicBarrier(2)
+    val racers = (0 until 2).map { _ =>
+      pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = {
+          race.await(30, SECONDS)
+          Memo(spark, "memospec.race") {
+            builds.incrementAndGet()
+            Thread.sleep(200) // hold the build open while the other waits
+            spark.range(10).toDF().localCheckpoint(true)
+          }
+        }
+      })
+    }.map(_.get(120, SECONDS))
+    pool.shutdown()
+    builds.get shouldBe 1
+    (racers(0) eq racers(1)) shouldBe true
     Memo.release(spark); Cleanup(spark)
   }
 

@@ -48,15 +48,8 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = HarnessSession.builder(cpus = "4", settle = false)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE re-coalesce cached-plan output (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
