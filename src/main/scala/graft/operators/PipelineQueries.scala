@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.TextFns
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -392,29 +393,34 @@ object PipelineQueries {
        |FROM exmap x LEFT JOIN m ON x.keep0 = m.node
        |ORDER BY x.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    // exact pass: digest the text once into a persisted (doc_id, h)
-    // projection — tiny next to the corpus — feeding both the keeper
-    // aggregate and the per-doc keeper map
-    val hashed = docs.select(col("doc_id"), md5(col("text")).as("h"))
-      .persist()
+    // exact pass: digest the text into a narrow (doc_id, h) projection
+    // feeding the keeper aggregate and, on the k > 0 paths, the per-doc
+    // keeper map (a second narrow scan inside that map's job). A null
+    // text never joins back to its group (as in the SQL form), so its
+    // document gets no verdict row; dropping it here keeps the k = 0
+    // identity below exact.
+    val hashed = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), md5(col("text")).as("h"))
     // keeper aggregate with group sizes, materialized once (consumed by
-    // the k probe, the survivor projection, and the exmap join)
+    // the survivor projection and the exmap join). The removed-doc count
+    // k and |exg| are observed on the same eager checkpoint — it is the
+    // action, so they cost no job; k dispatches the stages below
+    val exgObs = Observation()
     val exg = hashed.groupBy("h")
       .agg(min("doc_id").as("keep0"), count(lit(1)).as("nc"))
+      .observe(exgObs, coalesce(sum(col("nc") - 1), lit(0L)).as("k"),
+        count(lit(1)).as("n"))
       .localCheckpoint(true)
-    // removed-doc count k and |exg|, one tiny job over the checkpointed
-    // aggregate — k dispatches the survivor candidate stage below
-    val kRow = exg.agg(coalesce(sum(col("nc") - 1), lit(0L)),
-      count(lit(1))).head()
-    val k = kRow.getLong(0)
-    val nKeep = kRow.getLong(1)
+    val kn = exgObs.get
+    val k = kn("k").asInstanceOf[Long]
+    val nKeep = kn("n").asInstanceOf[Long]
     // survivor ids ARE the keeper aggregate's output — keep0 per hash
     // group ≡ the doc_ids with doc_id = keep0 — so read them off exg
     // directly instead of re-filtering the exmap join (round-15: one
     // digest-keyed join pass less; resolve and the verdict stages still
     // never re-join the text corpus)
     val survivorIds = exg.select(col("keep0").as("doc_id"))
-    val exmap0 = hashed
+    def exmap0 = hashed
       .join(Graph.stateHint(exg.select("h", "keep0"), nKeep, 56L), "h")
       .select("doc_id", "keep0")
     val h = deltaHeadroom(s)
@@ -424,23 +430,29 @@ object PipelineQueries {
     // frame as-is; 0 < k ≤ headroom subtracts the removed docs'
     // contributions; past the headroom (a genuinely dup-heavy corpus,
     // where survivors are much smaller than the corpus) the direct
-    // survivor pass is the right plan and remains the fallback
+    // survivor pass is the right plan and remains the fallback. k = 0
+    // also needs no exmap: every keep0 is its own doc_id.
     val (exmap, survPairs) =
-      if (k == 0) (exmap0, candidateStageShared(s, d)._1)
+      if (k == 0) (None, candidateStageShared(s, d)._1)
       else if (k <= h) {
         val em = exmap0.localCheckpoint(true) // reused: removed + verdict
         val removed = em.filter(col("doc_id") =!= col("keep0"))
           .select("doc_id")
-        (em, survivorJaccardPairs(candidateStageShared(s, d), removed))
-      } else (exmap0, jaccardPairs(docs.join(survivorIds, "doc_id")))
+        (Some(em), survivorJaccardPairs(candidateStageShared(s, d), removed))
+      } else (Some(exmap0), jaccardPairs(docs.join(survivorIds, "doc_id")))
     val res = Dedup.resolve(survivorIds,
       survPairs.filter(col("jaccard") >= 0.3)
         .select(col("a_id").as("a"), col("b_id").as("b")))
-    // verdict attach: res is survivor-width (= |exg| rows), exmap side is
-    // a stat-less checkpoint under the delta path — size the dispatch
-    exmap.join(Graph.stateHint(
+    // verdict attach: res is survivor-width (= |exg| rows), the exmap
+    // side is a stat-less checkpoint under the delta path — size the
+    // dispatch. With exmap the identity (k = 0), res IS the verdict.
+    val verdict = exmap.fold(res.select("doc_id", "keep_id")) { em =>
+      em.join(Graph.stateHint(
         res.select(col("doc_id").as("keep0"), col("keep_id")), nKeep, 24L),
         "keep0")
+        .select("doc_id", "keep_id")
+    }
+    verdict
       .select(col("doc_id"), col("keep_id"),
         (col("doc_id") === col("keep_id")).cast("long").as("is_canonical"))
       .orderBy("doc_id")

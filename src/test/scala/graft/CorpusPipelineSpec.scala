@@ -82,4 +82,70 @@ class CorpusPipelineSpec extends SparkSpec {
       Memo.release(spark); Cleanup(spark)
     }
   }
+
+  private def noop(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("memo-hit q_dedup_pipeline runs at most 9 jobs and, with no exact dups, equals q_dedup_resolve") {
+    val docs = Tables.documents(spark, sfDir)
+    withClue("the fixture corpus must carry no exact dups: ") {
+      docs.select(md5(col("text"))).distinct().count() shouldBe docs.count()
+    }
+    val q = byName("q_dedup_pipeline")
+    noop(q.fn(spark, sfDir)) // cold call: builds the shared candidate stage
+    Cleanup(spark)
+    val (_, jobs) = jobsOf(noop(q.fn(spark, sfDir)))
+    Cleanup(spark)
+    info(s"memo-hit q_dedup_pipeline: $jobs jobs")
+    jobs should be <= 9
+    // k = 0: every document is its own exact keeper, so the verdict is
+    // the near-dup resolution of the whole corpus
+    val pipeline = q.fn(spark, sfDir).collect()
+    Cleanup(spark)
+    pipeline should contain theSameElementsInOrderAs
+      run("q_dedup_resolve").collect()
+    Cleanup(spark)
+  }
+
+  test("q_dedup_pipeline with exact dups: delta path == direct survivor pass, each dup keeps its keeper's id") {
+    // sf0.001 plus four exact copies (three of one near-dup member, one of
+    // a canonical doc) under fresh, larger ids, so k = 4 takes the delta
+    // path at the default headroom and the direct pass at headroom 0
+    val docs = Tables.documents(spark, sfDir)
+    val res = run("q_dedup_resolve")
+    val member = res.filter(col("is_canonical") === 0)
+      .agg(min("doc_id")).head().getLong(0)
+    val canon = res.agg(min("doc_id")).head().getLong(0)
+    Cleanup(spark)
+    val top = docs.agg(max("doc_id")).head().getLong(0)
+    val copies = Seq(top + 1 -> member, top + 2 -> member,
+      top + 3 -> member, top + 4 -> canon)
+    import spark.implicits._
+    val dupRows = docs
+      .join(copies.toDF("copy_id", "doc_id"), "doc_id")
+      .withColumn("doc_id", col("copy_id"))
+      .select(docs.columns.map(col).toSeq: _*)
+    val dir = java.nio.file.Files.createTempDirectory("dedup-dups")
+    try {
+      docs.unionByName(dupRows)
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      val q = byName("q_dedup_pipeline")
+      val delta = q.fn(spark, dir.toString).collect()
+      Cleanup(spark)
+      spark.conf.set("graft.dedup.deltaHeadroom", "0")
+      val direct = q.fn(spark, dir.toString).collect()
+      Cleanup(spark)
+      delta.length shouldBe docs.count() + copies.size
+      delta should contain theSameElementsInOrderAs direct
+      val keep = delta.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      keep(member) should not be member // the keeper is itself a near dup
+      copies.foreach { case (dup, src) =>
+        withClue(s"copy $dup of $src: ") { keep(dup) shouldBe keep(src) }
+      }
+    } finally {
+      spark.conf.unset("graft.dedup.deltaHeadroom")
+      Memo.release(spark); Cleanup(spark)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

@@ -65,6 +65,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("union-find path: duplicate edges both ways and self-loop-only nodes") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(77)
+    val base = Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+    // every edge again reversed, a third of them a third time, and nodes
+    // 100..104 that only ever appear in (repeated) self-loops
+    val loops = (100L until 105L).map(i => (i, i))
+    val edges = base ++ base.map(_.swap) ++ base.take(20) ++ loops ++ loops
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val want = parent.keys.map(v => v -> find(v)).toMap
+    val (cc, nodeBound) = Dedup.connectedComponentsBound(edges.toDF("a", "b"))
+    val got = cc.collect()
+      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("comp")).toMap
+    got shouldBe want
+    (100L until 105L).foreach(i => got(i) shouldBe i)
+    nodeBound should be >= want.size.toLong
+  }
+
   test("star contraction equals label propagation on random graphs (differential)") {
     import spark.implicits._
     // two independently-derived fixpoints: the production alternating

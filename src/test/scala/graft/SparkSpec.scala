@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -20,6 +22,31 @@ trait SparkSpec extends AnyFunSuite with Matchers {
   def cooOf(cells: Seq[(Long, Long, Double)]): DataFrame = {
     import spark.implicits._
     cells.toDF("i", "j", "v")
+  }
+
+  /** Spark jobs `f` launches from this thread (tagged by a job group, so
+    * another thread's jobs never count), with the listener bus drained
+    * before and after. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"spark-spec-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, getClass.getSimpleName)
+    try {
+      val out = f
+      ListenerBusDrain.drain(sc)
+      (out, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   /** Collect a COO frame to a dense map for exact comparison. */

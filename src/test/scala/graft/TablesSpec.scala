@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -124,31 +122,6 @@ class TablesSpec extends SparkSpec {
   }
 
   // ---- Schema cache -----------------------------------------------------
-
-  /** Spark jobs `f` launches from this thread (tagged by a job group, so
-    * another thread's jobs never count), with the listener bus drained
-    * before and after. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec")
-    try {
-      val out = f
-      ListenerBusDrain.drain(sc)
-      (out, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("schema cache: every table's cached schema equals the inferred one") {
     for (name <- Tables.names) {
