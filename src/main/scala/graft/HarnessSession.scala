@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the harness mains (Bench, Verify,
-  * PlanAudit, MemoProbe, GraphScaleProbe, StreamBench) and of the test
+  * PlanAudit, GraphScaleProbe, StreamBench) and of the test
   * fixture, so each of them plans and runs under the same confs. Callers
   * chain only their own extras and call `getOrCreate()`.
   */
@@ -18,6 +18,9 @@ object HarnessSession {
     *    is only identity under UTC, so every main measures and checks the
     *    same instants whatever the host zone;
     *  - UI off;
+    *  - a generated-code cache of 1024 classes, not Spark's 100: a cold
+    *    pass compiles more than 100, and at the default every warm pass
+    *    compiled 51–107 of them again (perfbench/README.md "Steadiness");
     *  - `canChangeCachedPlanOutputPartitioning`: cached plans pin their
     *    partitioning unless AQE may re-coalesce them; without it the
     *    model-boundary persists (TWCNB ntc, tf) force `cpus`-partition
@@ -33,6 +36,7 @@ object HarnessSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
     if (settle) Cleanup.settleBuilderConfs(b) else b

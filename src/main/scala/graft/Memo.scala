@@ -549,9 +549,7 @@ object Memo {
   }
 
   /** Total storage (memory + disk) currently held by this context's
-    * pinned blocks — the memo's working-set figure, logged by MemoProbe
-    * so the one-time builds' footprint is a published number alongside
-    * their build seconds. */
+    * pinned blocks — the memo's working-set figure. */
   def pinnedBytes(s: SparkSession): Long = {
     val pinned = pinnedRddIds(s)
     s.sparkContext.getRDDStorageInfo

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.VectorMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -22,9 +24,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_ridge_beta")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2, in module
+    * declaration order: Bench and Verify run them in this order, which
+    * decides the consumer that pays each shared memo build. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(q => q.name -> q.fn).toMap
+    modules.map(q => q.name -> q.fn).to(VectorMap)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -111,10 +111,6 @@ object MlQueries {
     s.createDataFrame(rows).toDF("j", "beta", "se", "t").orderBy("j")
   }
 
-  /** Probe hook: the memoized sums build, for [[graft.MemoProbe]]. */
-  private[graft] def ridgeSumsForProbe(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.Row = ridgeSums(s, d)
-
   /** T7: nearest-center assignment, brute-force oracle form (reference
     * Elkan-pruned assignment, BahmaniSketch.scala:112-150). Points are
     * grouped on the discrete feature grid first, so the cross join is

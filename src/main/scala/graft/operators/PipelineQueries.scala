@@ -728,10 +728,6 @@ object PipelineQueries {
           lit(0.0)).as("dup_r"))
   }
 
-  /** Probe hook: the memoized signal build, for [[graft.MemoProbe]]. */
-  private[graft] def qualitySigForProbe(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = qualitySig(s, d)
-
   /** Column form of [[qualityKeepSql]]. */
   private def qualityKeep: org.apache.spark.sql.Column =
     col("n_tokens") >= 25 && col("stop_r") >= 0.03 &&
@@ -2316,10 +2312,6 @@ object PipelineQueries {
         iterations = 4, seed = 42L)
       graft.ml.Bahmani.lloydOnSketch(sk, w, nCells)
     }
-
-  /** Probe hook: the memoized quantizer build, for [[graft.MemoProbe]]. */
-  private[graft] def ivfCentersForProbe(s: org.apache.spark.sql.SparkSession,
-      d: String): AnyRef = ivfCenters(s, d, 16).asInstanceOf[AnyRef]
 
   private val qAnnIvf = Q.noOracle("q_ann_ivf") { (s, d) =>
     import s.implicits._

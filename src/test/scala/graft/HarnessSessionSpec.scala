@@ -14,4 +14,8 @@ class HarnessSessionSpec extends SparkSpec {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") shouldBe
       "true"
   }
+
+  test("the harness session caches 1024 generated classes, not Spark's 100") {
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe "1024"
+  }
 }
