@@ -11,7 +11,8 @@ import scala.util.control.NonFatal
   * unused aggregates, timing a smaller query than the one a user runs.
   *
   * Run: `sbt "runMain graft.Bench [query ...]"`. Names given as arguments
-  * select a subset, run in argument order through the same path. The
+  * select a subset, run in argument order through the same path; an
+  * unknown name exits with status 2 before the session starts. The
   * lossless record goes to `target/bench.json`; the final stdout line is
   * [[compactLine]].
   */
@@ -86,8 +87,29 @@ object Bench {
       .getOrElse(line(0))
   }
 
+  /** The queries a run times: every query of `all` in its order when
+    * `args` is empty, else the named ones in argument order, each once.
+    * Left lists every name `all` does not hold. */
+  def selection[F](all: collection.Map[String, F],
+      args: Seq[String]): Either[Seq[String], Seq[(String, F)]] = {
+    val names = args.distinct
+    val unknown = names.filterNot(all.contains)
+    if (unknown.nonEmpty) Left(unknown)
+    else if (names.isEmpty) Right(all.toSeq)
+    else Right(names.map(n => n -> all(n)))
+  }
+
   def main(args: Array[String]): Unit = {
     import org.apache.spark.sql.functions._
+    // resolve the names before the session and the warm-up: a typo costs
+    // no startup and names every unknown query at once
+    val selected = selection(SparkEntry.queries, args.toSeq) match {
+      case Right(sel) => sel
+      case Left(unknown) =>
+        System.err.println(
+          s"[bench] unknown queries: ${unknown.mkString(", ")}")
+        sys.exit(2)
+    }
     val start = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the contract environment: local[32], 32 shuffle
@@ -139,12 +161,6 @@ object Bench {
       Tables.documents(spark, sfDir).limit(500), k = 8).count()
     Cleanup(spark)
     val setupSec = (System.nanoTime() - start) / 1e9
-    // optional args = subset of query names (local iteration), run in ARG
-    // order; deduplicated, so a repeated name is not timed twice a pass
-    val all = SparkEntry.queries
-    val selected =
-      if (args.nonEmpty) args.toSeq.distinct.map(n => n -> all(n))
-      else all.toSeq
     var lastResult = start
     // one pass, -1 for a failed call: a swallowed exception must not
     // masquerade as a (fast) timing. NonFatal only — after an

@@ -43,11 +43,12 @@ import org.apache.spark.sql.SparkSession
   * re-stamps at least one file, not a byte-identical rewrite with
   * preserved names/sizes/mtimes, which no cheap listing can see.
   *
-  * Footprint contract: `graft.memo.maxPinnedBytes` (unset = unlimited,
-  * the harness default) bounds the pinned working set — exceeding it
-  * evicts entries COST-AWARE (their blocks unpersisted; a later call
-  * rebuilds), so an embedding application streaming many datasets
-  * through one session cannot grow executor storage without bound.
+  * Footprint contract: `graft.memo.maxPinnedBytes` (unset = unlimited;
+  * Bench and Verify always set it, through [[setHarnessBudget]]) bounds
+  * the pinned working set — exceeding it evicts entries COST-AWARE
+  * (their blocks unpersisted; a later call rebuilds), so an embedding
+  * application streaming many datasets through one session cannot grow
+  * executor storage without bound.
   * Victim order is greedy bytes-per-rebuild-second, not LRU: each
   * candidate scores (freeable bytes it alone pins) / (its measured
   * build seconds), highest first, recency as tiebreak — the round-12
@@ -115,7 +116,7 @@ object Memo {
 
   // serialises every miss path of applyImpl (see the Concurrency
   // contract); a Java monitor is reentrant, so a nested build on the
-  // building thread (rankShared → edgeFrames) enters it again
+  // building thread (lpaAssignment → weightedEdges) enters it again
   private val buildLock = new Object
 
   // never-repeating sentinel for a fingerprint listing that failed
@@ -183,23 +184,6 @@ object Memo {
     * directory's [[fingerprint]] changes. */
   def apply[T <: AnyRef](s: SparkSession, key: String, dir: String)(
       f: => T): T = applyImpl(s, key, fingerprint(dir))(f)
-
-  /** Non-building lookup: the live entry for (s, key) if present and its
-    * data fingerprint still matches — never builds, never invalidates.
-    * Lets a query prefer an already-built SUPERSET entry over running
-    * its own cheaper build (the bounded-rank snap-only dispatch,
-    * round-16): a hit counts as a use (recency + in-flight protection,
-    * like [[apply]]); a stale or absent entry is simply None. */
-  def peek[T <: AnyRef](s: SparkSession, key: String,
-      dir: String): Option[T] = {
-    val k = (s, key)
-    val hit = m.get(k)
-    if (hit != null && hit.fingerprint == fingerprint(dir)) {
-      hit.lastUse = useTick.incrementAndGet()
-      touched.add(k)
-      Some(hit.value.asInstanceOf[T])
-    } else None
-  }
 
   private def applyImpl[T <: AnyRef](s: SparkSession, key: String,
       fp: Long)(f: => T): T = {
@@ -293,8 +277,8 @@ object Memo {
   }
 
   /** Optional pinned-byte budget: `graft.memo.maxPinnedBytes` (unset =
-    * unlimited, the harness default — its whole working set is ~8
-    * bounded builds). When the context's pinned storage exceeds the
+    * unlimited; Bench and Verify always set it, through
+    * [[setHarnessBudget]]). When the context's pinned storage exceeds the
     * budget, evict entries of this context in cost-aware order (below) —
     * never the entry just touched — unpersisting their blocks; a later call
     * for an evicted key simply rebuilds (the same path a fingerprint
@@ -434,17 +418,16 @@ object Memo {
   private val warnedContexts = java.util.Collections.newSetFromMap(
     new ConcurrentHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
 
-  /** With `graft.memo.maxPinnedBytes` unset the memo is unbounded — the
-    * right default for the harness, whose whole working set is ~8
-    * bounded builds, but a footgun for an embedding application
-    * streaming many datasets through one session (round-11 ask #5). The
+  /** With `graft.memo.maxPinnedBytes` unset the memo is unbounded — a
+    * footgun for an embedding application streaming many datasets
+    * through one session (round-11 ask #5); Bench and Verify always set
+    * the budget ([[setHarnessBudget]]), so this guards library use. The
     * first time this context's pinned bytes cross HALF the nominal
     * storage pool (process max heap × `spark.memory.fraction` ×
     * `spark.memory.storageFraction` — exact in local mode where the
     * driver heap IS the cluster memory, an order-of-magnitude proxy on
     * a real cluster whose executors size differently), one WARN names
-    * the conf to set. Advisory only: nothing is evicted and harness
-    * behavior is unchanged. Returns whether THIS call warned (the
+    * the conf to set. Advisory only: nothing is evicted. Returns whether THIS call warned (the
     * first-crossing latch MemoSpec pins). */
   private[graft] def warnIfUnbounded(s: SparkSession, bytes: Long): Boolean = {
     // latch hygiene: a long-lived JVM that stops and recreates contexts

@@ -73,15 +73,6 @@ object Graph {
         (lit(0.15) / n + lit(0.85) * (col("sc") / 1000000000000.0))
           .as("pr"))
 
-  /** The rank loop, shared by the declared query and the plan-growth
-    * test. Each iteration ends in an EAGER localCheckpoint (the CC-loop
-    * discipline, Dedup.scala) so iteration i's plan starts from a
-    * LogicalRDD leaf: lineage depth, plan size, and planner time stay
-    * O(1) in `nIters`, making the iteration count a safe knob instead
-    * of a plan-explosion fuse. Dangling mass: the undirected edge
-    * construction gives every node outdeg ≥ 1 by construction, so no
-    * sink-redistribution term exists to handle.
-    */
   /** Run `f` with AQE disabled, restoring the previous setting after.
     * Why: localCheckpoint records the materialized plan's
     * outputPartitioning/outputOrdering into its LogicalRDD leaf — but
@@ -297,92 +288,65 @@ object Graph {
     pagerankRanksOn(e, deg, n, nIters)
   }
 
-  /** ONE rank run serving BOTH declared PageRank queries (the
-    * [[kCoreShared]] discipline, round-15 optimization): the bounded
-    * [[iters]]-round query is a deterministic PREFIX of the capped
-    * fixpoint run — every round is the same engine-exact
-    * [[rankIteration]] — so a single loop snapshots round [[iters]]
-    * (= q_pagerank) and keeps iterating with the ε-probe to the
-    * [[rankFixMaxRounds]] cap (= q_pagerank_fixpoint), instead of the
-    * two queries re-running 5 + 8 rounds independently. Exact on every
-    * input, not just where the cap binds: the probe runs on the same
-    * schedule as the standalone fixpoint (checked after every round
-    * until it fires), so an early convergence yields the identical
-    * early state while the snapshot still advances to round [[iters]]
-    * (pinned differentially in GraphFixpointSpec). Memoized per
-    * (session, dir). */
-  private[graft] def rankShared(s: org.apache.spark.sql.SparkSession,
-      d: String): (DataFrame, DataFrame) =
-    graft.Memo(s, s"graph.rankShared:$d", d) {
+  /** The declared rank queries' runs, one [[graft.Memo]] entry per rank
+    * family (uniform PageRank or the corpus-seeded PPR) and form (the
+    * bounded [[iters]]-round run or the capped [[rankFixMaxRounds]]-round
+    * fixpoint run) over the shared [[edgeFrames]]. Each query reads only
+    * its own entry: a session running only the bounded query pays no
+    * convergence probes and no rounds past [[iters]], and no entry pins a
+    * state another entry also holds. Every form checkpoints its last
+    * round, so the entry is a materialized leaf. */
+  private[graft] def rankRun(s: org.apache.spark.sql.SparkSession, d: String,
+      ppr: Boolean, fixpoint: Boolean): DataFrame =
+    graft.Memo(s, s"graph.${if (ppr) "ppr" else "pagerank"}" +
+        s"${if (fixpoint) "Fixpoint" else "Bounded"}:$d", d) {
       val (e, deg, n) = edgeFrames(s, d)
-      val (snap, fix, _) = rankSharedRun(
-        deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
-        pr => rankIteration(e, deg, pr, n), n, rankFixEps,
-        snapAt = iters, maxRounds = rankFixMaxRounds)
-      (snap, fix)
+      (ppr, fixpoint) match {
+        case (false, false) => pagerankRanksOn(e, deg, n, iters)
+        case (false, true) =>
+          pagerankFixpoint(e, deg, n, rankFixEps, rankFixMaxRounds)._1
+        case (true, false) => pprRanksOn(e, deg, n, pprResetOn(deg), iters)
+        case (true, true) => pprFixpoint(e, deg, n, pprResetOn(deg),
+          rankFixEps, rankFixMaxRounds)._1
+      }
     }
-
-  /** The PPR twin of [[rankShared]]: one loop serving q_ppr (round-
-    * [[iters]] snapshot) and q_ppr_fixpoint (capped fixpoint). */
-  private[graft] def pprShared(s: org.apache.spark.sql.SparkSession,
-      d: String): (DataFrame, DataFrame) =
-    graft.Memo(s, s"graph.pprShared:$d", d) {
-      val (e, deg, n) = edgeFrames(s, d)
-      val reset = pprResetOn(deg)
-      val (snap, fix, _) = rankSharedRun(
-        deg.select(col("src").as("node"), reset.as("pr")),
-        pr => pprIteration(e, deg, pr, n, reset), n, rankFixEps,
-        snapAt = iters, maxRounds = rankFixMaxRounds)
-      (snap, fix)
-    }
-
-  /** Snap-only dispatch for the BOUNDED rank queries (round-15 verdict
-    * #10): a session that already paid the shared run reads its
-    * round-[[iters]] snapshot; a session running ONLY the bounded query
-    * (the standalone-user case at 100 TB) runs the plain bounded loop —
-    * no convergence probes, no rounds past [[iters]] — instead of
-    * iterating the shared run to the fixpoint cap. Memoized under its
-    * own key so repeated standalone runs pay it once. In [[all]]'s order
-    * q_pagerank runs before q_pagerank_fixpoint, so on a harness cold
-    * pass the peek misses and both loops run; later passes hit the
-    * shared run. Bit-identical either way: the snapshot IS the bounded
-    * loop's round-[[iters]] state (GraphFixpointSpec). */
-  private[graft] def rankSnap(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    graft.Memo.peek[(DataFrame, DataFrame)](s, s"graph.rankShared:$d", d)
-      .map(_._1)
-      .getOrElse(graft.Memo(s, s"graph.rankSnap:$d", d) {
-        pagerankRanks(s, d, iters).localCheckpoint(true)
-      })
-
-  /** The PPR twin of [[rankSnap]]. */
-  private[graft] def pprSnap(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    graft.Memo.peek[(DataFrame, DataFrame)](s, s"graph.pprShared:$d", d)
-      .map(_._1)
-      .getOrElse(graft.Memo(s, s"graph.pprSnap:$d", d) {
-        pprRanks(s, d, iters).localCheckpoint(true)
-      })
 
   /** The bounded rank loop on explicit frames (testable on synthetic
     * graphs; [[pagerankFixpoint]] must equal it at the round it stopped). */
   def pagerankRanksOn(e: DataFrame, deg: DataFrame, n: Long,
-      nIters: Int): DataFrame = {
-    var pr: DataFrame = deg.select(col("src").as("node"),
-      (lit(1.0) / n).as("pr"))
-    for (i <- 1 to nIters) {
-      pr = rankIteration(e, deg, pr, n)
-      // sever lineage EVERY round (the r5 cadence): the round-6
-      // every-2nd-round relaxation looked faster solo (2.30 s) but
-      // regressed under the full-suite bench (3.16 s → 3.94 s, r5→r6
-      // artifacts) — the doubled plan depth re-plans two joined
-      // iterations per round and its unmaterialized intermediates
-      // compete for memory with neighboring queries. The terminal
-      // iteration still flows into the caller's projection
-      // unmaterialized.
-      if (i < nIters) pr = pr.localCheckpoint(true)
+      nIters: Int): DataFrame =
+    rankLoop(deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
+      rankIteration(e, deg, _, n), n, nIters, None)._1
+
+  /** The one loop behind every rank form, bounded and fixpoint, PageRank
+    * and PPR (they differ only in init frame, step function and stop
+    * rule, so a cadence or probe change cannot apply to one form and not
+    * another): iterate `step` from `init`, at most `maxRounds` times.
+    * Each round ends in an EAGER localCheckpoint (the CC-loop discipline,
+    * Dedup.scala), so round i's plan starts from a LogicalRDD leaf and
+    * lineage depth, plan size and planner time stay O(1) in the round
+    * count; the returned state is materialized too. With `eps` set, each
+    * round is probed by [[rankDelta12]] and the loop stops at the first
+    * round whose quantized L1 delta drops below `eps`. Returns (state,
+    * rounds run). Dangling mass: the undirected edge construction gives
+    * every node outdeg ≥ 1, so no sink-redistribution term exists. */
+  private def rankLoop(init: DataFrame, step: DataFrame => DataFrame,
+      n: Long, maxRounds: Int, eps: Option[Double]): (DataFrame, Int) = {
+    val budget12 = eps.map(x => math.round(x * 1e12))
+    var pr = init
+    var r = 0
+    var converged = false
+    while (!converged && r < maxRounds) {
+      // sever lineage EVERY round: the every-2nd-round relaxation looked
+      // faster solo (2.30 s) but regressed under the full-suite bench
+      // (3.16 s → 3.94 s, r5→r6 artifacts) — the doubled plan depth
+      // re-plans two joined iterations per round
+      val next = step(pr).localCheckpoint(true)
+      r += 1
+      converged = budget12.exists(rankDelta12(pr, next, n) < _)
+      pr = next
     }
-    pr
+    (pr, r)
   }
 
   /** Engine-exact L1 rank movement between two node-width rank frames,
@@ -422,63 +386,8 @@ object Graph {
     * the loop's existing exchange budget. */
   def pagerankFixpoint(e: DataFrame, deg: DataFrame, n: Long,
       eps: Double, maxRounds: Int): (DataFrame, Int) =
-    rankFixpoint(
-      deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
-      pr => rankIteration(e, deg, pr, n), n, eps, maxRounds)
-
-  /** The converge-and-stop loop both rank fixpoints share (they differ
-    * only in init frame and step function): iterate `step` from `init`
-    * until the quantized L1 delta ([[delta12Of]]) drops below `eps`,
-    * capped at `maxRounds`; every round's frame is checkpointed so the
-    * probe and the next step read materialized state. One loop body
-    * means a probe or cadence change cannot silently apply to one rank
-    * family and not the other. */
-  private def rankFixpoint(init: DataFrame, step: DataFrame => DataFrame,
-      n: Long, eps: Double, maxRounds: Int): (DataFrame, Int) = {
-    val (_, fix, r) = rankSharedRun(init, step, n, eps, snapAt = 0,
-      maxRounds = maxRounds)
-    (fix, r)
-  }
-
-  /** The one rank loop behind the bounded-snapshot sharing AND the
-    * plain fixpoints ([[rankShared]] / [[pprShared]] / [[rankFixpoint]]):
-    * iterate `step`, probing each checkpointed round with
-    * [[rankDelta12]]; record the first state whose delta drops below
-    * `eps` (the fixpoint result — the probe stops firing after that,
-    * exactly like the standalone loop it replaces) and the state after
-    * `snapAt` rounds (the bounded declared query); run until both are
-    * known or `maxRounds` caps. `snapAt ≤ 0` disables the snapshot
-    * (plain fixpoint mode — the loop then stops at convergence).
-    * Returns (snapshot, fixpointState, roundsToFixpoint). */
-  private[graft] def rankSharedRun(init: DataFrame,
-      step: DataFrame => DataFrame,
-      n: Long, eps: Double, snapAt: Int, maxRounds: Int)
-      : (DataFrame, DataFrame, Int) = {
-    // a snapshot round past the cap would silently degrade to the capped
-    // terminal state instead of the bounded-loop result — fail loudly
-    // (round-15 advice; current callers pass iters=5 < cap=8)
-    require(snapAt <= 0 || snapAt <= maxRounds,
-      s"rankSharedRun: snapAt=$snapAt exceeds maxRounds=$maxRounds — " +
-        "the bounded snapshot would silently truncate at the cap")
-    val budget12 = math.round(eps * 1e12)
-    var pr = init
-    var snap: DataFrame = null
-    var fixed: DataFrame = null
-    var fixedAt = 0
-    var r = 0
-    while (r < maxRounds && (fixed == null || r < snapAt)) {
-      val next = step(pr).localCheckpoint(true)
-      r += 1
-      if (fixed == null && rankDelta12(pr, next, n) < budget12) {
-        fixed = next
-        fixedAt = r
-      }
-      if (r == snapAt) snap = next
-      pr = next
-    }
-    if (fixed == null) { fixed = pr; fixedAt = r }
-    (if (snap == null) pr else snap, fixed, fixedAt)
-  }
+    rankLoop(deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
+      rankIteration(e, deg, _, n), n, maxRounds, Some(eps))
 
   /** The q_pagerank oracle, parameterized by iteration count so the
     * declared bounded query (5 rounds) and the declared fixpoint query
@@ -499,9 +408,7 @@ object Graph {
        |ORDER BY node""".stripMargin
 
   private val qPagerank = Q("q_pagerank", pagerankOracle(iters)) { (s, d) =>
-    // the shared run's round-[[iters]] snapshot when available, else the
-    // plain bounded loop — never the fixpoint's extra rounds ([[rankSnap]])
-    rankSnap(s, d)
+    rankRun(s, d, ppr = false, fixpoint = false)
       .select(col("node"), round(col("pr"), 6).as("pr")).orderBy("node")
   }
 
@@ -527,29 +434,19 @@ object Graph {
     * (the cap binds at ε = 10⁻¹², see [[rankFixMaxRounds]]). */
   private val qPagerankFixpoint =
     Q("q_pagerank_fixpoint", pagerankOracle(rankFixMaxRounds)) { (s, d) =>
-      // the terminal state of the same shared run as q_pagerank
-      rankShared(s, d)._2
+      rankRun(s, d, ppr = false, fixpoint = true)
         .select(col("node"), round(col("pr"), 6).as("pr")).orderBy("node")
     }
 
-  /** Personalized PageRank: the walk restarts at a SEED set (customers
-    * with custkey ≡ 0 mod 100) instead of uniformly — rank measures
-    * proximity to the seeds, the recommendation / similar-entities
-    * primitive. Same engine-exact quantized-contribution discipline and
-    * broadcast node-state loop as [[pagerankRanks]]; the reset vector is
-    * a pure EXPRESSION of the node id (no per-iteration seed join), and
-    * the rank frame keeps every node (zero rank until the frontier
-    * reaches it), so each iteration is the contribution aggregate plus
-    * one node-width left join. */
-  private[graft] def pprRanks(s: org.apache.spark.sql.SparkSession,
-      d: String, nIters: Int): DataFrame = {
-    val (e, deg, n) = edgeFrames(s, d)
-    pprRanksOn(e, deg, n, pprResetOn(deg), nIters)
-  }
-
-  /** One personalized-rank iteration: the contribution aggregate plus a
-    * node-width left join re-applying the reset expression (a pure
-    * function of the node id — no per-iteration seed join). */
+  /** One personalized-rank iteration. Personalized PageRank restarts the
+    * walk at a SEED set instead of uniformly, so rank measures proximity
+    * to the seeds, the recommendation / similar-entities primitive. Same
+    * engine-exact quantized-contribution discipline and broadcast
+    * node-state join as [[rankIteration]]; the reset vector is a pure
+    * EXPRESSION of the node id (no per-iteration seed join), and the rank
+    * frame keeps every node (zero rank until the frontier reaches it), so
+    * each iteration is the contribution aggregate plus one node-width
+    * left join. */
   private[graft] def pprIteration(e: DataFrame, deg: DataFrame, pr: DataFrame,
       n: Long, reset: org.apache.spark.sql.Column): DataFrame = {
     val contrib = e.join(stateHint(pr, n), col("src") === col("node"))
@@ -574,14 +471,9 @@ object Graph {
   /** Bounded personalized-rank loop on explicit frames; `reset` is the
     * restart distribution as a column expression over `node`. */
   def pprRanksOn(e: DataFrame, deg: DataFrame, n: Long,
-      reset: org.apache.spark.sql.Column, nIters: Int): DataFrame = {
-    var pr: DataFrame = deg.select(col("src").as("node"), reset.as("pr"))
-    for (i <- 1 to nIters) {
-      pr = pprIteration(e, deg, pr, n, reset)
-      if (i < nIters) pr = pr.localCheckpoint(true)
-    }
-    pr
-  }
+      reset: org.apache.spark.sql.Column, nIters: Int): DataFrame =
+    rankLoop(deg.select(col("src").as("node"), reset.as("pr")),
+      pprIteration(e, deg, _, n, reset), n, nIters, None)._1
 
   /** Converge-and-stop personalized PageRank — same contract as
     * [[pagerankFixpoint]]: stops when the quantized L1 rank delta drops
@@ -590,8 +482,8 @@ object Graph {
   def pprFixpoint(e: DataFrame, deg: DataFrame, n: Long,
       reset: org.apache.spark.sql.Column, eps: Double,
       maxRounds: Int): (DataFrame, Int) =
-    rankFixpoint(deg.select(col("src").as("node"), reset.as("pr")),
-      pr => pprIteration(e, deg, pr, n, reset), n, eps, maxRounds)
+    rankLoop(deg.select(col("src").as("node"), reset.as("pr")),
+      pprIteration(e, deg, _, n, reset), n, maxRounds, Some(eps))
 
   private def pprIterSql(i: Int): String =
     s"""c$i AS MATERIALIZED (SELECT e.dst,
@@ -626,18 +518,16 @@ object Graph {
        |ORDER BY node""".stripMargin
 
   /** X17: personalized PageRank from the custkey ≡ 0 (mod 100) seed
-    * set, five engine-exact iterations ([[pprRanks]]); oracle unrolls
+    * set, five engine-exact iterations ([[pprRanksOn]]); oracle unrolls
     * them with the identical quantized arithmetic. */
   private val qPpr = Q("q_ppr", pprOracle(iters)) { (s, d) =>
-    // the shared run's round-[[iters]] snapshot when available, else the
-    // plain bounded loop — never the fixpoint's extra rounds ([[pprSnap]])
-    pprSnap(s, d)
+    rankRun(s, d, ppr = true, fixpoint = false)
       .select(col("node"), round(col("pr"), 6).as("pr")).orderBy("node")
   }
 
-  /** The corpus seed/reset setup shared by [[pprRanks]] and the
-    * declared PPR fixpoint: seed set = customers with custkey ≡ 0
-    * (mod 100), reset a pure expression of the node id. */
+  /** The corpus seed/reset setup shared by the declared PPR queries:
+    * seed set = customers with custkey ≡ 0 (mod 100), reset a pure
+    * expression of the node id. */
   private def pprResetOn(deg: DataFrame): org.apache.spark.sql.Column = {
     val isSeed = col("node") < supplierOffset && col("node") % 100 === 0
     val nSeeds = deg.select(col("src").as("node")).where(isSeed).count()
@@ -651,8 +541,7 @@ object Graph {
     * arithmetic. */
   private val qPprFixpoint =
     Q("q_ppr_fixpoint", pprOracle(rankFixMaxRounds)) { (s, d) =>
-      // the terminal state of the same shared run as q_ppr
-      pprShared(s, d)._2
+      rankRun(s, d, ppr = true, fixpoint = true)
         .select(col("node"), round(col("pr"), 6).as("pr")).orderBy("node")
     }
 

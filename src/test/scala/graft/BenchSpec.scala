@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The summary line [[Bench.compactLine]] on a synthetic 150-query suite:
-  * bounded, valid JSON, carrying the run figures and every failure. */
+  * bounded, valid JSON, carrying the run figures and every failure; and
+  * the argument selection [[Bench.selection]]. */
 class BenchSpec extends AnyFunSuite with Matchers {
 
   private val failedNames = Seq(7, 42, 99, 149).map(i => f"q_synthetic_$i%03d")
@@ -60,5 +61,16 @@ class BenchSpec extends AnyFunSuite with Matchers {
     q.get("warm_calls").size() shouldBe Bench.warmPasses
     full.get("queries").get("q_synthetic_099").get("warm").asDouble() shouldBe
       -1.0
+  }
+
+  test("the selection keeps suite order, takes named queries once in argument order, and lists every unknown name") {
+    val all = scala.collection.immutable.VectorMap(
+      "q_a" -> 1, "q_b" -> 2, "q_c" -> 3)
+    Bench.selection(all, Nil) shouldBe
+      Right(Seq("q_a" -> 1, "q_b" -> 2, "q_c" -> 3))
+    Bench.selection(all, Seq("q_c", "q_a", "q_c")) shouldBe
+      Right(Seq("q_c" -> 3, "q_a" -> 1))
+    Bench.selection(all, Seq("q_a", "q_x", "q_y", "q_x")) shouldBe
+      Left(Seq("q_x", "q_y"))
   }
 }

@@ -162,5 +162,27 @@ class BlockAndPersistenceSpec extends SparkSpec {
       math.abs(approx(k)._1 - p50) / p50 should be < 0.02
       math.abs(approx(k)._2 - p95) / p95 should be < 0.02
     }
+    // the published guarantee at accuracy 10000: each estimate v's rank
+    // interval [#(x < v), #(x ≤ v)] in the exact sorted cents column
+    // comes within n/10000 of p·n
+    val sorted = Tables.lineitem(spark, sfDir)
+      .select(col("l_returnflag"),
+        round(col("l_extendedprice") * 100).cast("long"))
+      .collect().groupBy(_.getString(0))
+      .map { case (k, rs) => k -> rs.map(_.getLong(1)).sorted }
+    sorted.keySet shouldBe approx.keySet
+    approx.foreach { case (k, (p50, p95)) =>
+      val xs = sorted(k)
+      val n = xs.length.toDouble
+      Seq(0.5 -> p50, 0.95 -> p95).foreach { case (p, est) =>
+        val v = math.round(est * 100)
+        val lo = xs.count(_ < v)
+        val hi = xs.count(_ <= v)
+        val gap = math.max(0.0, math.max(lo - p * n, p * n - hi))
+        withClue(s"$k p=$p v=$v rank [$lo, $hi] of n=${xs.length}: ") {
+          gap should be <= n / 10000
+        }
+      }
+    }
   }
 }

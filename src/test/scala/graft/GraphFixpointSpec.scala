@@ -238,111 +238,25 @@ class GraphFixpointSpec extends SparkSpec {
     }
   }
 
-  // ---- round-15: the shared bounded-snapshot/fixpoint rank run ----
-  // q_pagerank/q_ppr are now the round-`iters` SNAPSHOT of the same run
-  // whose terminal state is q_pagerank_fixpoint/q_ppr_fixpoint (the
-  // kCoreShared discipline). Load-bearing equivalences: snapshot ≡ the
-  // bounded loop at snapAt, terminal ≡ the standalone fixpoint — on
-  // inputs where the cap binds AND where the ε-probe fires early
-  // (before and after the snapshot round).
-
-  test("shared rank run with a binding cap: snapshot == bounded, terminal == fixpoint") {
-    val (e, deg, n) = rankFrames(
-      (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)) ++
-        Seq((4L, 5L), (5L, 6L)))
-    val init = deg.select(col("src").as("node"), (lit(1.0) / n).as("pr"))
-    // eps = 0 never fires: both snapshot and terminal come off one loop
-    val (snap, fix, rounds) = Graph.rankSharedRun(init,
-      pr => Graph.rankIteration(e, deg, pr, n), n, eps = 0.0,
-      snapAt = 2, maxRounds = 5)
-    rounds shouldBe 5
-    rankMap(snap) shouldBe rankMap(Graph.pagerankRanksOn(e, deg, n, 2))
-    rankMap(fix) shouldBe rankMap(Graph.pagerankRanksOn(e, deg, n, 5))
-  }
-
-  test("shared rank run: ε fires BEFORE the snapshot round — fixpoint keeps the early state, snapshot still advances") {
-    // K4: uniform rank is stationary, delta = 0 after round 1
-    val (e, deg, n) = rankFrames(
-      for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b))
-    val init = deg.select(col("src").as("node"), (lit(1.0) / n).as("pr"))
-    val (snap, fix, rounds) = Graph.rankSharedRun(init,
-      pr => Graph.rankIteration(e, deg, pr, n), n, eps = 1e-9,
-      snapAt = 3, maxRounds = 10)
-    rounds shouldBe 1 // the probe fired at round 1 — same as standalone
-    rankMap(fix) shouldBe
-      rankMap(Graph.pagerankFixpoint(e, deg, n, 1e-9, 10)._1)
-    // the loop still ran to round 3 for the bounded consumer
-    rankMap(snap) shouldBe rankMap(Graph.pagerankRanksOn(e, deg, n, 3))
-  }
-
-  test("shared rank run: ε fires AFTER the snapshot round — loop stops at the fire, both results exact") {
-    // caterpillar: rank keeps sloshing, converges at 5e-3 strictly
-    // between round 1 and the cap (see the fixpoint test above)
-    val (e, deg, n) = rankFrames(
-      (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)) ++
-        Seq((4L, 5L), (5L, 6L)))
-    val init = deg.select(col("src").as("node"), (lit(1.0) / n).as("pr"))
-    val (fixRef, refRounds) = Graph.pagerankFixpoint(e, deg, n, 5e-3, 64)
-    refRounds should be > 1
-    val (snap, fix, rounds) = Graph.rankSharedRun(init,
-      pr => Graph.rankIteration(e, deg, pr, n), n, eps = 5e-3,
-      snapAt = 1, maxRounds = 64)
-    rounds shouldBe refRounds
-    rankMap(fix) shouldBe rankMap(fixRef)
-    rankMap(snap) shouldBe rankMap(Graph.pagerankRanksOn(e, deg, n, 1))
-  }
-
-  test("declared rank queries read one shared run: snapshot/terminal == the standalone loops on the corpus") {
+  test("declared rank queries read one memo entry each: bounded/fixpoint == the standalone loops on the corpus") {
     try {
       val (e, deg, n) = Graph.edgeFrames(spark, sfDir)
-      val (snap, fix) = Graph.rankShared(spark, sfDir)
-      rankMap(snap) shouldBe rankMap(Graph.pagerankRanksOn(e, deg, n, 5))
-      rankMap(fix) shouldBe
+      def run(ppr: Boolean, fixpoint: Boolean) =
+        rankMap(Graph.rankRun(spark, sfDir, ppr, fixpoint))
+      run(ppr = false, fixpoint = false) shouldBe
+        rankMap(Graph.pagerankRanksOn(e, deg, n, 5))
+      run(ppr = false, fixpoint = true) shouldBe
         rankMap(Graph.pagerankFixpoint(e, deg, n, 1e-12, 8)._1)
       val reset = when(col("node") < 1000000L && col("node") % 100 === 0,
         lit(1.0) / deg.select(col("src").as("node"))
           .where(col("node") < 1000000L && col("node") % 100 === 0).count())
         .otherwise(lit(0.0))
-      val (psnap, pfix) = Graph.pprShared(spark, sfDir)
-      rankMap(psnap) shouldBe rankMap(Graph.pprRanksOn(e, deg, n, reset, 5))
-      rankMap(pfix) shouldBe
+      run(ppr = true, fixpoint = false) shouldBe
+        rankMap(Graph.pprRanksOn(e, deg, n, reset, 5))
+      run(ppr = true, fixpoint = true) shouldBe
         rankMap(Graph.pprFixpoint(e, deg, n, reset, 1e-12, 8)._1)
     } finally {
       Memo.release(spark); Cleanup(spark)
     }
-  }
-
-  // ---- round-16: snap-only dispatch for the BOUNDED rank queries ----
-
-  test("bounded rank query standalone runs snap-only; with the shared run built it reads the snapshot") {
-    try {
-      Memo.release(spark); Cleanup(spark)
-      // cold session, bounded query only: the snap-only loop (no probes,
-      // no rounds past `iters`) — results == the plain bounded loop
-      val coldSnap = Graph.rankSnap(spark, sfDir)
-      val (e, deg, n) = Graph.edgeFrames(spark, sfDir)
-      rankMap(coldSnap) shouldBe rankMap(Graph.pagerankRanksOn(e, deg, n, 5))
-      val coldPpr = Graph.pprSnap(spark, sfDir)
-      val reset = when(col("node") < 1000000L && col("node") % 100 === 0,
-        lit(1.0) / deg.select(col("src").as("node"))
-          .where(col("node") < 1000000L && col("node") % 100 === 0).count())
-        .otherwise(lit(0.0))
-      rankMap(coldPpr) shouldBe rankMap(Graph.pprRanksOn(e, deg, n, reset, 5))
-      // once the shared run exists, the dispatch returns ITS snapshot
-      // (same values, and the very same memoized frame — no extra loop)
-      val (sharedSnap, _) = Graph.rankShared(spark, sfDir)
-      assert(Graph.rankSnap(spark, sfDir) eq sharedSnap)
-    } finally {
-      Memo.release(spark); Cleanup(spark)
-    }
-  }
-
-  test("rankSharedRun rejects a snapshot round past the cap") {
-    val (e, deg, n) = rankFrames(
-      for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b))
-    val init = deg.select(col("src").as("node"), (lit(1.0) / n).as("pr"))
-    an[IllegalArgumentException] should be thrownBy
-      Graph.rankSharedRun(init, pr => Graph.rankIteration(e, deg, pr, n),
-        n, eps = 0.0, snapAt = 9, maxRounds = 8)
   }
 }
