@@ -127,13 +127,7 @@ object Bench {
     // (Cleanup scaladoc). The two cleaner confs are STATIC — builder-time.
     val settle = sys.env.get("SPARK_GRAFT_SETTLE").exists(_.trim == "1")
     val spark = HarnessSession.builder(cpus, settle, shufParts).getOrCreate()
-    if (settle) spark.conf.set("graft.cleanup.settleScratch", "true")
     spark.sparkContext.setLogLevel("WARN")
-    // pinned-byte memo budget (round-15 verdict #9): half the nominal
-    // storage pool with a floor, or SPARK_GRAFT_MEMO_BUDGET
-    // (Memo.harnessBudget). At the gate the working set (~0.5 GB at
-    // sf0.1) sits under it — 0 evictions by design.
-    Memo.setHarnessBudget(spark)
     // Warm-up, counted in setup_sec and cold_e2e_sec: JVM/codegen/
     // scheduler spin-up otherwise lands on whichever query happens to run
     // first, skewing its number by ~4s. Exercise each hot code path once

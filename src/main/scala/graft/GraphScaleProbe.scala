@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** sf100 graph-family probe over a PRE-BUCKETED fact layout (round-13
@@ -69,8 +68,6 @@ object GraphScaleProbe {
       .config("spark.buffer.pageSize", pageSize)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_MEMO_BUDGET").foreach(b =>
-      spark.conf.set("graft.memo.maxPinnedBytes", b))
     // size-dispatch override for the node-state broadcasts (the sf100
     // triangle adjacency join broadcasts ~5-6 GB on a 64 g heap — beyond
     // the 1 GiB library default, sane for this single-JVM probe)
@@ -82,12 +79,6 @@ object GraphScaleProbe {
       val v = f
       (math.rint((System.nanoTime() - t0) / 1e7) / 100, v)
     }
-
-    // scratch-disk settle between queries — the shared discipline
-    // ([[Cleanup.settleScratch]]; this probe proved it out in round 13,
-    // then it moved into the library so Bench/Verify big-sf runs get it
-    // too via SPARK_GRAFT_SETTLE=1)
-    def settleScratch(s: SparkSession): Unit = Cleanup.settleScratch(s)
 
     // ---- stage 1: the deployment's one-time bucketed layout ----------
     // the in-memory catalog is fresh each JVM, so DROP TABLE alone is a
@@ -123,7 +114,7 @@ object GraphScaleProbe {
     // files BEFORE the first query, or it pays them as lost scratch
     // (measured: q_pagerank ENOSPCs first-in-line while the identical
     // q_ppr fits after the abort cleans the leftovers)
-    settleScratch(spark)
+    Cleanup.settleScratch(spark)
 
     // ---- stage 2: the graph family over the bucketed sources ---------
     spark.conf.set("graft.graph.lineitemBucketTable", "g_li_b")
@@ -143,8 +134,7 @@ object GraphScaleProbe {
           false
         }
       }
-      Cleanup(spark)
-      settleScratch(spark)
+      Cleanup(spark) // settles too: the session carries the settle confs
       System.err.println(s"[probe] $name: ${if (ok) s"$sec s" else "FAILED"}")
       name -> (if (ok) sec else -1.0)
     }

@@ -26,8 +26,12 @@ object HarnessSession {
     *    model-boundary persists (TWCNB ntc, tf) force `cpus`-partition
     *    stages onto kilobyte tables — measured 3-6x wall and ~25x tasks
     *    on the TWCNB trio;
+    *  - `SPARK_GRAFT_MEMO_BUDGET` (bytes), when set, as
+    *    `graft.memo.maxPinnedBytes`; unset, [[Memo]] budgets
+    *    [[Memo.harnessBudget]] of the storage pool;
     *  - with `settle`, the static cleaner confs of big-sf mode
-    *    ([[Cleanup.settleBuilderConfs]]).
+    *    ([[Cleanup.settleBuilderConfs]]), which also make [[Cleanup]]
+    *    settle the scratch disks at each query boundary.
     */
   def builder(cpus: String, settle: Boolean,
       shufflePartitions: String): SparkSession.Builder = {
@@ -39,6 +43,8 @@ object HarnessSession {
       .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+    sys.env.get("SPARK_GRAFT_MEMO_BUDGET")
+      .foreach(v => b.config("graft.memo.maxPinnedBytes", v))
     if (settle) Cleanup.settleBuilderConfs(b) else b
   }
 }

@@ -43,12 +43,13 @@ import org.apache.spark.sql.SparkSession
   * re-stamps at least one file, not a byte-identical rewrite with
   * preserved names/sizes/mtimes, which no cheap listing can see.
   *
-  * Footprint contract: `graft.memo.maxPinnedBytes` (unset = unlimited;
-  * Bench and Verify always set it, through [[setHarnessBudget]]) bounds
-  * the pinned working set — exceeding it evicts entries COST-AWARE
-  * (their blocks unpersisted; a later call rebuilds), so an embedding
-  * application streaming many datasets through one session cannot grow
-  * executor storage without bound.
+  * Footprint contract: `graft.memo.maxPinnedBytes` bounds the pinned
+  * working set; unset or malformed, the budget is [[harnessBudget]] of
+  * the session's nominal storage pool, so no session runs unbounded.
+  * Exceeding it evicts entries COST-AWARE (their blocks unpersisted; a
+  * later call rebuilds), so an embedding application streaming many
+  * datasets through one session cannot grow executor storage without
+  * bound.
   * Victim order is greedy bytes-per-rebuild-second, not LRU: each
   * candidate scores (freeable bytes it alone pins) / (its measured
   * build seconds), highest first, recency as tiebreak — the round-12
@@ -58,12 +59,10 @@ import org.apache.spark.sql.SparkSession
   * [[queryBoundary]] (Cleanup calls it per query) are in-flight — a
   * live plan may still read their truncated-lineage checkpoints — and
   * are never evicted; between boundaries the budget may therefore stay
-  * temporarily exceeded. With the conf UNSET, the first crossing of
-  * half the nominal storage pool logs one WARN naming the conf
-  * ([[warnIfUnbounded]]) — loud, but advisory only. [[pinnedBytes]]
-  * publishes the current figure; [[evictions]] counts evictions;
-  * [[rebuilds]]/[[rebuildSeconds]] ledger the recompute tax budgeted
-  * runs pay.
+  * temporarily exceeded, and an application that never declares a
+  * boundary gets no eviction. [[pinnedBytes]] publishes the current
+  * figure; [[evictions]] counts evictions; [[rebuilds]]/
+  * [[rebuildSeconds]] ledger the recompute tax budgeted runs pay.
   *
   * Concurrency contract: builds of any keys from any threads are
   * serialised by one JVM-wide lock (Spark allows one active context per
@@ -276,28 +275,21 @@ object Memo {
     v
   }
 
-  /** Optional pinned-byte budget: `graft.memo.maxPinnedBytes` (unset =
-    * unlimited; Bench and Verify always set it, through
-    * [[setHarnessBudget]]). When the context's pinned storage exceeds the
-    * budget, evict entries of this context in cost-aware order (below) —
-    * never the entry just touched — unpersisting their blocks; a later call
-    * for an evicted key simply rebuilds (the same path a fingerprint
-    * change takes). This bounds the memo's executor-storage footprint
-    * for an embedding application that streams many datasets through
-    * one session; it deliberately may leave the budget exceeded when a
-    * SINGLE live entry is larger than the budget (evicting the entry in
-    * use would thrash every call).
+  /** Pinned-byte budget ([[budget]]). When the context's pinned storage
+    * exceeds it, evict entries of this context in cost-aware order
+    * (below) — never the entry just touched — unpersisting their
+    * blocks; a later call for an evicted key simply rebuilds (the same
+    * path a fingerprint change takes). This bounds the memo's
+    * executor-storage footprint for an embedding application that
+    * streams many datasets through one session; it deliberately may
+    * leave the budget exceeded when a SINGLE live entry is larger than
+    * the budget (evicting the entry in use would thrash every call).
     */
   private def enforceBudget(s: SparkSession,
       justUsed: (SparkSession, String)): Unit = {
-    val budget = s.conf.getOption("graft.memo.maxPinnedBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-    def bytes: Long = pinnedBytes(s)
-    if (budget.isEmpty) {
-      warnIfUnbounded(s, bytes)
-      return
-    }
-    if (bytes <= budget.get) return
+    val cap = budget(s)
+    val bytes = pinnedBytes(s)
+    if (bytes <= cap) return
     // One storage-info scan + one pin-count pass up front, then pure
     // arithmetic per victim: a co-pinned block's bytes come off the
     // running total only when its LAST pinning entry is evicted —
@@ -357,7 +349,7 @@ object Memo {
     }
     var remaining = bytes
     val vi = victims.iterator
-    while (remaining > budget.get && vi.hasNext) {
+    while (remaining > cap && vi.hasNext) {
       val (vk, ve) = vi.next()
       releaseEntry(s, vk, ve, blocking = true)
       val beforeBytes = remaining
@@ -376,7 +368,7 @@ object Memo {
       log.info(s"graft.Memo evicted '${vk._2}' (cost-aware: ~$ownBytes " +
         s"block bytes over ${math.rint(ve.buildNanos / 1e7) / 100} s " +
         s"build; ~${beforeBytes - remaining} pinned bytes freed net of " +
-        s"co-pins) to meet graft.memo.maxPinnedBytes=${budget.get}; a " +
+        s"co-pins) to meet graft.memo.maxPinnedBytes=$cap; a " +
         s"later call rebuilds.")
     }
   }
@@ -414,50 +406,17 @@ object Memo {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  // warn-once latch per context for the unbounded-memo advisory
-  private val warnedContexts = java.util.Collections.newSetFromMap(
-    new ConcurrentHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
-
-  /** With `graft.memo.maxPinnedBytes` unset the memo is unbounded — a
-    * footgun for an embedding application streaming many datasets
-    * through one session (round-11 ask #5); Bench and Verify always set
-    * the budget ([[setHarnessBudget]]), so this guards library use. The
-    * first time this context's pinned bytes cross HALF the nominal
-    * storage pool (process max heap × `spark.memory.fraction` ×
-    * `spark.memory.storageFraction` — exact in local mode where the
-    * driver heap IS the cluster memory, an order-of-magnitude proxy on
-    * a real cluster whose executors size differently), one WARN names
-    * the conf to set. Advisory only: nothing is evicted. Returns whether THIS call warned (the
-    * first-crossing latch MemoSpec pins). */
-  private[graft] def warnIfUnbounded(s: SparkSession, bytes: Long): Boolean = {
-    // latch hygiene: a long-lived JVM that stops and recreates contexts
-    // (the embedding-application scenario this warning targets) must not
-    // accumulate strong references to dead SparkContexts here
-    warnedContexts.removeIf(_.isStopped)
-    if (warnedContexts.contains(s.sparkContext)) return false
-    val pool = storagePool(s)
-    val warn = bytes > pool / 2 && warnedContexts.add(s.sparkContext)
-    if (warn)
-      log.warn(s"graft.Memo pins $bytes bytes of materialized frames " +
-        s"with no graft.memo.maxPinnedBytes budget set — past half the " +
-        s"nominal storage pool ($pool bytes). Long-lived sessions that " +
-        s"stream many datasets should set graft.memo.maxPinnedBytes " +
-        s"(cost-aware eviction) or call Memo.release(session) at dataset " +
-        s"boundaries.")
-    warn
-  }
-
   /** Nominal storage pool in bytes: process max heap ×
     * `spark.memory.fraction` × `spark.memory.storageFraction` (exact in
     * local mode, where the driver heap IS the cluster memory). */
-  private def storagePool(s: SparkSession): Long = {
+  private[graft] def storagePool(s: SparkSession): Long = {
     def frac(key: String, dflt: Double): Double = s.conf.getOption(key)
       .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(dflt)
     (Runtime.getRuntime.maxMemory * frac("spark.memory.fraction", 0.6) *
       frac("spark.memory.storageFraction", 0.5)).toLong
   }
 
-  /** The harness memo budget for a nominal storage pool of `pool` bytes:
+  /** The default memo budget for a nominal storage pool of `pool` bytes:
     * half the pool, floored at the whole pool or 1 GiB, whichever is
     * smaller. Half alone falls under the sf0.1 working set (~0.5 GB)
     * below a ~3.4 GB heap, and the suite then evicts and rebuilds
@@ -467,18 +426,13 @@ object Memo {
   private[graft] def harnessBudget(pool: Long): Long =
     math.max(pool / 2, math.min(pool, 1L << 30))
 
-  /** Sets `graft.memo.maxPinnedBytes` the way Bench and Verify run:
-    * `SPARK_GRAFT_MEMO_BUDGET` (bytes) when set, else [[harnessBudget]]
-    * of this session's storage pool. Cost-aware eviction then bounds
-    * corpus-width pins (sh8Counts, tfMatrix, candidate lists) at big sf
-    * instead of warn-and-OOM. */
-  private[graft] def setHarnessBudget(s: SparkSession): Unit =
-    s.conf.set("graft.memo.maxPinnedBytes", sys.env.getOrElse(
-      "SPARK_GRAFT_MEMO_BUDGET", harnessBudget(storagePool(s)).toString))
-
-  /** Test hook: forget which contexts already got the unbounded-memo
-    * advisory (so a spec can assert the first-crossing semantics). */
-  private[graft] def resetWarnLatch(): Unit = warnedContexts.clear()
+  /** The pinned-byte budget in force for `s`: `graft.memo.maxPinnedBytes`
+    * when it parses as a byte count, else [[harnessBudget]] of the
+    * session's storage pool. */
+  private[graft] def budget(s: SparkSession): Long =
+    s.conf.getOption("graft.memo.maxPinnedBytes")
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+      .getOrElse(harnessBudget(storagePool(s)))
 
   /** Remove `e` from the memo and unpersist ONLY the blocks no surviving
     * entry still pins. Composite entries CO-PIN their nested

@@ -17,10 +17,7 @@ object Verify {
     // shuffle files (Cleanup scaladoc; the cleaner confs are static)
     val settle = sys.env.get("SPARK_GRAFT_SETTLE").exists(_.trim == "1")
     val spark = HarnessSession.builder(cpus, settle, shufParts).getOrCreate()
-    if (settle) spark.conf.set("graft.cleanup.settleScratch", "true")
     spark.sparkContext.setLogLevel("WARN")
-    // pinned-byte memo budget, same default as Bench
-    Memo.setHarnessBudget(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -47,6 +44,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] memo: pinned_bytes " +
+      s"${Memo.pinnedBytes(spark)} evictions ${Memo.evictions} " +
+      s"rebuilds ${Memo.rebuilds} rebuild_sec ${Memo.rebuildSeconds}")
     spark.stop()
   }
 }

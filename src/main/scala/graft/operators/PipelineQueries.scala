@@ -155,15 +155,12 @@ object PipelineQueries {
     * ([[survivorJaccardPairs]]): the shared stage keeps posting lists up
     * to df ≤ τ + headroom, so any shingle that can become rare after
     * removing ≤ headroom exact-duplicate docs still has its full
-    * posting list on hand. Conf `graft.dedup.deltaHeadroom`, default
-    * 64: the extra kept band (τ < df ≤ τ+64) is a thin df-distribution
-    * tail (measured ~1% of list rows at sf0.1), and a corpus whose
-    * exact-dup count exceeds the headroom falls back to the full
-    * survivor pass — the regime where the survivor corpus is enough
-    * smaller that a fresh pass is the right plan anyway. */
-  private[graft] def deltaHeadroom(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("graft.dedup.deltaHeadroom")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(64)
+    * posting list on hand. The extra kept band (τ < df ≤ τ+64) is a
+    * thin df-distribution tail (measured ~1% of list rows at sf0.1),
+    * and a corpus whose exact-dup count exceeds the headroom falls back
+    * to the full survivor pass — the regime where the survivor corpus
+    * is enough smaller that a fresh pass is the right plan anyway. */
+  private[graft] val deltaHeadroom = 64
 
   /** The full-corpus candidate stage with its survivor-delta
     * ingredients: (pairs, band, sz) — the Jaccard pair frame the
@@ -199,9 +196,8 @@ object PipelineQueries {
       s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame) = {
-    val h = deltaHeadroom(s)
-    graft.Memo(s, s"pipeline.candidateStage:$d:h$h", d) {
-      candidateStageOf(Tables.documents(s, d), maxShingleDf + h)
+    graft.Memo(s, s"pipeline.candidateStage:$d", d) {
+      candidateStageOf(Tables.documents(s, d), maxShingleDf + deltaHeadroom)
     }
   }
 
@@ -392,6 +388,18 @@ object PipelineQueries {
        |       THEN 1 ELSE 0 END AS BIGINT) AS is_canonical
        |FROM exmap x LEFT JOIN m ON x.keep0 = m.node
        |ORDER BY x.doc_id""".stripMargin) { (s, d) =>
+    dedupPipeline(s, d, deltaHeadroom)
+  }
+
+  /** q_dedup_pipeline's body with the exact-dup count `h` up to which
+    * the survivor pairs are delta-corrected from the memoized stage
+    * (past it, the direct survivor pass runs; specs pass 0 to force
+    * it). The memoized stage keeps postings only up to
+    * τ + [[deltaHeadroom]], so `h` may not exceed it. */
+  private[graft] def dedupPipeline(s: org.apache.spark.sql.SparkSession,
+      d: String, h: Int): org.apache.spark.sql.DataFrame = {
+    require(0 <= h && h <= deltaHeadroom,
+      s"headroom $h outside [0, $deltaHeadroom]")
     val docs = Tables.documents(s, d)
     // exact pass: digest the text into a narrow (doc_id, h) projection
     // feeding the keeper aggregate and, on the k > 0 paths, the per-doc
@@ -423,7 +431,6 @@ object PipelineQueries {
     def exmap0 = hashed
       .join(Graph.stateHint(exg.select("h", "keep0"), nKeep, 56L), "h")
       .select("doc_id", "keep0")
-    val h = deltaHeadroom(s)
     // survivor candidate pairs (round-16, verdict #3): delta-correct the
     // memoized full-corpus stage instead of re-running the shingle/df
     // pass over survivors — k = 0 (no exact dups) reads the shared pair
@@ -1492,37 +1499,20 @@ object PipelineQueries {
     // at the 10× synth (400k twin-augmented vectors, ~40M true pairs)
     // the two SMJs spilled >60 GB and died on disk. The corpus itself
     // stays node-width far longer than the pair frame does, so
-    // broadcast the vectors whenever they fit (BYTE-budget dispatch,
-    // same discipline as graft.graph.broadcastStateBytes): the pair
-    // frame then streams NARROW through two map-side hash joins and
-    // nothing pair-proportional is ever sorted wide. The budget
-    // (graft.dedup.broadcastVecBytes, default 1 GB) bounds the
-    // ESTIMATED build size of ONE hinted side — n × (id + 64-dim
-    // double array) ≈ 536 B/row — and va/vb are two separate exchanges,
-    // so the worst-case broadcast state is ~2× the budget; the round-11
-    // advisor's point against the old raw-row bound, whose heap cost
-    // was only implicit. graft.dedup.broadcastVecRows, when set,
-    // overrides with an explicit row cap (the form the plan-shape specs
-    // pin). Beyond the bound the shuffle join remains — correct,
-    // cluster-disk-backed — and a deployment sizes the conf to its
-    // executor memory. `n`, when the caller knows it (footer count /
-    // the dispatch boundary), skips the count job entirely; n = 0 means
-    // unknown and falls back to counting the checkpointed blocks (cheap
-    // metadata scan, but a job nonetheless — the round-11 lsh_hi
-    // regression).
+    // broadcast the vectors whenever they fit: [[Graph.stateHint]]
+    // under the one graft.graph.broadcastStateBytes budget, on the
+    // ESTIMATED build size of ONE hinted side — n × (id + array header
+    // + 64 doubles) = 536 B/row. va/vb are two separate exchanges, so
+    // the worst-case broadcast state is ~2× the budget. Beyond it the
+    // shuffle join remains — correct, cluster-disk-backed — and a
+    // deployment sizes the conf to its executor memory. `n`, when the
+    // caller knows it (footer count / the dispatch boundary), skips the
+    // count job entirely; n = 0 means unknown and falls back to
+    // counting the checkpointed blocks (cheap metadata scan, but a job
+    // nonetheless — the round-11 lsh_hi regression).
     val nVec = if (n > 0) n else bucketed.count()
-    val vecRowBytes = 8L + 16L + 64L * 8L // vec_id + array header + doubles
-    val fits = s.conf.getOption("graft.dedup.broadcastVecRows")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption) match {
-      case Some(rowCap) => nVec <= rowCap
-      case None =>
-        val byteCap = s.conf.getOption("graft.dedup.broadcastVecBytes")
-          .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-          .getOrElse(1000000000L)
-        nVec * vecRowBytes <= byteCap
-    }
-    val hint: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (fits) broadcast else identity
+    def hint(side: org.apache.spark.sql.DataFrame) =
+      Graph.stateHint(side, nVec, 536L)
     val va = hint(bucketed.select(col("vec_id").as("a_id"), col("vec").as("avec")))
     val vb = hint(bucketed.select(col("vec_id").as("b_id"), col("vec").as("bvec")))
     cand.join(va, "a_id").join(vb, "b_id")
@@ -1532,6 +1522,9 @@ object PipelineQueries {
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
       .orderBy("a_id", "b_id")
   }
+
+  /** [[embedNearDup]]'s brute/LSH crossover below τ 0.75, in vectors. */
+  private val embedBruteMaxRows = 100000L
 
   /** Size-dispatched embedding near-dup (round-9 verdict ask #5, the
     * [[graft.operators.Graph.stateHint]] discipline applied to the
@@ -1547,12 +1540,9 @@ object PipelineQueries {
     *    extrapolates the crossover to n ≈ 10⁵ at the exact-recall
     *    point → brute below 100 000 vectors, LSH beyond.
     *
-    * `graft.dedup.embedBruteMaxRows` overrides the τ<0.75 crossover
-    * (deployments with different hardware economics re-measure and set
-    * it); both sides produce the identical verdict frame at the
-    * declared operating points — the LSH recall there is measured exact
-    * and the re-check admits no false positives — pinned in
-    * DifferentialSpec on both sides of a forced threshold.
+    * Both sides produce the identical verdict frame at the declared
+    * operating points — the LSH recall there is measured exact and the
+    * re-check admits no false positives — pinned in DifferentialSpec.
     *
     * `n` must be the TRUE corpus count when τ < [[hiTauBoundary]] (it
     * picks the brute/LSH side and sizes the LSH bit ladder; the parquet
@@ -1571,10 +1561,7 @@ object PipelineQueries {
     // shortcut (the qDedupEmbedLshHi idiom) would slip past into an
     // O(n²) brute on a large corpus (round-10 advisor).
     if (tau >= hiTauBoundary) return embedNearDupLsh(s, emb, n, tau)
-    val crossover = s.conf.getOption("graft.dedup.embedBruteMaxRows")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(100000L)
-    if (n <= crossover) embedNearDupBrute(emb, tau)
+    if (n <= embedBruteMaxRows) embedNearDupBrute(emb, tau)
     else embedNearDupLsh(s, emb, n, tau)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.PipelineQueries
 import org.apache.spark.sql.functions._
 
 /** The library-user story, end to end: assemble a training corpus from
@@ -10,8 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class CorpusPipelineSpec extends SparkSpec {
 
-  private val byName =
-    graft.operators.PipelineQueries.all.map(q => q.name -> q).toMap
+  private val byName = PipelineQueries.all.map(q => q.name -> q).toMap
   private def run(name: String) = byName(name).fn(spark, sfDir)
 
   test("corpus assembly: dedup -> quality gates -> mixing, composed end to end") {
@@ -74,11 +74,9 @@ class CorpusPipelineSpec extends SparkSpec {
     try {
       val delta = byName("q_dedup_pipeline").fn(spark, dir).collect()
       Cleanup(spark)
-      spark.conf.set("graft.dedup.deltaHeadroom", "0")
-      val direct = byName("q_dedup_pipeline").fn(spark, dir).collect()
+      val direct = PipelineQueries.dedupPipeline(spark, dir, 0).collect()
       delta should contain theSameElementsInOrderAs direct
     } finally {
-      spark.conf.unset("graft.dedup.deltaHeadroom")
       Memo.release(spark); Cleanup(spark)
     }
   }
@@ -129,11 +127,10 @@ class CorpusPipelineSpec extends SparkSpec {
     try {
       docs.unionByName(dupRows)
         .write.parquet(dir.resolve("documents.parquet").toString)
-      val q = byName("q_dedup_pipeline")
-      val delta = q.fn(spark, dir.toString).collect()
+      val delta = byName("q_dedup_pipeline").fn(spark, dir.toString).collect()
       Cleanup(spark)
-      spark.conf.set("graft.dedup.deltaHeadroom", "0")
-      val direct = q.fn(spark, dir.toString).collect()
+      val direct = PipelineQueries.dedupPipeline(spark, dir.toString, 0)
+        .collect()
       Cleanup(spark)
       delta.length shouldBe docs.count() + copies.size
       delta should contain theSameElementsInOrderAs direct
@@ -143,7 +140,6 @@ class CorpusPipelineSpec extends SparkSpec {
         withClue(s"copy $dup of $src: ") { keep(dup) shouldBe keep(src) }
       }
     } finally {
-      spark.conf.unset("graft.dedup.deltaHeadroom")
       Memo.release(spark); Cleanup(spark)
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }

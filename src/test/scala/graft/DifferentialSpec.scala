@@ -164,23 +164,23 @@ class DifferentialSpec extends SparkSpec {
     import graft.operators.PipelineQueries
     def verdicts(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def generates(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+      }
 
     // boundary regime (τ=0.4, natural corpus, n=500 — measured exact for
-    // the dense LSH point): force the dispatch to each side of the
-    // crossover via the override conf and compare verdicts
+    // the dense LSH point): the two sides of the crossover agree, and
+    // the dispatch at n=500 plans the brute side (a θ-join, no Generate)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         graft.functions.TextFns.toDoubleArray(col("embedding")).as("vec"))
     val n = emb.count()
-    val key = "graft.dedup.embedBruteMaxRows"
-    try {
-      spark.conf.set(key, (n + 1).toString) // below crossover → brute
-      val brute = verdicts(PipelineQueries.embedNearDup(spark, emb, n, 0.4))
-      spark.conf.set(key, "0")              // above crossover → LSH
-      val lsh = verdicts(PipelineQueries.embedNearDup(spark, emb, n, 0.4))
-      brute.nonEmpty shouldBe true
-      lsh shouldBe brute
-    } finally spark.conf.unset(key)
+    val brute = verdicts(PipelineQueries.embedNearDupBrute(emb, 0.4))
+    val lsh = verdicts(PipelineQueries.embedNearDupLsh(spark, emb, n, 0.4))
+    brute.nonEmpty shouldBe true
+    lsh shouldBe brute
+    generates(PipelineQueries.embedNearDup(spark, emb, n, 0.4)) shouldBe empty
 
     // production regime (τ=0.9, twin-augmented): the dispatch always
     // takes LSH (crossover 0); it must equal the brute baseline exactly
@@ -195,9 +195,7 @@ class DifferentialSpec extends SparkSpec {
     // O(n²) brute). The LSH plan signs into signature buckets (Generate
     // over the sigs array); the brute plan is a θ-join with no Generate.
     val hiN0 = PipelineQueries.embedNearDup(spark, aug, 0L, 0.9)
-    hiN0.queryExecution.optimizedPlan.collect {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-    } should not be empty
+    generates(hiN0) should not be empty
     verdicts(hiN0) shouldBe hiBrute
   }
 }

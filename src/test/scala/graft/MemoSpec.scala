@@ -237,16 +237,19 @@ class MemoSpec extends SparkSpec {
     Memo.harnessBudget(8 * gib) shouldBe 4 * gib
   }
 
-  test("unbounded memo warns once per context at the first storage-pool crossing") {
-    Memo.resetWarnLatch()
+  test("memo budget is the conf when it parses, else the storage-pool default") {
+    val key = "graft.memo.maxPinnedBytes"
+    val dflt = Memo.harnessBudget(Memo.storagePool(spark))
+    dflt should be > 0L
     try {
-      // below half the nominal pool: no warning, latch stays open
-      Memo.warnIfUnbounded(spark, 1L) shouldBe false
-      // first crossing warns (heap is finite, so 2^62 is past any pool)
-      Memo.warnIfUnbounded(spark, Long.MaxValue / 2) shouldBe true
-      // latched: later crossings in the same context stay silent
-      Memo.warnIfUnbounded(spark, Long.MaxValue / 2) shouldBe false
-    } finally Memo.resetWarnLatch()
+      spark.conf.unset(key)
+      Memo.budget(spark) shouldBe dflt
+      spark.conf.set(key, "12345")
+      Memo.budget(spark) shouldBe 12345L
+      // a malformed value does not turn the budget off
+      spark.conf.set(key, "12x")
+      Memo.budget(spark) shouldBe dflt
+    } finally spark.conf.unset(key)
   }
 
   test("evicting a composite entry spares blocks a surviving entry co-pins") {
@@ -300,13 +303,13 @@ class MemoSpec extends SparkSpec {
 
   test("mid-suite eviction changes no declared result (budget = 1 byte)") {
     // The round-11 probe proved the unbudgeted sf10 pinned set exceeds
-    // the storage pool, so production sets graft.memo.maxPinnedBytes —
-    // under which every memo-sharing query may find its shared build
-    // EVICTED by the previous query's enforceBudget pass and must
-    // rebuild. Pin that the rebuild path is invisible in results: a
-    // 1-byte budget (evict everything except the entry in use, after
-    // every build) over a cross-family memo-sharing set reproduces the
-    // unbudgeted results row for row, with evictions actually firing.
+    // the storage pool, so the memo always runs under a budget — under
+    // which every memo-sharing query may find its shared build EVICTED
+    // by the previous query's enforceBudget pass and must rebuild. Pin
+    // that the rebuild path is invisible in results: a 1-byte budget
+    // (evict everything except the entry in use, after every build)
+    // over a cross-family memo-sharing set reproduces the default-budget
+    // results row for row, with evictions actually firing.
     Memo.clear(); Cleanup(spark)
     val names = Seq("q_pagerank", "q_ppr", "q_label_prop", "q_modularity",
       "q_dedup_ngram", "q_dedup_minhash", "q_tfidf")

@@ -60,25 +60,23 @@ class PipelineOpsSpec extends SparkSpec {
     // candidate frame WITH attached vector payloads. At the 100× synth
     // (dup groups of 100 → ~40M candidates) those wide sorts spilled
     // >60 GB and died on disk; see SCALE.md round-11. Pin the fix: under
-    // the default graft.dedup.broadcastVecBytes budget (round-12: byte
-    // estimate, rows × 536 B, vs the old raw row cap) the executed plan
-    // carries the two map-side hash joins, and forcing the
-    // graft.dedup.broadcastVecRows override to 0 (the over-budget
-    // cluster regime) falls back to the shuffle join with a
-    // bit-identical verdict frame.
+    // the default graft.graph.broadcastStateBytes budget (rows × 536 B
+    // per side) the executed plan carries the two map-side hash joins,
+    // and a 0-byte budget (the over-budget cluster regime) falls back to
+    // the shuffle join with a bit-identical verdict frame.
     val lshDf = byName("q_dedup_embed_lsh_hi").fn(spark, sfDir)
     val expected = lshDf.collect()
     val planStr = lshDf.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     val bhj = "BroadcastHashJoin".r.findAllIn(planStr).size
     withClue(s"plan:\n$planStr") { bhj should be >= 2 }
-    // simulate the >4M-vector cluster regime: hint off AND Catalyst's
+    // simulate the >2M-vector cluster regime: hint off AND Catalyst's
     // own stats-threshold broadcast off (localCheckpoint preserves
     // origin stats, so at test scale the planner would still broadcast
     // a no-hint join on its own — at sf10 the estimate exceeded the
     // threshold, which is exactly how the SMJ cliff arose)
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("graft.dedup.broadcastVecRows", "0")
+    spark.conf.set("graft.graph.broadcastStateBytes", "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val shuffled = byName("q_dedup_embed_lsh_hi").fn(spark, sfDir)
@@ -86,30 +84,13 @@ class PipelineOpsSpec extends SparkSpec {
         expected.map(_.toSeq).toSeq
       // AQE may still upgrade small shuffles at runtime; the dispatch
       // decision under test is the pre-AQE plan
-      val shufPlan = shuffled.queryExecution.executedPlan.toString
-      val initial = shufPlan.split("== Initial Plan ==").last
-      withClue(s"initial plan:\n$initial") {
-        initial should include("SortMergeJoin")
-      }
-    } finally {
-      spark.conf.unset("graft.dedup.broadcastVecRows")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-    }
-    // the byte budget dispatches the same way without the row override:
-    // a 0-byte budget must also plan the shuffle join (pre-AQE)
-    spark.conf.set("graft.dedup.broadcastVecBytes", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val byBytes = byName("q_dedup_embed_lsh_hi").fn(spark, sfDir)
-      byBytes.collect().map(_.toSeq).toSeq shouldBe
-        expected.map(_.toSeq).toSeq
-      val initial = byBytes.queryExecution.executedPlan.toString
+      val initial = shuffled.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").last
       withClue(s"initial plan:\n$initial") {
         initial should include("SortMergeJoin")
       }
     } finally {
-      spark.conf.unset("graft.dedup.broadcastVecBytes")
+      spark.conf.unset("graft.graph.broadcastStateBytes")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
     }
     Cleanup(spark)
