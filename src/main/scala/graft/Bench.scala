@@ -119,14 +119,9 @@ object Bench {
     // scale with DATA, not cores: at the sf100 probe the fixed 32 was
     // the binding constraint (150 M-row self-join aggregation per task
     // → AGGREGATE_OUT_OF_MEMORY) — the knob every cluster deployment
-    // owns (SCALE.md session defaults), exposed here for big-sf probes
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // big-sf mode (SPARK_GRAFT_SETTLE=1): the scratch-settle discipline
-    // the round-13 sf100 probe proved out, generalized here so multi-query
-    // suites at big sf don't inherit the dead-shuffle ENOSPC cascade
-    // (Cleanup scaladoc). The two cleaner confs are STATIC — builder-time.
-    val settle = sys.env.get("SPARK_GRAFT_SETTLE").exists(_.trim == "1")
-    val spark = HarnessSession.builder(cpus, settle, shufParts).getOrCreate()
+    // owns (SCALE.md session defaults), exposed here for big-sf runs
+    val spark = HarnessSession.builder(cpus,
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up, counted in setup_sec and cold_e2e_sec: JVM/codegen/
     // scheduler spin-up otherwise lands on whichever query happens to run

@@ -3,17 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the harness mains (Bench, Verify,
-  * PlanAudit, GraphScaleProbe, StreamBench) and of the test
+  * PlanAudit, StreamBench) and of the test
   * fixture, so each of them plans and runs under the same confs. Callers
   * chain only their own extras and call `getOrCreate()`.
   */
 object HarnessSession {
-  /** `local[cpus]` with `cpus` shuffle partitions. */
-  def builder(cpus: String, settle: Boolean): SparkSession.Builder =
-    builder(cpus, settle, cpus)
-
-  /** `local[cpus]` with `shufflePartitions` shuffle partitions (the big-sf
-    * knob: partitions scale with data, not cores), plus:
+  /** `local[cpus]` with `shufflePartitions` shuffle partitions, `cpus`
+    * when None (the big-sf knob: partitions scale with data, not cores),
+    * plus:
     *  - session time zone UTC: `Tables.normalizeTs`'s NTZ→TIMESTAMP cast
     *    is only identity under UTC, so every main measures and checks the
     *    same instants whatever the host zone;
@@ -28,16 +25,14 @@ object HarnessSession {
     *    on the TWCNB trio;
     *  - `SPARK_GRAFT_MEMO_BUDGET` (bytes), when set, as
     *    `graft.memo.maxPinnedBytes`; unset, [[Memo]] budgets
-    *    [[Memo.harnessBudget]] of the storage pool;
-    *  - with `settle`, the static cleaner confs of big-sf mode
-    *    ([[Cleanup.settleBuilderConfs]]), which also make [[Cleanup]]
-    *    settle the scratch disks at each query boundary.
+    *    [[Memo.harnessBudget]] of the storage pool.
     */
-  def builder(cpus: String, settle: Boolean,
-      shufflePartitions: String): SparkSession.Builder = {
+  def builder(cpus: String,
+      shufflePartitions: Option[String] = None): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions",
+        shufflePartitions.getOrElse(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1024")
@@ -45,6 +40,6 @@ object HarnessSession {
         "true")
     sys.env.get("SPARK_GRAFT_MEMO_BUDGET")
       .foreach(v => b.config("graft.memo.maxPinnedBytes", v))
-    if (settle) Cleanup.settleBuilderConfs(b) else b
+    b
   }
 }

@@ -13,7 +13,7 @@ object PlanAudit {
     // plans at the bench's shape: local[$SPARK_GRAFT_CPUS] (default 32)
     // with as many shuffle partitions
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = HarnessSession.builder(cpus, settle = false).getOrCreate()
+    val spark = HarnessSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (d, args) = args0.toSeq match {
       case Seq("-d", dir, rest @ _*) => (dir, rest.toArray)

@@ -56,7 +56,7 @@ object StreamBench {
     val split = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLIT", "0.7").toDouble
     val pipelines = sys.env.getOrElse("SPARK_GRAFT_STREAM_PIPELINES",
       "monitor,sessionize,ingest").split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = HarnessSession.builder(cpus, settle = false).getOrCreate()
+    val spark = HarnessSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -81,7 +81,7 @@ object StreamBench {
     // listener events arrive asynchronously on the bus: after a stop,
     // wait until the batch log stops growing (500 ms quiet, 10 s cap)
     // before reading it, or trailing micro-batches silently undercount
-    def settleBatches(): Seq[B] = {
+    def quietBatches(): Seq[B] = {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var last = -1
       var quietSince = System.nanoTime()
@@ -135,12 +135,12 @@ object StreamBench {
         q.stop()
         q.awaitTermination()
         val wall = (System.nanoTime() - t0) / 1e9
-        (wall, settleBatches().filter(_.rows > 0).map(_.rows).sum)
+        (wall, quietBatches().filter(_.rows > 0).map(_.rows).sum)
       }
 
       batches.synchronized(batches.clear())
       val (wallA, rowsA) = drain()
-      val bsA = settleBatches().filter(_.rows > 0).sortBy(_.id)
+      val bsA = quietBatches().filter(_.rows > 0).sortBy(_.id)
       // the "kill": the query object is gone; only the checkpoint
       // survives. Land the backlog, then measure restart-to-drained —
       // state reload + backlog processing, the production recovery path.
@@ -148,7 +148,7 @@ object StreamBench {
       batches.synchronized(batches.clear())
       val (wallB, rowsTotal) = drain()
       val rowsB = rowsTotal // phase-B listener log was cleared: only new rows
-      val bsB = settleBatches().filter(_.rows > 0).sortBy(_.id)
+      val bsB = quietBatches().filter(_.rows > 0).sortBy(_.id)
 
       val bs = bsA ++ bsB
       val durs = bs.map(_.durMs).sorted

@@ -1,27 +1,31 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`).
+  *
+  * Run: `sbt "runMain graft.Verify <sfDir> <outDir> [query ...]"`. Names
+  * given after the two directories select a subset through
+  * [[Bench.selection]]; an unknown name exits with status 2 before the
+  * session starts. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional extra args: restrict to the named queries (local iteration;
-    // the driver always runs the full set)
-    val only = args.drop(2).toSet
+    val names = args.drop(2).toSeq
+    val selected = Bench.selection(SparkEntry.queries, names) match {
+      case Right(sel) => sel
+      case Left(unknown) =>
+        System.err.println(
+          s"[verify] unknown queries: ${unknown.mkString(", ")}")
+        sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shuffle partitions scale with DATA at big sf, same knob as Bench
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // big-sf mode (SPARK_GRAFT_SETTLE=1): scratch-settle at query
-    // boundaries so a big-sf oracle sweep doesn't ENOSPC-cascade on dead
-    // shuffle files (Cleanup scaladoc; the cleaner confs are static)
-    val settle = sys.env.get("SPARK_GRAFT_SETTLE").exists(_.trim == "1")
-    val spark = HarnessSession.builder(cpus, settle, shufParts).getOrCreate()
+    val spark = HarnessSession.builder(cpus,
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>

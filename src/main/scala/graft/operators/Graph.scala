@@ -223,45 +223,16 @@ object Graph {
       d: String): (DataFrame, DataFrame, Long) =
     graft.Memo(s, s"graph.edgeFrames:$d", d) { edgeFramesBuild(s, d) }
 
-  /** The graph builders' fact-table sources, dispatched on the
-    * pre-bucketed-layout confs (round-13 verdict ask #2). A cluster
-    * deployment that runs graph analytics repeatedly pre-buckets the
-    * fact tables ONCE (`bucketBy(N, key).sortBy(key)`) and points
-    * `graft.graph.lineitemBucketTable` / `graft.graph.ordersBucketTable`
-    * at them: the orders⋈lineitem edge join consumes the buckets
-    * co-keyed (no exchange on either 600 M-row side), and the basket
-    * aggregate consumes bucket-local slices — each task aggregates its
-    * own pre-sorted bucket instead of one global hash aggregation
-    * holding millions of rows per task; with
-    * `spark.sql.execution.useObjectHashAggregateExec=false` the
-    * sorted-bucket aggregate streams one basket at a time (O(basket)
-    * memory — the "partition-sized slices" mechanism that dissolves the
-    * sf100 single-box basket-aggregate ceiling; measured in
-    * [[graft.GraphScaleProbe]], SCALE.md round-13). The bucket tables
-    * must carry (l_orderkey, l_partkey, l_suppkey) / (o_orderkey,
-    * o_custkey) derived from the SAME data directory — the memo still
-    * fingerprints the directory, so a regenerated dir rebuilds. */
-  private def lineitemSource(s: org.apache.spark.sql.SparkSession,
-      d: String, cols: String*): DataFrame =
-    s.conf.getOption("graft.graph.lineitemBucketTable")
-      .map(t => s.table(t).select(cols.map(col): _*))
-      .getOrElse(Tables.lineitem(s, d).select(cols.map(col): _*))
-
-  private def ordersSource(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    s.conf.getOption("graft.graph.ordersBucketTable")
-      .map(t => s.table(t).select(col("o_orderkey"), col("o_custkey")))
-      .getOrElse(Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey")))
-
   private def edgeFramesBuild(s: org.apache.spark.sql.SparkSession,
       d: String): (DataFrame, DataFrame, Long) = {
     // pair-packed distinct (the [[coOccurEdges]] discipline): the
     // join's raw (cust, supp) stream is ~900 M rows at sf100 and the
     // distinct is its only wide exchange — one 8-byte key per row
     // instead of two columns (custkeys and suppkeys are both < 2³²)
-    val edges0 = ordersSource(s, d)
-      .join(lineitemSource(s, d, "l_orderkey", "l_suppkey"),
+    val edges0 = Tables.orders(s, d)
+      .select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(packPair(col("o_custkey"), col("l_suppkey")).as("pk"))
       .distinct()
@@ -598,7 +569,7 @@ object Graph {
     * single (p1, p2) exchange either way. */
   private def coOccurPairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    lineitemSource(s, d, "l_orderkey", "l_partkey")
+    Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
       .groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
       .select(col("ps"), posexplode(col("ps")))

@@ -75,7 +75,7 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = HarnessSession.builder(cpus = "4", settle = false)
+    val s = HarnessSession.builder(cpus = "4")
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

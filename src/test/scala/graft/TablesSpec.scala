@@ -266,18 +266,22 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  // The sf1 scale evidence comes from tools/make_sf.py synth output — it
-  // must keep the DRIVER testdata's physical encodings (most critically
-  // events.ts: the synth writes what it read, but a rewrite of make_sf.py
-  // could silently re-encode and diverge from what the canary above
-  // pins). Canceled (not passed) when the synth dir is absent, so a
-  // plain `sbt test` run stays meaningful without the 10× generation.
-  test("canary: synth-sf1 output (tools/make_sf.py) keeps the driver testdata schemas") {
-    // default = the round-13 canonical granular-layout synth dir (the
-    // pre-r12 single-row-group /tmp/sf1 is deleted, SCALE.md round-13)
-    val dir = sys.env.getOrElse("GRAFT_SYNTH_DIR", "/tmp/sf1n")
-    assume(new java.io.File(s"$dir/events.parquet").exists(),
-      s"synth dir $dir absent — python3 tools/make_sf.py /root/testdata/sf0.1 $dir 10")
-    assertCanary("synth-sf1", dir)
+  // The larger-sf scale evidence comes from tools/make_sf.py synth output
+  // — it must keep the DRIVER testdata's physical encodings (most
+  // critically events.ts: the synth writes what it read, but a rewrite of
+  // make_sf.py could silently re-encode and diverge from what the canary
+  // above pins). GRAFT_SYNTH_DIR points the check at an existing synth
+  // dir (e.g. a `make_sf.py <sf0.1 dir> <out> 10` output); unset, the
+  // test synthesizes sf0.001 × 2 into a temp dir (~1 s).
+  test("canary: tools/make_sf.py output keeps the driver testdata schemas") {
+    val dir = sys.env.getOrElse("GRAFT_SYNTH_DIR", {
+      val out = tmp("graft-synth")
+      val cmd = Seq("python3", "tools/make_sf.py", sfDir, out, "2")
+      withClue(s"${cmd.mkString(" ")} failed: ") {
+        scala.sys.process.Process(cmd).! shouldBe 0
+      }
+      out
+    })
+    assertCanary("synth", dir)
   }
 }

@@ -5,6 +5,8 @@ Usage: check.py <sfDir> <outDir> [query ...]
 Reads <outDir>/oracle_sql.json, runs each SQL against the parquet tables
 in <sfDir> via DuckDB, loads the Spark result parquet from <outDir>/<name>,
 sorts columns by name, and compares row count / schema / exact values.
+Named queries that oracle_sql.json does not hold are listed, and the check
+exits 1: a misspelled name must not pass as "0 ok, 0 bad".
 """
 import sys, json, glob
 import duckdb
@@ -23,6 +25,9 @@ def main():
         con.execute(
             f"CREATE VIEW {n} AS SELECT * FROM read_parquet('{sf}/{n}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    unmatched = sorted(only - set(oracle))
+    for name in unmatched:
+        print(f"UNKNOWN {name}: not in oracle_sql.json")
     n_ok = n_bad = 0
     for name in sorted(oracle):
         if only and name not in only:
@@ -79,7 +84,7 @@ def main():
             print(f"OK {name} ({len(odf)} rows){note}")
             n_ok += 1
     print(f"== {n_ok} ok, {n_bad} bad ==")
-    sys.exit(1 if n_bad else 0)
+    sys.exit(1 if n_bad or unmatched else 0)
 
 if __name__ == "__main__":
     main()
