@@ -24,12 +24,12 @@ import org.apache.spark.sql.SparkSession
   * (true)) so the memo hands later consumers a LogicalRDD leaf, not a
   * lazy plan that would re-execute anyway. The harness's per-query
   * [[Cleanup]] unpersists every persistent RDD after each query
-  * (round-2 advisor hygiene) — the memo therefore records which RDD ids
-  * its builds persisted and [[Cleanup]] spares exactly those, so shared
-  * frames survive query boundaries while per-query transients are still
-  * freed. Entries from stopped sessions are purged on every access; keys
-  * are reference-identity on the session, so concurrent test suites with
-  * their own sessions never collide.
+  * (round-2 advisor hygiene) — the memo therefore records which
+  * checkpoint RDDs each value reads and [[Cleanup]] spares exactly
+  * those, so shared frames survive query boundaries while per-query
+  * transients are still freed. Entries from stopped sessions are purged
+  * on every access; keys are reference-identity on the session, so
+  * concurrent test suites with their own sessions never collide.
   *
   * Staleness contract: entries built over a testdata directory carry a
   * cheap driver-side FINGERPRINT of that directory (an order-free XOR
@@ -43,15 +43,20 @@ import org.apache.spark.sql.SparkSession
   * re-stamps at least one file, not a byte-identical rewrite with
   * preserved names/sizes/mtimes, which no cheap listing can see.
   *
-  * Footprint contract: `graft.memo.maxPinnedBytes` bounds the pinned
-  * working set; unset or malformed, the budget is [[harnessBudget]] of
-  * the session's nominal storage pool, so no session runs unbounded.
+  * Footprint contract: each entry pins exactly the checkpoint RDDs its
+  * value's frames read (their LogicalRDD leaves, whichever build made
+  * them), as the reference's `drm.checkpoint()` pins the blocks of the
+  * matrix it returns and nothing else: composite entries co-pin only
+  * what they read, and a build frees what else it persisted unpinned.
+  * `graft.memo.maxPinnedBytes` bounds the pinned working set; unset or
+  * malformed, the budget is [[harnessBudget]] of the session's nominal
+  * storage pool, so no session runs unbounded.
   * Exceeding it evicts entries COST-AWARE (their blocks unpersisted; a
-  * later call rebuilds), so an embedding application streaming many
-  * datasets through one session cannot grow executor storage without
-  * bound.
+  * later call rebuilds) until the pinned bytes fit, so an embedding
+  * application streaming many datasets through one session cannot grow
+  * executor storage without bound.
   * Victim order is greedy bytes-per-rebuild-second, not LRU: each
-  * candidate scores (freeable bytes it alone pins) / (its measured
+  * candidate scores (freeable bytes no other entry pins) / (its measured
   * build seconds), highest first, recency as tiebreak — the round-12
   * sf10 run showed pure recency evicting 20-40 s graph builds to keep
   * cheap frames (q_label_prop 0.13 → 42.4 s rebuild storms). Eviction
@@ -67,7 +72,8 @@ import org.apache.spark.sql.SparkSession
   * Concurrency contract: builds of any keys from any threads are
   * serialised by one JVM-wide lock (Spark allows one active context per
   * JVM), so a build's context-global persistent-RDD diff holds only its
-  * own blocks and its eager transient sweep is always safe; two threads
+  * own blocks and its eager transient sweep — which spares every live
+  * entry's pins, nested builds' included — is always safe; two threads
   * racing one key build it once. [[Cleanup]]'s sweep must NOT run
   * concurrently with a build: it would free in-flight, not-yet-registered
   * checkpoints. Pin-sparing ([[pinnedRddIds]]) matches on the shared
@@ -250,24 +256,25 @@ object Memo {
       }
     }
     val added = s.sparkContext.getPersistentRDDs.keySet.diff(before).toSet
-    // Pin ONLY what later consumers can actually read: the checkpoint
-    // RDDs reachable from the returned frames' plans (LogicalRDD
-    // leaves), plus anything a NESTED memo build registered for itself.
-    // Everything else the build persisted is a dead per-round
-    // intermediate (old k-core/BFS/LPA round states, the rare-shingle
-    // inverted lists behind the pair frame) — free it NOW, or a full
-    // harness run accumulates orphaned MEMORY_AND_DISK blocks for the
-    // session lifetime (the round-2 problem Cleanup exists to prevent).
-    // If the value's frames cannot be extracted (unknown shape), pin
-    // everything — over-pinning is safe, freeing a live block is not.
+    // Pin exactly what the value reads: the checkpoint RDDs of its
+    // frames' plans (LogicalRDD leaves), whichever build created them —
+    // this one, a nested memo build, or an entry built earlier and hit
+    // here. Everything else this build persisted and no live entry pins
+    // is a dead per-round intermediate (old k-core/BFS/LPA round states,
+    // the rare-shingle inverted lists behind the pair frame) — free it
+    // NOW, or a full harness run accumulates orphaned MEMORY_AND_DISK
+    // blocks for the session lifetime (the round-2 problem Cleanup
+    // exists to prevent). If the value's frames cannot be extracted
+    // (unknown shape), pin what the build added — over-pinning is safe,
+    // freeing a live block is not.
     val vFrames = framesOf(v)
-    val keep: Set[Int] =
+    val pins: Set[Int] =
       if (vFrames.isEmpty) added
-      else vFrames.flatMap(reachableRddIds).toSet ++ pinnedRddIds(s)
+      else vFrames.flatMap(checkpointRdds).map(_.id).toSet
     val persisted = s.sparkContext.getPersistentRDDs
-    added.diff(keep).foreach(id =>
+    (added -- (pins ++ pinnedRddIds(s))).foreach(id =>
       persisted.get(id).foreach(_.unpersist(blocking = false)))
-    val entry = Entry(v, added.intersect(keep), fp, buildNanos)
+    val entry = Entry(v, pins, fp, buildNanos)
     entry.lastUse = useTick.incrementAndGet()
     m.put(k, entry)
     touched.add(k)
@@ -288,88 +295,42 @@ object Memo {
   private def enforceBudget(s: SparkSession,
       justUsed: (SparkSession, String)): Unit = {
     val cap = budget(s)
-    val bytes = pinnedBytes(s)
-    if (bytes <= cap) return
-    // One storage-info scan + one pin-count pass up front, then pure
-    // arithmetic per victim: a co-pinned block's bytes come off the
-    // running total only when its LAST pinning entry is evicted —
-    // mirroring exactly when releaseEntry's remove-then-diff actually
-    // unpersists it. releaseEntry itself is untouched (the co-pin
-    // safety invariant MemoSpec pins); the maps only drive the stop
-    // condition, so eviction costs O(entries + pinned RDDs) instead of
-    // a full getRDDStorageInfo walk per victim.
+    if (pinnedBytes(s) <= cap) return
     val sizeOf: Map[Int, Long] = s.sparkContext.getRDDStorageInfo
       .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    val pins = scala.collection.mutable.Map.empty[Int, Int]
-    locally {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1.sparkContext eq s.sparkContext)
-          e.getValue.rddIds.foreach(id =>
-            pins(id) = pins.getOrElse(id, 0) + 1)
-      }
-    }
-    // same-context entries, sparing justUsed and everything touched
-    // since the last query boundary (a live plan may still reference
-    // those frames — see `touched`). When every entry is in-flight the
-    // budget stays exceeded until the boundary, the same deliberate
-    // trade as the larger-than-budget single entry.
+    val entries = sameContext(s)
+    val pinCount: Map[Int, Int] =
+      entries.flatMap(_._2.rddIds).groupMapReduce(identity)(_ => 1)(_ + _)
+    // Victims: same-context entries, sparing justUsed and everything
+    // touched since the last query boundary (a live plan may still
+    // reference those frames — see `touched`). When every entry is
+    // in-flight the budget stays exceeded until the boundary, the same
+    // deliberate trade as the larger-than-budget single entry.
     //
     // Victim ORDER is cost-aware, not LRU (round-12 ask #5: the sf10
     // budgeted run showed pure recency evicting 20-40 s graph builds to
     // keep cheap frames — q_label_prop 0.13 → 42.4 s rebuild storms).
     // Greedy knapsack: evict the entry freeing the most bytes per
     // rebuild-second first, where the bytes are the entry's FREEABLE
-    // bytes (blocks it alone pins — a co-pinned dependency frees
-    // nothing while its pinner survives, so it scores 0 and naturally
-    // sorts last) and the cost is its measured build time. Scores are
-    // computed once against the pre-eviction pin counts (an entry whose
-    // blocks become sole-pinned mid-pass keeps its stale score — a
-    // bounded approximation, not a safety issue: the accounting loop
-    // below still frees exactly the right bytes). lastUse breaks ties
-    // (equal-score entries evict least-recently-used first).
-    val victims = {
-      val it = m.entrySet().iterator()
-      var acc = List.empty[((SparkSession, String), Entry)]
-      while (it.hasNext) {
-        val e = it.next()
-        if ((e.getKey._1.sparkContext eq s.sparkContext) &&
-            e.getKey != justUsed && !touched.contains(e.getKey))
-          acc = (e.getKey -> e.getValue) :: acc
-      }
-      def freeable(e: Entry): Long = e.rddIds.iterator
-        .filter(id => pins.getOrElse(id, 0) == 1)
-        .map(id => sizeOf.getOrElse(id, 0L)).sum
-      def score(e: Entry): Double =
-        freeable(e) / math.max(e.buildNanos / 1e9, 1e-3)
-      acc.map { case (k, e) => (k, e, score(e)) }
-        .sortBy { case (_, e, sc) => (-sc, e.lastUse) }
-        .map { case (k, e, _) => (k, e) }
-    }
-    var remaining = bytes
-    val vi = victims.iterator
-    while (remaining > cap && vi.hasNext) {
-      val (vk, ve) = vi.next()
+    // bytes (blocks no other entry pins — a frame another entry reads
+    // frees nothing while that reader survives) and the cost is its
+    // measured build time. Scores are computed once, before the first
+    // eviction; lastUse breaks ties (least-recently-used first).
+    def score(e: Entry): Double =
+      e.rddIds.iterator.filter(pinCount(_) == 1)
+        .map(sizeOf.getOrElse(_, 0L)).sum /
+        math.max(e.buildNanos / 1e9, 1e-3)
+    val victims = entries
+      .filter { case (k, _) => k != justUsed && !touched.contains(k) }
+      .sortBy { case (_, e) => (-score(e), e.lastUse) }
+      .iterator
+    while (pinnedBytes(s) > cap && victims.hasNext) {
+      val (vk, ve) = victims.next()
       releaseEntry(s, vk, ve, blocking = true)
-      val beforeBytes = remaining
-      // the victim's own block bytes, logged separately from the
-      // accounting delta: a victim whose blocks are co-pinned by
-      // survivors frees ~0 accounted bytes even though the eviction
-      // happened — the two figures disambiguate that in budgeted logs
-      val ownBytes = ve.rddIds.iterator
-        .map(id => sizeOf.getOrElse(id, 0L)).sum
-      ve.rddIds.foreach { id =>
-        val c = pins.getOrElse(id, 0) - 1
-        pins(id) = c
-        if (c == 0) remaining -= sizeOf.getOrElse(id, 0L)
-      }
       evictionTick.incrementAndGet()
-      log.info(s"graft.Memo evicted '${vk._2}' (cost-aware: ~$ownBytes " +
-        s"block bytes over ${math.rint(ve.buildNanos / 1e7) / 100} s " +
-        s"build; ~${beforeBytes - remaining} pinned bytes freed net of " +
-        s"co-pins) to meet graft.memo.maxPinnedBytes=$cap; a " +
-        s"later call rebuilds.")
+      log.info(s"graft.Memo evicted '${vk._2}' (cost-aware: " +
+        s"${math.rint(ve.buildNanos / 1e7) / 100} s build) to meet " +
+        s"graft.memo.maxPinnedBytes=$cap; a later call rebuilds.")
     }
   }
 
@@ -435,15 +396,14 @@ object Memo {
       .getOrElse(harnessBudget(storagePool(s)))
 
   /** Remove `e` from the memo and unpersist ONLY the blocks no surviving
-    * entry still pins. Composite entries CO-PIN their nested
-    * dependencies' checkpoints (a build's `added ∩ keep` includes ids a
-    * nested memo build registered for itself — lpaAssignment's entry
-    * carries weightedEdges' checkpoint id), so unpersisting a victim's
-    * full id set would destroy blocks a still-live sibling entry serves:
-    * its next hit would return a lineage-truncated frame whose blocks
-    * are gone. Remove-then-diff makes every release path (fingerprint
-    * invalidation, budget eviction, session release) safe against shared
-    * pins. */
+    * entry still pins. An entry whose value reads another entry's frames
+    * CO-PINS their checkpoints (lpaAssignment's entry carries
+    * weightedEdges' checkpoint id only if its value reads that frame),
+    * so unpersisting a victim's full id set would destroy blocks a
+    * still-live entry serves: its next hit would return a
+    * lineage-truncated frame whose blocks are gone. Remove-then-diff
+    * makes every release path (fingerprint invalidation, budget
+    * eviction, session release) safe against shared pins. */
   private def releaseEntry(s: SparkSession, k: (SparkSession, String),
       e: Entry, blocking: Boolean): Unit = {
     m.remove(k, e)
@@ -454,7 +414,7 @@ object Memo {
   }
 
   /** The DataFrames inside a memo value (frame, or tuple of frames and
-    * scalars) — the roots for live-block reachability. */
+    * scalars) — the roots of what the entry pins. */
   private def framesOf(v: AnyRef): Seq[org.apache.spark.sql.DataFrame] = {
     val parts = v match {
       case t: Product => t.productIterator.toSeq
@@ -463,27 +423,31 @@ object Memo {
     parts.collect { case d: org.apache.spark.sql.DataFrame => d }
   }
 
-  /** Checkpoint RDD ids a frame's plan reads (its LogicalRDD leaves). */
-  private def reachableRddIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+  /** The checkpoint RDDs a frame's plan reads (its LogicalRDD leaves):
+    * an eagerly localCheckpoint-ed frame's plan is a LogicalRDD over the
+    * materialized RDD, so these are exactly the blocks it needs. */
+  private[graft] def checkpointRdds(
+      df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
+  /** This context's entries, whichever session of it built them. */
+  private def sameContext(
+      s: SparkSession): List[((SparkSession, String), Entry)] = {
+    var acc = List.empty[((SparkSession, String), Entry)]
+    m.forEach((k, e) => if (k._1.sparkContext eq s.sparkContext)
+      acc = (k -> e) :: acc)
+    acc
+  }
 
   /** RDD ids [[Cleanup]] must NOT unpersist. Matched on the shared
     * SparkContext (not session identity): getPersistentRDDs — the set
     * Cleanup sweeps — is context-global, so a Cleanup driven from one
     * session must spare every sibling session's pins or it would
     * unpersist lineage-truncated checkpoints a sibling still reads. */
-  def pinnedRddIds(s: SparkSession): Set[Int] = {
-    val it = m.entrySet().iterator()
-    var acc = Set.empty[Int]
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext eq s.sparkContext)
-        acc = acc.union(e.getValue.rddIds)
-    }
-    acc
-  }
+  def pinnedRddIds(s: SparkSession): Set[Int] =
+    sameContext(s).iterator.flatMap(_._2.rddIds).toSet
 
   /** Total storage (memory + disk) currently held by this context's
     * pinned blocks — the memo's working-set figure. */
@@ -500,32 +464,15 @@ object Memo {
     * memo dies with the session). */
   def release(s: SparkSession): Unit = {
     touched.removeIf(_._1 eq s)
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        it.remove()
-        // diff AFTER removal: a sibling session of the same context may
-        // co-pin this entry's checkpoints (see releaseEntry)
-        val survivors = pinnedRddIds(s)
-        val persisted = s.sparkContext.getPersistentRDDs
-        e.getValue.rddIds.diff(survivors).foreach(id =>
-          persisted.get(id).foreach(_.unpersist(blocking = false)))
-      }
-    }
+    m.forEach((k, e) =>
+      if (k._1 eq s) releaseEntry(s, k, e, blocking = false))
   }
 
   /** Test hook: drop everything (e.g. between conf-flip scenarios) —
     * releases each live session's pins so the blocks are freed, not
     * stranded with no remaining handle. */
   private[graft] def clear(): Unit = {
-    val sessions = {
-      val it = m.keySet.iterator()
-      var acc = Set.empty[SparkSession]
-      while (it.hasNext) acc += it.next()._1
-      acc
-    }
-    sessions.foreach(s => if (!s.sparkContext.isStopped) release(s))
+    m.forEach((k, _) => if (!k._1.sparkContext.isStopped) release(k._1))
     m.clear()
   }
 }

@@ -48,8 +48,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    System.err.println(s"[verify] memo: pinned_bytes " +
-      s"${Memo.pinnedBytes(spark)} evictions ${Memo.evictions} " +
+    System.err.println(s"[verify] memo: budget_bytes ${Memo.budget(spark)} " +
+      s"pinned_bytes ${Memo.pinnedBytes(spark)} evictions ${Memo.evictions} " +
       s"rebuilds ${Memo.rebuilds} rebuild_sec ${Memo.rebuildSeconds}")
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Memo.checkpointRdds
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -48,17 +49,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** The persisted block handles of an eagerly localCheckpoint-ed frame:
-    * the checkpointed Dataset's plan is a `LogicalRDD` over the
-    * materialized RDD, so the handle comes straight out of the plan —
-    * freeing THESE blocks and only these. (The previous registry-diff
-    * around the checkpoint call could claim a concurrent caller's persist
-    * that landed in the diff window — advisor finding, round 3.) */
-  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
-
+  /** Frees the blocks of the checkpoints a loop made, taken straight out
+    * of their plans ([[graft.Memo.checkpointRdds]]) — THESE blocks and only
+    * these. (The previous registry-diff around the checkpoint call could
+    * claim a concurrent caller's persist that landed in the diff window —
+    * advisor finding, round 3.) */
   private def freeBlocks(rdds: Seq[RDD[_]]): Unit =
     rdds.foreach(_.unpersist(blocking = false))
 

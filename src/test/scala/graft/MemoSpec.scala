@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Lifecycle contract of the cross-query memo: build-once, pinned
@@ -295,6 +296,75 @@ class MemoSpec extends SparkSpec {
       // memoized lineage-truncated frame must still count
       (inner() eq innerF) shouldBe true
       innerF.count() shouldBe 200000L
+    } finally {
+      spark.conf.unset("graft.memo.maxPinnedBytes")
+      Memo.release(spark)
+    }
+  }
+
+  test("an entry that reads an earlier entry's frame keeps it readable after that entry is evicted") {
+    // outer's build HITS inner and returns a projection of inner's first
+    // frame, so outer's value reads a checkpoint another build made: outer
+    // must pin it itself, or evicting inner frees blocks outer still reads
+    Memo.clear(); Cleanup(spark)
+    def ck(n: Long, mul: Int) = spark.range(n)
+      .select(col("id"), (col("id") * mul).as("v")).localCheckpoint(true)
+    def inner() = Memo(spark, "memospec.reads.inner") {
+      (ck(1000, 3), ck(400000, 5))
+    }
+    try {
+      val (_, big) = inner()
+      Memo.queryBoundary(spark)
+      val readF = Memo(spark, "memospec.reads.outer") {
+        inner()._1.select(col("id"), (col("v") + 1).as("w"))
+      }
+      Memo.queryBoundary(spark)
+      // one eviction is needed; inner scores highest (its big frame is
+      // freeable and cheap to rebuild; outer frees nothing)
+      spark.conf.set("graft.memo.maxPinnedBytes",
+        (Memo.pinnedBytes(spark) - 1).toString)
+      val before = Memo.evictions
+      Memo(spark, "memospec.reads.other") { ck(1000, 7) }
+      (Memo.evictions - before) shouldBe 1L
+      // inner was the victim: the frame nobody else reads is freed...
+      val live = spark.sparkContext.getPersistentRDDs.keySet
+      Memo.checkpointRdds(big).foreach(r => live should not contain r.id)
+      // ...while outer survives and its value still reads inner's frame
+      (Memo[DataFrame](spark, "memospec.reads.outer") {
+        fail("outer was evicted")
+      } eq readF) shouldBe true
+      readF.count() shouldBe 1000L
+    } finally {
+      spark.conf.unset("graft.memo.maxPinnedBytes")
+      Memo.release(spark)
+    }
+  }
+
+  test("a nested build the value does not read is not co-pinned") {
+    // outer builds inner inside its own build but returns only its own
+    // small checkpoint: inner's big frame is pinned by inner alone, so a
+    // binding budget evicts inner (most freeable bytes per build-second)
+    // and keeps outer
+    Memo.clear(); Cleanup(spark)
+    def ck(n: Long, mul: Int) = spark.range(n)
+      .select(col("id"), (col("id") * mul).as("v")).localCheckpoint(true)
+    def inner() = Memo(spark, "memospec.nested.inner") { ck(400000, 5) }
+    try {
+      val outerF = Memo(spark, "memospec.nested.outer") {
+        inner()
+        ck(1000, 3)
+      }
+      val innerF = inner()
+      Memo.queryBoundary(spark)
+      spark.conf.set("graft.memo.maxPinnedBytes",
+        (Memo.pinnedBytes(spark) - 1).toString)
+      Memo(spark, "memospec.nested.other") { ck(1000, 7) }
+      (Memo[DataFrame](spark, "memospec.nested.outer") {
+        fail("outer was evicted")
+      } eq outerF) shouldBe true
+      outerF.count() shouldBe 1000L
+      val live = spark.sparkContext.getPersistentRDDs.keySet
+      Memo.checkpointRdds(innerF).foreach(r => live should not contain r.id)
     } finally {
       spark.conf.unset("graft.memo.maxPinnedBytes")
       Memo.release(spark)
