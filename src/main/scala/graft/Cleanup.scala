@@ -28,7 +28,7 @@ object Cleanup {
     spark.sharedState.cacheManager.clearCache()
     val keep = Memo.pinnedRddIds(spark)
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep.contains(id)) rdd.unpersist(blocking = false)
+      if (!keep.contains(id)) Memo.free(rdd, blocking = false)
     }
   }
 }

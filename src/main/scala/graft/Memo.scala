@@ -273,7 +273,7 @@ object Memo {
       else vFrames.flatMap(checkpointRdds).map(_.id).toSet
     val persisted = s.sparkContext.getPersistentRDDs
     (added -- (pins ++ pinnedRddIds(s))).foreach(id =>
-      persisted.get(id).foreach(_.unpersist(blocking = false)))
+      persisted.get(id).foreach(free(_, blocking = false)))
     val entry = Entry(v, pins, fp, buildNanos)
     entry.lastUse = useTick.incrementAndGet()
     m.put(k, entry)
@@ -410,8 +410,21 @@ object Memo {
     val survivors = pinnedRddIds(s)
     val persisted = s.sparkContext.getPersistentRDDs
     e.rddIds.diff(survivors).foreach(id =>
-      persisted.get(id).foreach(_.unpersist(blocking)))
+      persisted.get(id).foreach(free(_, blocking)))
   }
+
+  /** Frees `rdd`'s blocks — the one free path of Memo, [[Cleanup]] and
+    * the Dedup loop. A materialized local checkpoint goes straight to
+    * `SparkContext.unpersistRDD`, the call ContextCleaner makes for an
+    * unreachable RDD: `RDD.unpersist` would add only a WARN that its
+    * truncated lineage cannot be recomputed (the reason it is dead) and
+    * a reset of its storage level, and a freed checkpoint cannot be
+    * read either way. Any other RDD keeps `unpersist`. */
+  private[graft] def free(rdd: org.apache.spark.rdd.RDD[_],
+      blocking: Boolean): Unit =
+    if (rdd.isCheckpointed && rdd.getCheckpointFile.isEmpty)
+      org.apache.spark.sql.GraftSqlBridge.unpersistRDD(rdd, blocking)
+    else rdd.unpersist(blocking)
 
   /** The DataFrames inside a memo value (frame, or tuple of frames and
     * scalars) — the roots of what the entry pins. */

@@ -25,6 +25,17 @@ object TextFns {
       |           generate_subscripts(a, 1) AS pos FROM arr)
       |  WHERE length(term) > 0)""".stripMargin
 
+  /** Oracle CTE over [[tokSql]]'s `tokf`: per-(doc_id, term) counts. */
+  val tfSql: String =
+    "tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokf GROUP BY 1, 2)"
+
+  /** Oracle twin of [[shinglesOf]]: a SELECT over `tokf` (see [[tokSql]])
+    * of `keys` and the k-token gram `as` from lead() windows, null where
+    * the document has fewer than k tokens left. */
+  def gramSql(k: Int, keys: String = "doc_id, ", as: String = "sh"): String =
+    s"SELECT ${keys}term" + (1 until k).map(i => s" || ' ' || lead(term, $i) OVER w")
+      .mkString + s" AS $as\n  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos)"
+
   def normalize(text: Column): Column =
     regexp_replace(lower(text), "[^a-z0-9]+", " ")
 

@@ -35,21 +35,22 @@ object CooQueries {
       .orderBy("i", "j")
   }
 
+  /** The Gram oracle q_gram and q_udaf_gram share. */
+  private val gramOracle =
+    s"""WITH $cooXSql
+       |SELECT a.j AS i, b.j AS j, ROUND(SUM(a.v * b.v) / 10000.0, 6) AS v
+       |FROM cooX a JOIN cooX b ON a.i = b.i
+       |GROUP BY 1, 2 ORDER BY i, j""".stripMargin
+
   /** A3: Gram Xᵀ X (features quantized ×100 → /10⁴). Declared plan is the
     * one-pass [[GramAggregator]] form — one k-wide shuffle independent of
     * row count, the physical shape that survives 100 TB. The n·k² self-join
     * form ([[Coo.gram]]) stays as its differential baseline in
     * CooAlgebraSpec, not in the bench path. */
-  private val qGram = Q("q_gram",
-    s"""WITH $cooXSql
-       |SELECT a.j AS i, b.j AS j, ROUND(SUM(a.v * b.v) / 10000.0, 6) AS v
-       |FROM cooX a JOIN cooX b ON a.i = b.i
-       |GROUP BY 1, 2 ORDER BY i, j""".stripMargin) { (s, d) =>
+  private val qGram = Q("q_gram", gramOracle) { (s, d) =>
     s.createDataFrame(gramCells(s, d)).toDF("i", "j", "v").orderBy("i", "j")
   }
 
-  /** X16/A3: same Gram via the one-pass typed Aggregator (no n·k² shuffle;
-    * the 100 TB-scale physical form). Same oracle as q_gram. */
   /** One-pass Gram over the cooX design matrix: rows of X are assembled by
     * ONE hash aggregate on the row key (duplicate (orderkey, linenumber)
     * pairs exist in the testdata, and colliding COO cells sum into one
@@ -99,11 +100,7 @@ object CooQueries {
     * UDAF registration surface — `functions.udaf` + SQL text — rather
     * than the typed Column API q_gram uses. Same oracle; distinct API
     * path (SQL-callable, as a user of the library would register it). */
-  private val qUdafGram = Q("q_udaf_gram",
-    s"""WITH $cooXSql
-       |SELECT a.j AS i, b.j AS j, ROUND(SUM(a.v * b.v) / 10000.0, 6) AS v
-       |FROM cooX a JOIN cooX b ON a.i = b.i
-       |GROUP BY 1, 2 ORDER BY i, j""".stripMargin) { (s, d) =>
+  private val qUdafGram = Q("q_udaf_gram", gramOracle) { (s, d) =>
     import s.implicits._
     s.udf.register("graft_gram",
       org.apache.spark.sql.functions.udaf(new GramAggregator(4)))

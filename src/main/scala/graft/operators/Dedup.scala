@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Memo.checkpointRdds
+import graft.Memo.{checkpointRdds, free}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -55,7 +55,7 @@ object Dedup {
     * claim a concurrent caller's persist that landed in the diff window —
     * advisor finding, round 3.) */
   private def freeBlocks(rdds: Seq[RDD[_]]): Unit =
-    rdds.foreach(_.unpersist(blocking = false))
+    rdds.foreach(free(_, blocking = false))
 
   /** `edges`: (a, b) undirected candidate pairs (any orientation, dups
     * fine). Returns (node, comp) with comp = min node id of the

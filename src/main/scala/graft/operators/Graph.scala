@@ -253,6 +253,16 @@ object Graph {
     (e, deg, deg.count())
   }
 
+  /** Oracle twin of [[edgeFrames]]: the CTEs `e`(src, dst) and
+    * `deg`(src, outdeg) the rank oracles read. */
+  private val edgeFramesSql: String =
+    s"""ed0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
+       |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+       |e AS MATERIALIZED (SELECT c AS src, s + $supplierOffset AS dst FROM ed0
+       |      UNION ALL SELECT s + $supplierOffset, c FROM ed0),
+       |deg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
+       |  FROM e GROUP BY 1)""".stripMargin
+
   private[graft] def pagerankRanks(s: org.apache.spark.sql.SparkSession,
       d: String, nIters: Int): DataFrame = {
     val (e, deg, n) = edgeFrames(s, d)
@@ -365,12 +375,7 @@ object Graph {
     * ([[rankFixMaxRounds]] rounds — the cap deterministically binds, see
     * [[qPagerankFixpoint]]) share one CTE builder. */
   private def pagerankOracle(nIters: Int): String =
-    s"""WITH ed0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-       |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-       |e AS MATERIALIZED (SELECT c AS src, s + $supplierOffset AS dst FROM ed0
-       |      UNION ALL SELECT s + $supplierOffset, c FROM ed0),
-       |deg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-       |  FROM e GROUP BY 1),
+    s"""WITH $edgeFramesSql,
        |n AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM deg),
        |p0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE)/nn.n AS pr
        |  FROM deg CROSS JOIN n nn),
@@ -471,14 +476,7 @@ object Graph {
   /** The q_ppr oracle, parameterized by iteration count (shared by the
     * bounded and fixpoint declared forms — see [[pagerankOracle]]). */
   private def pprOracle(nIters: Int): String =
-    s"""WITH ed0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS c,
-       |    l.l_suppkey AS s
-       |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-       |e AS MATERIALIZED (SELECT c AS src, s + $supplierOffset AS dst
-       |      FROM ed0
-       |      UNION ALL SELECT s + $supplierOffset, c FROM ed0),
-       |deg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-       |  FROM e GROUP BY 1),
+    s"""WITH $edgeFramesSql,
        |ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM deg
        |  WHERE src < $supplierOffset AND src % 100 = 0),
        |p0 AS MATERIALIZED (SELECT src AS node,
@@ -561,6 +559,13 @@ object Graph {
       coOccurEdges(s, d).localCheckpoint(true, edgeCheckpointLevel(s, d))
     }
 
+  /** Oracle twin of [[coOccurEdges]]: the CTE `e`(p1 < p2) that
+    * q_triangles and the k-core oracles read. */
+  private val coOccurEdgesSql: String =
+    """e AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
+      |  FROM lineitem a JOIN lineitem b
+      |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)""".stripMargin
+
   /** The narrow pair generator shared by [[coOccurEdges]] and
     * [[coOccurWeighted]]: one lineitem scan → per-order sorted part
     * sets → codegen'd posexplode + slice successor pairs. One raw pair
@@ -611,6 +616,21 @@ object Graph {
         // edge-width: size-dispatched checkpoint (see coOccurEdgesCk)
         .localCheckpoint(true, edgeCheckpointLevel(s, d))
     }
+
+  /** Oracle twin of [[weightedEdges]]: the CTEs `po`, `pr` and the
+    * symmetrized `e`(s, t[, w]) — the weight column only when
+    * `weighted`. */
+  private def repeatEdgesSql(weighted: Boolean): String = {
+    val (wc, w) =
+      if (weighted) (", CAST(COUNT(*) AS BIGINT) AS w", ", w") else ("", "")
+    s"""po AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+       |  FROM lineitem),
+       |pr AS MATERIALIZED (SELECT a.p AS p1, b.p AS p2$wc
+       |  FROM po a JOIN po b ON a.o = b.o AND a.p < b.p
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $lpaMinW),
+       |e AS MATERIALIZED (SELECT p1 AS s, p2 AS t$w FROM pr
+       |      UNION ALL SELECT p2, p1$w FROM pr)""".stripMargin
+  }
 
   /** Per-node triangle counts over [[coOccurEdges]] by degree-ordered
     * orientation + edge iteration: orient each undirected edge from its
@@ -717,9 +737,7 @@ object Graph {
     * compare is engine-safe. Nodes outside any triangle still appear
     * (coefficient 0) via the degree frame's left join. */
   private val qTriangles = Q("q_triangles",
-    """WITH e AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-      |  FROM lineitem a JOIN lineitem b
-      |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    s"""WITH $coOccurEdgesSql,
       |deg AS MATERIALIZED (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM
       |  (SELECT p1 AS node FROM e UNION ALL SELECT p2 FROM e)
       |  GROUP BY node),
@@ -856,6 +874,24 @@ object Graph {
   private val kcoreK = 80
   private val kcoreRounds = 4
 
+  private def kcoreRoundSql(r: Int): String =
+    s"""k$r AS MATERIALIZED (SELECT s FROM ed${r - 1} GROUP BY s
+       |  HAVING COUNT(*) >= $kcoreK),
+       |ed$r AS MATERIALIZED (SELECT c.s, c.t FROM ed${r - 1} c
+       |  JOIN k$r a ON c.s = a.s JOIN k$r b ON c.t = b.s)""".stripMargin
+
+  /** The k-core oracle, parameterized by round count so q_kcore and
+    * q_kcore_fixpoint share one CTE builder (the [[pagerankOracle]]
+    * pattern): each round keeps the nodes of degree ≥ k and the edges
+    * between them. */
+  private def kcoreOracle(rounds: Int): String =
+    s"""WITH $coOccurEdgesSql,
+       |ed0 AS MATERIALIZED (SELECT p1 AS s, p2 AS t FROM e
+       |        UNION ALL SELECT p2, p1 FROM e),
+       |${(1 to rounds).map(kcoreRoundSql).mkString(",\n")}
+       |SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS deg
+       |FROM ed$rounds GROUP BY s ORDER BY node""".stripMargin
+
   /** X17: bounded-round k-core peeling (k = 80, 4 rounds — a real
     * cascade on this corpus: sf0.01 survivors 1903 → 1878 → 1865 →
     * 1858 of 2000) over the part co-occurrence graph — the density
@@ -864,22 +900,7 @@ object Graph {
     * discipline. Output: surviving nodes with their in-core degree,
     * exact integers. The DuckDB oracle unrolls the same rounds as
     * CTEs. */
-  private val qKcore = Q("q_kcore", {
-    val peels = (1 to kcoreRounds).map(r =>
-      s"""k$r AS MATERIALIZED (SELECT s FROM ed${r - 1} GROUP BY s
-         |  HAVING COUNT(*) >= $kcoreK),
-         |ed$r AS MATERIALIZED (SELECT c.s, c.t FROM ed${r - 1} c
-         |  JOIN k$r a ON c.s = a.s JOIN k$r b ON c.t = b.s)""".stripMargin)
-      .mkString(",\n")
-    s"""WITH e AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-       |  FROM lineitem a JOIN lineitem b
-       |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |ed0 AS MATERIALIZED (SELECT p1 AS s, p2 AS t FROM e
-       |        UNION ALL SELECT p2, p1 FROM e),
-       |$peels
-       |SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS deg
-       |FROM ed$kcoreRounds GROUP BY s ORDER BY node""".stripMargin
-  }) { (s, d) =>
+  private val qKcore = Q("q_kcore", kcoreOracle(kcoreRounds)) { (s, d) =>
     // bounded form = the round-4 snapshot of the shared peel run
     kCoreShared(s, d)._1.orderBy("node")
   }
@@ -897,22 +918,8 @@ object Graph {
     * degree < k remains. The oracle unrolls the cap's worth of rounds;
     * rounds after convergence are identity, so unroll == fixpoint
     * (differentially pinned in GraphFixpointSpec). */
-  private val qKcoreFixpoint = Q("q_kcore_fixpoint", {
-    val peels = (1 to kcoreFixMaxRounds).map(r =>
-      s"""k$r AS MATERIALIZED (SELECT s FROM ed${r - 1} GROUP BY s
-         |  HAVING COUNT(*) >= $kcoreK),
-         |ed$r AS MATERIALIZED (SELECT c.s, c.t FROM ed${r - 1} c
-         |  JOIN k$r a ON c.s = a.s JOIN k$r b ON c.t = b.s)""".stripMargin)
-      .mkString(",\n")
-    s"""WITH e AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-       |  FROM lineitem a JOIN lineitem b
-       |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |ed0 AS MATERIALIZED (SELECT p1 AS s, p2 AS t FROM e
-       |        UNION ALL SELECT p2, p1 FROM e),
-       |$peels
-       |SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS deg
-       |FROM ed$kcoreFixMaxRounds GROUP BY s ORDER BY node""".stripMargin
-  }) { (s, d) =>
+  private val qKcoreFixpoint =
+    Q("q_kcore_fixpoint", kcoreOracle(kcoreFixMaxRounds)) { (s, d) =>
     // fixpoint form = the terminal state of the same shared peel run
     kCoreShared(s, d)._2.orderBy("node")
   }
@@ -1005,21 +1012,20 @@ object Graph {
        |  (PARTITION BY n ORDER BY v DESC, lbl) AS rn FROM c$r)
        |  WHERE rn = 1)""".stripMargin
 
+  /** The LPA oracle's CTEs, ending in the assignment `l`[[lpaRounds]]:
+    * q_label_prop selects it and q_modularity scores it. */
+  private val lpaSql: String =
+    s"""${repeatEdgesSql(weighted = true)},
+       |l0 AS MATERIALIZED (SELECT DISTINCT s AS n, s AS lbl FROM e),
+       |${(1 to lpaRounds).map(lpaRoundSql).mkString(",\n")}""".stripMargin
+
   /** X17: community detection by synchronous weighted label propagation
     * (4 rounds) over the repeat-co-purchase graph — a genuine cascade on
     * this corpus (sf0.01: 1880 nodes → 989 → 655 → 513 → 435 communities,
     * largest 11 → 51). The DuckDB oracle unrolls the rounds as CTEs with
     * a ROW_NUMBER argmax under the identical (v DESC, lbl) total order. */
   private val qLabelProp = Q("q_label_prop",
-    s"""WITH po AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-       |  FROM lineitem),
-       |pr AS MATERIALIZED (SELECT a.p AS p1, b.p AS p2, CAST(COUNT(*) AS BIGINT) AS w
-       |  FROM po a JOIN po b ON a.o = b.o AND a.p < b.p
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $lpaMinW),
-       |e AS MATERIALIZED (SELECT p1 AS s, p2 AS t, w FROM pr
-       |      UNION ALL SELECT p2, p1, w FROM pr),
-       |l0 AS MATERIALIZED (SELECT DISTINCT s AS n, s AS lbl FROM e),
-       |${(1 to lpaRounds).map(lpaRoundSql).mkString(",\n")}
+    s"""WITH $lpaSql
        |SELECT n AS node, lbl AS community FROM l$lpaRounds
        |ORDER BY node""".stripMargin) { (s, d) =>
     lpaAssignment(s, d)
@@ -1041,16 +1047,7 @@ object Graph {
     * endpoint labels attached map-side), one node-width degree join —
     * nothing wider than the edge scan itself. */
   private val qModularity = Q("q_modularity",
-    s"""WITH po AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o,
-       |    l_partkey AS p FROM lineitem),
-       |pr AS MATERIALIZED (SELECT a.p AS p1, b.p AS p2,
-       |    CAST(COUNT(*) AS BIGINT) AS w
-       |  FROM po a JOIN po b ON a.o = b.o AND a.p < b.p
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $lpaMinW),
-       |e AS MATERIALIZED (SELECT p1 AS s, p2 AS t, w FROM pr
-       |      UNION ALL SELECT p2, p1, w FROM pr),
-       |l0 AS MATERIALIZED (SELECT DISTINCT s AS n, s AS lbl FROM e),
-       |${(1 to lpaRounds).map(lpaRoundSql).mkString(",\n")},
+    s"""WITH $lpaSql,
        |wdeg AS MATERIALIZED (SELECT s AS n, CAST(SUM(w) AS BIGINT) AS wd
        |  FROM e GROUP BY 1),
        |tot AS (SELECT CAST(SUM(w) AS BIGINT) AS w_x2 FROM e),
@@ -1114,11 +1111,11 @@ object Graph {
     * Scale shape (100 TB): the distance frame is NODE-width (only
     * reached nodes carry rows) and broadcast-joins into the streaming
     * edge scan; each round is one map-side-combined min aggregate.
-    * Identical loop shape to [[peelKCore]]; per-round localCheckpoint,
+    * Identical loop shape to [[peelKCore]], and like it the bounded form
+    * stops at convergence ([[bfsFixpoint]]); per-round localCheckpoint,
     * bucketed-edge fallback beyond broadcast. */
   def bfsHops(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame =
-    bfsLoop(edges, seeds, rounds, detectFix = false)._1
+      rounds: Int): DataFrame = bfsFixpoint(edges, seeds, rounds)._1
 
   /** Multi-source BFS to FIXPOINT (all reachable nodes at their true
     * shortest distance), capped at `maxRounds`. Returns (dist,
@@ -1132,26 +1129,23 @@ object Graph {
     * that equivalence is what keeps q_bfs_reach's unrolled oracle
     * exact. */
   def bfsFixpoint(edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int = 64): (DataFrame, Int) =
-    bfsLoop(edges, seeds, maxRounds, detectFix = true)
+      maxRounds: Int = 64): (DataFrame, Int) = {
+    val (d, r, _) = bfsRun(edges, seeds, maxRounds, snapAt = maxRounds)
+    (d, r)
+  }
 
-  /** Shared BFS relaxation loop — `edges` should arrive materialized
-    * (scanned once per round); distance state is node-width,
-    * checkpointed per round, size-dispatched into the edge scan
-    * ([[stateHint]]). The per-round fingerprint aggregate doubles as
-    * the frontier-size probe the dispatch needs. */
-  private def bfsLoop(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
-      detectFix: Boolean): (DataFrame, Int) =
-    { val (d, r, _) = bfsRun(edges, seeds, maxRounds, detectFix,
-        snapAt = maxRounds); (d, r) }
-
-  /** The relaxation loop with an optional mid-run SNAPSHOT: the bounded
-    * declared query is an exact prefix of the fixpoint run (rounds are
-    * deterministic), so one shared run can serve both — `snapAt` rounds
-    * in, the current distance frame IS the bounded result (or the final
-    * frame, identical, when convergence landed first). */
+  /** The shared relaxation loop, with an optional mid-run SNAPSHOT: the
+    * bounded declared query is an exact prefix of the fixpoint run
+    * (rounds are deterministic), so one shared run can serve both —
+    * `snapAt` rounds in, the current distance frame IS the bounded
+    * result (or the final frame, identical, when convergence landed
+    * first). `edges` should arrive materialized (scanned once per
+    * round); distance state is node-width, checkpointed per round,
+    * size-dispatched into the edge scan ([[stateHint]]). The per-round
+    * fingerprint aggregate doubles as the frontier-size probe the
+    * dispatch needs. */
   private def bfsRun(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
-      detectFix: Boolean, snapAt: Int): (DataFrame, Int, DataFrame) = {
+      snapAt: Int): (DataFrame, Int, DataFrame) = {
     val e = edges
     var dist = seeds.select(col("n"), lit(0L).as("dist"))
       .localCheckpoint(true)
@@ -1172,7 +1166,7 @@ object Graph {
         .localCheckpoint(true)
       r += 1
       val cur = sig(next)
-      if (detectFix && cur == prev) converged = true
+      if (cur == prev) converged = true
       prev = cur
       dist = next
       if (r == snapAt) snap = dist
@@ -1189,8 +1183,7 @@ object Graph {
       val e = weightedEdges(s, d).select(col("s"), col("t"))
       val seeds = e.select(col("s").as("n"))
         .where(col("n") % 199 === 0).distinct()
-      val (fin, _, snap) = bfsRun(e, seeds, bfsFixMaxRounds,
-        detectFix = true, snapAt = bfsRounds)
+      val (fin, _, snap) = bfsRun(e, seeds, bfsFixMaxRounds, snapAt = bfsRounds)
       (snap, fin)
     }
 
@@ -1202,24 +1195,22 @@ object Graph {
        |  UNION ALL SELECT e.s, d.dist + 1 FROM e
        |    JOIN d${r - 1} d ON e.t = d.n) u GROUP BY n)""".stripMargin
 
+  /** The BFS oracle, parameterized by round count so q_bfs_hops and
+    * q_bfs_reach share one CTE builder (the [[pagerankOracle]] pattern);
+    * the seeds are the partkey ≡ 0 (mod 199) nodes. */
+  private def bfsOracle(rounds: Int): String =
+    s"""WITH ${repeatEdgesSql(weighted = false)},
+       |d0 AS MATERIALIZED (SELECT DISTINCT s AS n, CAST(0 AS BIGINT) AS dist
+       |  FROM e WHERE s % 199 = 0),
+       |${(1 to rounds).map(bfsRoundSql).mkString(",\n")}
+       |SELECT n AS node, dist FROM d$rounds ORDER BY node""".stripMargin
+
   /** X17: bounded-hop multi-source BFS (4 rounds) over the
     * repeat-co-purchase graph from the partkey ≡ 0 (mod 199) seed set —
     * a genuine frontier expansion (sf0.01: 11 seeds → 51 → 189 → 616 →
     * 1336 reached). Distances are exact BIGINTs; the oracle unrolls the
     * relaxation rounds as CTEs. */
-  private val qBfsHops = Q("q_bfs_hops",
-    s"""WITH po AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-       |  FROM lineitem),
-       |pr AS MATERIALIZED (SELECT a.p AS p1, b.p AS p2
-       |  FROM po a JOIN po b ON a.o = b.o AND a.p < b.p
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $lpaMinW),
-       |e AS MATERIALIZED (SELECT p1 AS s, p2 AS t FROM pr
-       |      UNION ALL SELECT p2, p1 FROM pr),
-       |d0 AS MATERIALIZED (SELECT DISTINCT s AS n, CAST(0 AS BIGINT) AS dist
-       |  FROM e WHERE s % 199 = 0),
-       |${(1 to bfsRounds).map(bfsRoundSql).mkString(",\n")}
-       |SELECT n AS node, dist FROM d$bfsRounds ORDER BY node""".stripMargin)
-    { (s, d) =>
+  private val qBfsHops = Q("q_bfs_hops", bfsOracle(bfsRounds)) { (s, d) =>
     // bounded form = the round-4 snapshot of the shared relaxation run
     // (seeds and loop both read the one memoized checkpointed edge
     // frame — round-8 advisor: deriving seeds from a fresh frame
@@ -1239,19 +1230,8 @@ object Graph {
     * partkey ≡ 0 (mod 199) seeds with true shortest hop distances, the
     * user-facing form of q_bfs_hops. Oracle unrolls [[bfsFixMaxRounds]]
     * relaxation rounds (identity after convergence). */
-  private val qBfsReach = Q("q_bfs_reach",
-    s"""WITH po AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-       |  FROM lineitem),
-       |pr AS MATERIALIZED (SELECT a.p AS p1, b.p AS p2
-       |  FROM po a JOIN po b ON a.o = b.o AND a.p < b.p
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $lpaMinW),
-       |e AS MATERIALIZED (SELECT p1 AS s, p2 AS t FROM pr
-       |      UNION ALL SELECT p2, p1 FROM pr),
-       |d0 AS MATERIALIZED (SELECT DISTINCT s AS n, CAST(0 AS BIGINT) AS dist
-       |  FROM e WHERE s % 199 = 0),
-       |${(1 to bfsFixMaxRounds).map(bfsRoundSql).mkString(",\n")}
-       |SELECT n AS node, dist FROM d$bfsFixMaxRounds ORDER BY node""".stripMargin)
-    { (s, d) =>
+  private val qBfsReach =
+    Q("q_bfs_reach", bfsOracle(bfsFixMaxRounds)) { (s, d) =>
     // fixpoint form = the terminal state of the same shared run
     bfsShared(s, d)._2
       .select(col("n").as("node"), col("dist")).orderBy("node")

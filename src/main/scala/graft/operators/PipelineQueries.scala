@@ -31,16 +31,21 @@ object PipelineQueries {
     * applies the identical predicate. */
   private val maxShingleDf = 50
 
-  /** Oracle fragment: rare-shingle sets (`sh`) per document. */
+  /** Oracle fragment: rare-shingle sets (`sh`) per document, their sizes
+    * (`sz`) and the pairwise intersection counts (`inter`) — the SQL
+    * twin of [[candidateStageOf]]'s pair frame before the Jaccard. */
   private val rareShinglesSql: String =
     s"""sh0 AS (SELECT DISTINCT doc_id, sh FROM (
-       |  SELECT doc_id, term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(3)})
        |  WHERE sh IS NOT NULL),
        |shdf AS (SELECT sh, COUNT(*) AS df FROM sh0 GROUP BY sh),
        |sh AS (SELECT s.doc_id, s.sh FROM sh0 s JOIN shdf d USING (sh)
-       |       WHERE d.df <= $maxShingleDf)""".stripMargin
+       |       WHERE d.df <= $maxShingleDf),
+       |sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM sh GROUP BY 1),
+       |inter AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id,
+       |    CAST(COUNT(*) AS BIGINT) AS inter
+       |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** Rare-shingle sets, Spark side: the hot set (df > τ) is tiny by
     * construction, so it rides a broadcast anti-join — the corpus-side
@@ -130,26 +135,23 @@ object PipelineQueries {
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val lists = rareShingleListsOf(docs)
     val sz = shingleSizesOf(lists).localCheckpoint(true)
-    shingleInterOf(lists)
-      .join(sz.select(col("doc_id").as("a_id"), col("sz").as("sa")), "a_id")
-      .join(sz.select(col("doc_id").as("b_id"), col("sz").as("sb")), "b_id")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
+    jaccardOf(shingleInterOf(lists), sz)
   }
 
-  /** [[jaccardPairs]] over the base documents table, MATERIALIZED once
-    * per (session, dir) and shared by its three independent
-    * full-corpus consumers (q_dedup_ngram at τ ≥ 0.5, q_dedup_cc and
-    * q_dedup_resolve at τ ≥ 0.3) — the [[graft.Memo]] discipline the
-    * graph family adopted this round, applied to the round-8 shared
-    * candidate BUILDER (which de-duplicated the code but still re-ran
-    * the shingle/posting/intersection passes inside every query). The
-    * frame is pair-width (candidates with their exact Jaccard), tiny
-    * next to the corpus; q_dedup_pipeline keeps its own build because
-    * it pairs the exact-dedup SURVIVORS, a different input frame. */
-  private[graft] def jaccardPairsShared(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    candidateStageShared(s, d)._1
+  /** Pair counts `pairs`(a_id, b_id, inter) with the per-doc set sizes
+    * `sz`(doc_id, sz) joined on as `sa` and `sb`, and their exact
+    * [[withJaccard]]. */
+  private def jaccardOf(pairs: org.apache.spark.sql.DataFrame,
+      sz: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    withJaccard(pairs
+      .join(sz.select(col("doc_id").as("a_id"), col("sz").as("sa")), "a_id")
+      .join(sz.select(col("doc_id").as("b_id"), col("sz").as("sb")), "b_id"))
+
+  /** Appends `jaccard` = inter / (sa + sb − inter). */
+  private def withJaccard(
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    pairs.withColumn("jaccard",
+      col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
 
   /** Posting-cap headroom for the survivor delta correction
     * ([[survivorJaccardPairs]]): the shared stage keeps posting lists up
@@ -176,17 +178,12 @@ object PipelineQueries {
     val rare = lists.filter(col("df") <= maxShingleDf)
     val band = lists.filter(col("df") > maxShingleDf).localCheckpoint(true)
     val sz = shingleSizesOf(rare).localCheckpoint(true)
-    val pairs = shingleInterOf(rare)
-      .join(sz.select(col("doc_id").as("a_id"), col("sz").as("sa")), "a_id")
-      .join(sz.select(col("doc_id").as("b_id"), col("sz").as("sb")), "b_id")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
-      .localCheckpoint(true)
+    val pairs = jaccardOf(shingleInterOf(rare), sz).localCheckpoint(true)
     (pairs, band, sz)
   }
 
   /** [[candidateStageOf]] over the base documents, memoized per
-    * (session, dir) — the round-15 `jaccardPairsShared` build, extended
+    * (session, dir) — the round-15 shared Jaccard-pair build, extended
     * (round-16) to retain the delta ingredients so q_dedup_pipeline's
     * survivor chain needs no second corpus-wide shingle pass. The pair
     * frame consumers see is bit-identical to the round-15 build: the
@@ -258,11 +255,7 @@ object PipelineQueries {
       .select(col("doc_id"),
         (coalesce(col("sz"), lit(0L)) +
           coalesce(col("szn"), lit(0L))).as("sz"))
-    interAll
-      .join(szS.select(col("doc_id").as("a_id"), col("sz").as("sa")), "a_id")
-      .join(szS.select(col("doc_id").as("b_id"), col("sz").as("sb")), "b_id")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
+    jaccardOf(interAll, szS)
   }
 
   /** X13: exact content dedup via hash-groupBy — at 100 TB this is the
@@ -284,39 +277,22 @@ object PipelineQueries {
     * exact Jaccard ≥ 0.5 over the rare sets. */
   private val qDedupNgram = Q("q_dedup_ngram",
     s"""WITH $tokSql,
-       |$rareShinglesSql,
-       |sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM sh GROUP BY 1),
-       |inter AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id,
-       |    CAST(COUNT(*) AS BIGINT) AS inter
-       |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2)
+       |$rareShinglesSql
        |SELECT a_id, b_id,
        |  ROUND(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard
        |FROM inter JOIN sz sa ON a_id = sa.doc_id JOIN sz sb ON b_id = sb.doc_id
        |WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5
        |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
-    jaccardPairsShared(s, d)
+    candidateStageShared(s, d)._1
       .filter(col("jaccard") >= 0.5)
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy("a_id", "b_id")
   }
 
-  /** X13: dedup-group resolution — ngram-Jaccard candidate pairs (≥0.3)
-    * → connected components (iterative min-label propagation,
-    * [[Dedup.connectedComponents]]) → one canonical doc per group. The
-    * DuckDB oracle computes the same components with a recursive CTE, so
-    * the whole pairs→groups chain is hash-checked. */
-  /** Shared oracle CTE chain for the CC/resolve queries: rare-shingle
-    * Jaccard pairs → symmetrized edges → recursive-CTE components. */
-  /** pairs → recursive-CTE components fragment (consumes the `sh`
-    * rare-shingle CTE; shared by the cc/resolve/pipeline oracles). */
+  /** pairs → recursive-CTE components fragment (consumes
+    * [[rareShinglesSql]]; shared by the cc/resolve/pipeline oracles). */
   private val pairsCcSql: String =
-    s"""sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM sh GROUP BY 1),
-       |inter AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id,
-       |    CAST(COUNT(*) AS BIGINT) AS inter
-       |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS (SELECT a_id, b_id FROM inter
+    s"""pairs AS (SELECT a_id, b_id FROM inter
        |  JOIN sz sa ON a_id = sa.doc_id JOIN sz sb ON b_id = sb.doc_id
        |  WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.3),
        |edges AS (SELECT a_id AS a, b_id AS b FROM pairs
@@ -332,6 +308,11 @@ object PipelineQueries {
        |$rareShinglesSql,
        |$pairsCcSql""".stripMargin
 
+  /** X13: dedup-group resolution — ngram-Jaccard candidate pairs (≥0.3)
+    * → connected components (iterative min-label propagation,
+    * [[Dedup.connectedComponents]]) → one canonical doc per group. The
+    * DuckDB oracle computes the same components with a recursive CTE, so
+    * the whole pairs→groups chain is hash-checked. */
   private val qDedupCc = Q("q_dedup_cc",
     s"""WITH RECURSIVE $ccSql
        |SELECT node, MIN(comp) AS comp FROM cc GROUP BY node
@@ -468,7 +449,7 @@ object PipelineQueries {
   /** Candidate pairs for the CC/resolve chain: rare-shingle Jaccard ≥ 0.3
     * (shared by q_dedup_cc and q_dedup_resolve). */
   private def ccPairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    jaccardPairsShared(s, d)
+    candidateStageShared(s, d)._1
       .filter(col("jaccard") >= 0.3)
       .select(col("a_id").as("a"), col("b_id").as("b"))
 
@@ -622,6 +603,16 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
+  /** Oracle fragment: per-doc 3-shingle counts `shc`(doc_id, n_sh,
+    * n_dsh) over [[tokSql]]'s `tokf`. */
+  private val shingleCountsSql: String =
+    s"""shall AS (SELECT doc_id, sh FROM (
+       |  ${TextFns.gramSql(3)})
+       |  WHERE sh IS NOT NULL),
+       |shc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh,
+       |        CAST(COUNT(DISTINCT sh) AS BIGINT) AS n_dsh
+       |        FROM shall GROUP BY 1)""".stripMargin
+
   /** Text analysis: repetition metrics — the Gopher-style (Rae et al.
     * 2021, public) signals a pretraining filter cuts on: concentration of
     * the single most frequent term, and the fraction of duplicate
@@ -630,17 +621,10 @@ object PipelineQueries {
     * [[TextFns.shinglesOf]] pass). */
   private val qRepetition = Q("q_repetition",
     s"""WITH $tokSql,
-       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokf GROUP BY 1, 2),
+       |${TextFns.tfSql},
        |tt AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
        |       CAST(MAX(tf) AS BIGINT) AS max_tf FROM tf GROUP BY 1),
-       |shall AS (SELECT doc_id, sh FROM (
-       |  SELECT doc_id, term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
-       |  WHERE sh IS NOT NULL),
-       |shc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh,
-       |        CAST(COUNT(DISTINCT sh) AS BIGINT) AS n_dsh
-       |        FROM shall GROUP BY 1)
+       |$shingleCountsSql
        |SELECT tt.doc_id, tt.n_tokens,
        |  ROUND(CAST(tt.max_tf AS DOUBLE) / tt.n_tokens, 6) AS top_term_frac,
        |  ROUND(1.0 - CAST(shc.n_dsh AS DOUBLE) / shc.n_sh, 6) AS dup_shingle_frac
@@ -675,20 +659,13 @@ object PipelineQueries {
     * stop_r, top_r, dup_r) — requires `$tokSql` upstream. Shared by
     * q_corpus_filter and q_corpus_assembly. */
   private lazy val qualitySigSql: String =
-    s"""tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokf GROUP BY 1, 2),
+    s"""${TextFns.tfSql},
        |tt AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
        |       CAST(MAX(tf) AS BIGINT) AS max_tf,
        |       CAST(SUM(CASE WHEN term IN ${inList(stopEn)} THEN tf ELSE 0 END)
        |         AS BIGINT) AS n_stop
        |       FROM tf GROUP BY 1),
-       |shall AS (SELECT doc_id, sh FROM (
-       |  SELECT doc_id, term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
-       |  WHERE sh IS NOT NULL),
-       |shc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh,
-       |        CAST(COUNT(DISTINCT sh) AS BIGINT) AS n_dsh
-       |        FROM shall GROUP BY 1),
+       |$shingleCountsSql,
        |sig AS (SELECT tt.doc_id, tt.n_tokens,
        |  ROUND(CAST(tt.n_stop AS DOUBLE) / tt.n_tokens, 6) AS stop_r,
        |  ROUND(CAST(tt.max_tf AS DOUBLE) / tt.n_tokens, 6) AS top_r,
@@ -761,8 +738,7 @@ object PipelineQueries {
     * final aggregate (HAVING). */
   private val qBigramCounts = Q("q_bigram_counts",
     s"""WITH $tokSql,
-       |bg AS (SELECT doc_id, term || ' ' || lead(term, 1) OVER w AS bg
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |bg AS (${TextFns.gramSql(2, as = "bg")})
        |SELECT bg, COUNT(*) AS n, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
        |FROM bg WHERE bg IS NOT NULL
        |GROUP BY bg HAVING COUNT(*) >= 10 ORDER BY bg""".stripMargin) {
@@ -789,9 +765,7 @@ object PipelineQueries {
     * per-occurrence average as Σcnt·lp / Σcnt. */
   private val qLmScore = Q("q_lm_score",
     s"""WITH $tokSql,
-       |bgs AS (SELECT doc_id, term AS w1,
-       |    term || ' ' || lead(term, 1) OVER w AS bg
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+       |bgs AS (${TextFns.gramSql(2, keys = "doc_id, term AS w1, ", as = "bg")}),
        |bg AS (SELECT doc_id, w1, bg FROM bgs WHERE bg IS NOT NULL),
        |bgc AS (SELECT bg, CAST(COUNT(*) AS BIGINT) AS cbg FROM bg GROUP BY bg),
        |uc AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cu FROM tokf GROUP BY term),
@@ -1092,12 +1066,7 @@ object PipelineQueries {
   private val qDecontaminate = Q("q_decontaminate",
     s"""WITH $tokSql,
        |sh8 AS (SELECT DISTINCT doc_id, sh FROM (
-       |  SELECT doc_id, term
-       |    || ' ' || lead(term, 1) OVER w || ' ' || lead(term, 2) OVER w
-       |    || ' ' || lead(term, 3) OVER w || ' ' || lead(term, 4) OVER w
-       |    || ' ' || lead(term, 5) OVER w || ' ' || lead(term, 6) OVER w
-       |    || ' ' || lead(term, 7) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(8)})
        |  WHERE sh IS NOT NULL),
        |bench AS (SELECT DISTINCT sh FROM sh8 WHERE doc_id % 20 = 0),
        |hits AS (SELECT s.doc_id, CAST(COUNT(DISTINCT s.sh) AS BIGINT) AS n_hits
@@ -1156,12 +1125,7 @@ object PipelineQueries {
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY dig ORDER BY doc_id)
        |    AS rn FROM dg) WHERE rn = 1),
        |sh8 AS MATERIALIZED (SELECT DISTINCT doc_id, sh FROM (
-       |  SELECT doc_id, term
-       |    || ' ' || lead(term, 1) OVER w || ' ' || lead(term, 2) OVER w
-       |    || ' ' || lead(term, 3) OVER w || ' ' || lead(term, 4) OVER w
-       |    || ' ' || lead(term, 5) OVER w || ' ' || lead(term, 6) OVER w
-       |    || ' ' || lead(term, 7) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(8)})
        |  WHERE sh IS NOT NULL),
        |bench AS MATERIALIZED (SELECT DISTINCT sh FROM sh8
        |  WHERE doc_id % 20 = 0),
@@ -1207,6 +1171,20 @@ object PipelineQueries {
       |  generate_subscripts(embedding, 1) AS k FROM embeddings),
       |nrm AS (SELECT vec_id, SQRT(SUM(x*x)) AS nrm FROM e GROUP BY 1)"""
       .stripMargin
+
+  /** Oracle tail of the exact quadratic near-dup pair queries: every pair
+    * of `vecs`(vec_id, x, k) with cosine (over `nrm`) at least `tau`. */
+  private def embPairsSql(vecs: String, tau: Double): String =
+    s"""dot AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, SUM(a.x * b.x) AS dot
+       |  FROM $vecs a JOIN $vecs b ON a.k = b.k AND a.vec_id < b.vec_id GROUP BY 1, 2),
+       |cos AS (SELECT a_id, b_id, dot / (na.nrm * nb.nrm) AS cos
+       |  FROM dot JOIN nrm na ON a_id = na.vec_id JOIN nrm nb ON b_id = nb.vec_id)
+       |SELECT a_id, b_id, ROUND(cos, 6) AS cos FROM cos
+       |WHERE cos >= $tau ORDER BY a_id, b_id""".stripMargin
+
+  /** The oracle q_dedup_embed and q_dedup_embed_lsh share: τ = 0.4 over
+    * the plain corpus. */
+  private val embPairsOracle = s"WITH $embSql,\n${embPairsSql("e", 0.4)}"
 
   /** X14: brute-force cosine top-k — the exactness baseline for ANN.
     * Array-native dot products (zip_with/aggregate, codegen'd) over a
@@ -1276,14 +1254,7 @@ object PipelineQueries {
     * the EXACT quadratic baseline kept for differential checks; the
     * declared scale path with the same verdict schema is
     * [[qDedupEmbedLsh]]. */
-  private val qDedupEmbed = Q("q_dedup_embed",
-    s"""WITH $embSql,
-       |dot AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, SUM(a.x * b.x) AS dot
-       |  FROM e a JOIN e b ON a.k = b.k AND a.vec_id < b.vec_id GROUP BY 1, 2),
-       |cos AS (SELECT a_id, b_id, dot / (na.nrm * nb.nrm) AS cos
-       |  FROM dot JOIN nrm na ON a_id = na.vec_id JOIN nrm nb ON b_id = nb.vec_id)
-       |SELECT a_id, b_id, ROUND(cos, 6) AS cos FROM cos
-       |WHERE cos >= 0.4 ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
+  private val qDedupEmbed = Q("q_dedup_embed", embPairsOracle) { (s, d) =>
     embedNearDupBrute(Tables.embeddings(s, d)
       .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec")),
       tau = 0.4)
@@ -1434,14 +1405,8 @@ object PipelineQueries {
     * and the LSH form's value is asymptotic. At production thresholds
     * (τ≈0.9) fewer bits and probes reach the same recall and the
     * crossover drops by orders of magnitude. */
-  private val qDedupEmbedLsh = Q("q_dedup_embed_lsh",
-    s"""WITH $embSql,
-       |dot AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, SUM(a.x * b.x) AS dot
-       |  FROM e a JOIN e b ON a.k = b.k AND a.vec_id < b.vec_id GROUP BY 1, 2),
-       |cos AS (SELECT a_id, b_id, dot / (na.nrm * nb.nrm) AS cos
-       |  FROM dot JOIN nrm na ON a_id = na.vec_id JOIN nrm nb ON b_id = nb.vec_id)
-       |SELECT a_id, b_id, ROUND(cos, 6) AS cos FROM cos
-       |WHERE cos >= 0.4 ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
+  private val qDedupEmbedLsh =
+    Q("q_dedup_embed_lsh", embPairsOracle) { (s, d) =>
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec"))
     // parquet footer row count: metadata, no corpus scan
@@ -1597,12 +1562,7 @@ object PipelineQueries {
        |  SELECT vec_id + $twinOffset,
        |    x * (1 + ((vec_id*31 + (k-1)*17) % 11 - 5) / 200.0), k FROM xe),
        |nrm AS (SELECT vec_id, SQRT(SUM(x*x)) AS nrm FROM aug GROUP BY 1),
-       |dot AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id, SUM(a.x * b.x) AS dot
-       |  FROM aug a JOIN aug b ON a.k = b.k AND a.vec_id < b.vec_id GROUP BY 1, 2),
-       |cos AS (SELECT a_id, b_id, dot / (na.nrm * nb.nrm) AS cos
-       |  FROM dot JOIN nrm na ON a_id = na.vec_id JOIN nrm nb ON b_id = nb.vec_id)
-       |SELECT a_id, b_id, ROUND(cos, 6) AS cos FROM cos
-       |WHERE cos >= 0.9 ORDER BY a_id, b_id""".stripMargin
+       |${embPairsSql("aug", 0.9)}""".stripMargin
 
   /** X13 production-threshold BASELINE: exact quadratic near-dup at
     * τ=0.9 over the twin-augmented corpus. Declared alongside
@@ -1746,9 +1706,7 @@ object PipelineQueries {
   private val qDedupMinhash = Q("q_dedup_minhash",
     s"""WITH $tokSql,
        |sh0 AS (SELECT DISTINCT doc_id, sh FROM (
-       |  SELECT doc_id, term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(3)})
        |  WHERE sh IS NOT NULL),
        |hs AS (SELECT doc_id, ${portableHashSql.format("sh")} AS h FROM sh0),
        |mh AS (SELECT doc_id, ${(0 until 16).map(i =>
@@ -1821,15 +1779,13 @@ object PipelineQueries {
     // sides are distinct sets), no pair-width exchange, nothing to
     // spill. |array| doubles as the set size, so the old sz aggregate
     // folds away too.
-    cand
+    withJaccard(cand
       .join(docAgg.select(col("doc_id").as("a_id"), col("hs").as("ha")), "a_id")
       .join(docAgg.select(col("doc_id").as("b_id"), col("hs").as("hb")), "b_id")
       .select(col("a_id"), col("b_id"),
         size(array_intersect(col("ha"), col("hb"))).cast("long").as("inter"),
         size(col("ha")).cast("long").as("sa"),
-        size(col("hb")).cast("long").as("sb"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
+        size(col("hb")).cast("long").as("sb")))
       .filter(col("jaccard") >= 0.3)
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy("a_id", "b_id")
@@ -1866,9 +1822,7 @@ object PipelineQueries {
       "zzz nope nada").map(t => s"'$t'").mkString(", ")
     s"""WITH $tokSql,
        |shs AS (SELECT sh FROM (
-       |  SELECT term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(3, "")})
        |  WHERE sh IS NOT NULL),
        |ph AS (SELECT ${portableHashSql.format("sh")} AS h FROM shs),
        |prm AS (SELECT * FROM (VALUES $prm) AS t(r, a, bb)),
@@ -1963,9 +1917,7 @@ object PipelineQueries {
       s"($i, ${minhashA(i)}, ${minhashB(i)})").mkString(", ")
     s"""WITH $tokSql,
        |shs AS MATERIALIZED (SELECT sh FROM (
-       |  SELECT term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(3, "")})
        |  WHERE sh IS NOT NULL),
        |ph AS MATERIALIZED (SELECT sh,
        |  ${portableHashSql.format("sh")} AS h FROM shs),
@@ -2051,9 +2003,7 @@ object PipelineQueries {
     val rhoSql = graft.functions.Sketches.rhoSql("rem")
     s"""WITH $tokSql,
        |shs AS (SELECT sh FROM (
-       |  SELECT term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |         lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  ${TextFns.gramSql(3, "")})
        |  WHERE sh IS NOT NULL),
        |ph AS (SELECT ${portableHashSql.format("sh")} AS h FROM shs),
        |rho AS (SELECT h >> 54 AS bucket, $rhoSql AS rho
@@ -2409,11 +2359,7 @@ object PipelineQueries {
     * collision budget negligible. */
   private val qSubstringDup = Q("q_substring_dup",
     s"""WITH $tokSql,
-       |wins0 AS (SELECT doc_id, term || ' ' || lead(term, 1) OVER w
-       |    || ' ' || lead(term, 2) OVER w || ' ' || lead(term, 3) OVER w
-       |    || ' ' || lead(term, 4) OVER w || ' ' || lead(term, 5) OVER w
-       |    || ' ' || lead(term, 6) OVER w || ' ' || lead(term, 7) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+       |wins0 AS (${TextFns.gramSql(8)}),
        |wins AS (SELECT doc_id, sh FROM wins0 WHERE sh IS NOT NULL),
        |nd AS (SELECT sh, COUNT(DISTINCT doc_id) AS ndocs FROM wins GROUP BY sh)
        |SELECT w.doc_id, CAST(COUNT(*) AS BIGINT) AS windows,

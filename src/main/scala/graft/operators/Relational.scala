@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.Sketches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -325,23 +326,15 @@ object Relational {
     // to the driver — the broadcast variant already materializes the
     // same |groups| rows there as a HashedRelation — and the literal
     // DIV is exact integer arithmetic, same as the join form. The
-    // conditional chain is linear in |groups|, so past 128 groups the
-    // broadcast join (O(1) probe per row) takes over — the same
-    // size-dispatch discipline as Graph.stateHint.
-    val mmRows = mm.select("rf", "mn", "mx").collect()
-    val bkt =
-      if (mmRows.length <= 128) {
-        val b = mmRows.foldLeft(lit(null).cast("long")) { (acc, r) =>
-          val (mn, mx) = (r.getLong(1), r.getLong(2))
-          when(col("rf") === lit(r.getString(0)),
-            expr(s"((c - ${mn}L) * 256) DIV ${mx - mn + 1}L")).otherwise(acc)
-        }
-        x.select(col("rf"), b.as("b"))
-      } else
-        x.join(broadcast(mm), "rf")
-          .select(col("rf"),
-            expr("((c - mn) * 256) DIV (mx - mn + 1)").as("b"))
-    val h = bkt.groupBy("rf", "b").agg(count(lit(1)).as("cnt"))
+    // chain is linear in |groups|; l_returnflag has 3.
+    val b = mm.select("rf", "mn", "mx").collect()
+      .foldLeft(lit(null).cast("long")) { (acc, r) =>
+        val (mn, mx) = (r.getLong(1), r.getLong(2))
+        when(col("rf") === lit(r.getString(0)),
+          expr(s"((c - ${mn}L) * 256) DIV ${mx - mn + 1}L")).otherwise(acc)
+      }
+    val h = x.select(col("rf"), b.as("b"))
+      .groupBy("rf", "b").agg(count(lit(1)).as("cnt"))
     val cum = h.withColumn("cum",
       sum("cnt").over(Window.partitionBy("rf").orderBy("b")))
       .join(broadcast(mm), "rf")
@@ -1095,6 +1088,26 @@ object Relational {
       .orderBy("decile")
   }
 
+  /** Oracle fragment of the event-sketch queries: `ph`, the events with
+    * `keys` and the portable 60-bit user hash `h`. */
+  private def eventHashSql(keys: String): String =
+    s"""ph AS (SELECT $keys,
+       |    ${Sketches.hash60Sql.format("CAST(user_id AS VARCHAR)")} AS h
+       |  FROM events)""".stripMargin
+
+  /** Oracle fragment: `name`, the HLL register `idx` and ρ of each `ph`
+    * row, with its `key`. */
+  private def hllRhoSql(name: String, key: String, idx: String): String =
+    s"""$name AS (SELECT $key, ${Sketches.bucketSql("h")} AS $idx,
+       |    ${Sketches.rhoSql("rem")} AS rho
+       |  FROM (SELECT $key, h, h & ${Sketches.RemMask} AS rem FROM ph))""".stripMargin
+
+  /** Oracle fragment: the d = 4 count-min rows (ws, r, `idx`) of each
+    * `ph` row, w = 256. */
+  private def cmRowsSql(idx: String): String = (0 until 4).map(i =>
+      s"SELECT ws, $i AS r, ${Sketches.cmBucketSql("h", i, 256)} AS $idx FROM ph")
+    .mkString(" UNION ALL ")
+
   /** X15+: windowed distinct-cardinality sketch — the batch twin of
     * [[graft.streaming.EventStreams.windowedDistinctSketch]] (the SAME
     * transform run on the static table; stream==batch pinned in
@@ -1104,17 +1117,11 @@ object Relational {
     * streaming value: state bounded at |open windows| × 64 cells where
     * exact distinct-per-window holds every key; the batch value: the
     * same sketch rolls up across days/sources by elementwise MAX. */
-  private val qEventHll = Q("q_event_hll", {
-    import graft.functions.Sketches
-    s"""WITH ph AS (SELECT date_trunc('day', ts) AS ws,
-       |    ${Sketches.hash60Sql.format("CAST(user_id AS VARCHAR)")} AS h
-       |  FROM events),
-       |rho AS (SELECT ws, ${Sketches.bucketSql("h")} AS bucket,
-       |    ${Sketches.rhoSql("rem")} AS rho
-       |  FROM (SELECT ws, h, h & ${Sketches.RemMask} AS rem FROM ph))
+  private val qEventHll = Q("q_event_hll",
+    s"""WITH ${eventHashSql("date_trunc('day', ts) AS ws")},
+       |${hllRhoSql("rho", "ws", "bucket")}
        |SELECT ws, bucket, CAST(MAX(rho) AS BIGINT) AS register
-       |FROM rho GROUP BY ws, bucket ORDER BY ws, bucket""".stripMargin
-  }) { (s, d) =>
+       |FROM rho GROUP BY ws, bucket ORDER BY ws, bucket""".stripMargin) { (s, d) =>
     graft.streaming.EventStreams
       .windowedDistinctSketch(Tables.events(s, d), "1 day")
       .orderBy("ws", "bucket")
@@ -1130,20 +1137,13 @@ object Relational {
     * never re-reading raw data. At 100 TB the expand doubles only the
     * narrow (type, bucket, ρ) stream; the exchange stays bounded by
     * (|types|+1) × 64 cells per task. */
-  private val qHllRollup = Q("q_hll_rollup", {
-    import graft.functions.Sketches
-    s"""WITH ph AS (SELECT event_type,
-       |    ${Sketches.hash60Sql.format("CAST(user_id AS VARCHAR)")} AS h
-       |  FROM events),
-       |rho AS (SELECT event_type, ${Sketches.bucketSql("h")} AS bucket,
-       |    ${Sketches.rhoSql("rem")} AS rho
-       |  FROM (SELECT event_type, h, h & ${Sketches.RemMask} AS rem FROM ph))
+  private val qHllRollup = Q("q_hll_rollup",
+    s"""WITH ${eventHashSql("event_type")},
+       |${hllRhoSql("rho", "event_type", "bucket")}
        |SELECT COALESCE(event_type, 'ALL') AS event_type, bucket,
        |  CAST(MAX(rho) AS BIGINT) AS register
        |FROM rho GROUP BY GROUPING SETS ((event_type, bucket), (bucket))
-       |ORDER BY event_type, bucket""".stripMargin
-  }) { (s, d) =>
-    import graft.functions.Sketches
+       |ORDER BY event_type, bucket""".stripMargin) { (s, d) =>
     Tables.events(s, d)
       .select(col("event_type"),
         Sketches.hash60(col("user_id").cast("string")).as("h"))
@@ -1167,18 +1167,11 @@ object Relational {
     * the batch value: cells SUM across windows/sources (count-min's
     * merge is addition — the dual of HLL's register MAX), so stored
     * cell tables answer later frequency probes without raw data. */
-  private val qEventCountMin = Q("q_event_count_min", {
-    import graft.functions.Sketches
-    val rows = (0 until 4).map(i =>
-      s"SELECT ws, $i AS r, ${Sketches.cmBucketSql("h", i, 256)} AS bkt FROM ph")
-      .mkString(" UNION ALL ")
-    s"""WITH ph AS (SELECT date_trunc('day', ts) AS ws,
-       |    ${Sketches.hash60Sql.format("CAST(user_id AS VARCHAR)")} AS h
-       |  FROM events),
-       |cells AS ($rows)
+  private val qEventCountMin = Q("q_event_count_min",
+    s"""WITH ${eventHashSql("date_trunc('day', ts) AS ws")},
+       |cells AS (${cmRowsSql("bkt")})
        |SELECT ws, r, bkt, CAST(COUNT(*) AS BIGINT) AS cnt
-       |FROM cells GROUP BY ws, r, bkt ORDER BY ws, r, bkt""".stripMargin
-  }) { (s, d) =>
+       |FROM cells GROUP BY ws, r, bkt ORDER BY ws, r, bkt""".stripMargin) { (s, d) =>
     graft.streaming.EventStreams
       .windowedFreqSketch(Tables.events(s, d), "1 day")
       .orderBy("ws", "r", "bkt")
@@ -1250,20 +1243,12 @@ object Relational {
     * sketches costs three scans. Oracle = the three standalone oracles
     * composed by UNION ALL, so the fused cells are hash-checked to be
     * bit-identical to the separately-computed ones. */
-  private val qEventMonitor = Q("q_event_monitor", {
-    import graft.functions.Sketches
-    val cmRows = (0 until 4).map(i =>
-      s"SELECT ws, $i AS r, ${Sketches.cmBucketSql("h", i, 256)} AS idx FROM ph")
-      .mkString(" UNION ALL ")
-    s"""WITH ph AS (SELECT date_trunc('day', ts) AS ws, value,
-       |    ${Sketches.hash60Sql.format("CAST(user_id AS VARCHAR)")} AS h
-       |  FROM events),
-       |hr AS (SELECT ws, ${Sketches.bucketSql("h")} AS idx,
-       |    ${Sketches.rhoSql("rem")} AS rho
-       |  FROM (SELECT ws, h, h & ${Sketches.RemMask} AS rem FROM ph)),
+  private val qEventMonitor = Q("q_event_monitor",
+    s"""WITH ${eventHashSql("date_trunc('day', ts) AS ws, value")},
+       |${hllRhoSql("hr", "ws", "idx")},
        |hll AS (SELECT ws, 'hll' AS family, 0 AS r, idx,
        |    CAST(MAX(rho) AS BIGINT) AS val FROM hr GROUP BY 1, 2, 3, 4),
-       |cmc AS ($cmRows),
+       |cmc AS (${cmRowsSql("idx")}),
        |cm AS (SELECT ws, 'cm' AS family, r, idx,
        |    CAST(COUNT(*) AS BIGINT) AS val FROM cmc GROUP BY 1, 2, 3, 4),
        |hist AS (SELECT ws, 'hist' AS family, 0 AS r,
@@ -1273,8 +1258,7 @@ object Relational {
        |u AS (SELECT * FROM hll UNION ALL SELECT * FROM cm
        |      UNION ALL SELECT * FROM hist)
        |SELECT ws, family, r, idx, val FROM u
-       |ORDER BY ws, family, r, idx""".stripMargin
-  }) { (s, d) =>
+       |ORDER BY ws, family, r, idx""".stripMargin) { (s, d) =>
     graft.streaming.EventStreams
       .windowedMonitor(Tables.events(s, d), "1 day")
       .orderBy("ws", "family", "r", "idx")

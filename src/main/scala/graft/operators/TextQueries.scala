@@ -81,7 +81,7 @@ object TextQueries {
     * semantics (NaiveBayesServlet.scala:92-104). Dictionary = df ≥ 5. */
   private val qDictVectorize = Q("q_dict_vectorize",
     s"""WITH $tokSql,
-       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokf GROUP BY 1, 2),
+       |${TextFns.tfSql},
        |d AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
        |dict AS (SELECT term, CAST(row_number() OVER (ORDER BY term) - 1 AS BIGINT) AS idx
        |         FROM d WHERE df >= 5)
@@ -106,7 +106,7 @@ object TextQueries {
     * `TFIDF.calculate` (NaiveBayesServlet.scala:90-101). */
   private val qTfidf = Q("q_tfidf",
     s"""WITH $tokSql,
-       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tokf GROUP BY 1, 2),
+       |${TextFns.tfSql},
        |d AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
        |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents)
        |SELECT tf.doc_id, tf.term,
@@ -319,9 +319,7 @@ object TextQueries {
     * cross-engine determinism. */
   private val qTopNgrams = Q("q_top_ngrams",
     s"""WITH $tokSql,
-       |sh0 AS (SELECT lang, term || ' ' || lead(term, 1) OVER w || ' ' ||
-       |    lead(term, 2) OVER w AS sh
-       |  FROM tokf WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+       |sh0 AS (${TextFns.gramSql(3, "lang, ")}),
        |cnt AS (SELECT lang, sh, CAST(COUNT(*) AS BIGINT) AS cnt
        |  FROM sh0 WHERE sh IS NOT NULL GROUP BY 1, 2),
        |r AS (SELECT lang, sh, cnt,

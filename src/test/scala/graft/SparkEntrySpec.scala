@@ -21,4 +21,24 @@ class SparkEntrySpec extends AnyFunSuite with Matchers {
   test("query names are distinct") {
     declared.distinct shouldBe declared
   }
+
+  test("every oracle is a closed statement with its builders expanded") {
+    // a builder slip (a fragment missing its `s` interpolator, a dropped
+    // paren in a spliced CTE) otherwise shows only when DuckDB runs it
+    val interp = """\$(\{|[A-Za-z_])""".r
+    SparkEntry.oracleSql.size should be > 0
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      withClue(s"$name: ") {
+        sql.trim should (startWith("WITH") or startWith("SELECT"))
+        val depths = sql.scanLeft(0) {
+          case (d, '(') => d + 1
+          case (d, ')') => d - 1
+          case (d, _)   => d
+        }
+        depths.min shouldBe 0
+        depths.last shouldBe 0
+        interp.findFirstIn(sql) shouldBe None
+      }
+    }
+  }
 }
