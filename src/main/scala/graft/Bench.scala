@@ -25,15 +25,38 @@ object Bench {
     s"$warmPasses warm passes (median)"
 
   /** One query's figures: its cold-pass call and its warm calls, in
-    * seconds, -1 for a call that threw. */
-  final case class Timing(name: String, cold: Double, warmCalls: Seq[Double]) {
+    * wall seconds, -1 for a call that threw; and the same calls' CPU
+    * seconds ([[threadCpu]] from the call through its Cleanup). */
+  final case class Timing(name: String, cold: Double, warmCalls: Seq[Double],
+      coldCpu: Double, warmCpuCalls: Seq[Double]) {
     def failed: Boolean = cold < 0 || warmCalls.exists(_ < 0)
 
     /** The median warm call; -1 when any warm call failed. */
     def warm: Double =
       if (warmCalls.exists(_ < 0)) -1.0
       else warmCalls.sorted.apply(warmCalls.size / 2)
+
+    /** The median warm call's CPU seconds. */
+    def warmCpu: Double = warmCpuCalls.sorted.apply(warmCpuCalls.size / 2)
   }
+
+  private val threads = java.lang.management.ManagementFactory
+    .getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** CPU nanoseconds of every live Java thread, by thread id: the calling
+    * thread's driver-side work and Spark's task, scheduler, shuffle and
+    * broadcast threads. The JIT compiler and garbage-collector threads
+    * are hidden from the thread bean, and a thread that ends between two
+    * readings loses its share. */
+  private def threadCpu(): Map[Long, Long] = {
+    val ids = threads.getAllThreadIds
+    ids.zip(threads.getThreadCpuTime(ids)).filter(_._2 >= 0).toMap
+  }
+
+  /** CPU seconds the live threads spent since `before`. */
+  private def cpuSince(before: Map[Long, Long]): Double =
+    threadCpu().iterator.map { case (id, ns) =>
+      ns - before.getOrElse(id, 0L) }.sum / 1e9
 
   /** The run's own figures: `setupSec` is session plus warm-up and
     * `coldE2eSec` runs from session start to the last cold-pass result. */
@@ -62,13 +85,17 @@ object Bench {
   }
 
   /** The lossless record: every query's cold seconds, warm median and
-    * warm calls. Compare artifacts by per-query median ratio over common
-    * queries, and single queries by interleaved A/B, never by raw totals:
-    * host load drifts 1.4x+ between runs (SCALE.md drift protocol). */
+    * warm calls, and the CPU seconds of its cold call and warm median
+    * (`cold_cpu`, `warm_cpu`; per-call CPU shows driver-side cost that
+    * wall time hides under host noise). Compare artifacts by per-query
+    * median ratio over common queries, and single queries by interleaved
+    * A/B, never by raw totals: host load drifts 1.4x+ between runs
+    * (SCALE.md drift protocol). */
   def fullLine(ts: Seq[Timing], run: Run): String = {
     val qs = ts.map { t =>
       s""""${t.name}":{"cold":${t.cold},"warm":${t.warm},""" +
-        s""""warm_calls":${t.warmCalls.mkString("[", ",", "]")}}"""
+        s""""warm_calls":${t.warmCalls.mkString("[", ",", "]")},""" +
+        s""""cold_cpu":${t.coldCpu},"warm_cpu":${t.warmCpu}}"""
     }.mkString("{", ",", "}")
     s"""{${header(ts, run)},"queries":$qs}"""
   }
@@ -155,8 +182,10 @@ object Bench {
     // masquerade as a (fast) timing. NonFatal only — after an
     // OutOfMemoryError or LinkageError every later timing would be a lie.
     // Cleanup runs outside the timed span, so no call pays its
-    // predecessor's cleanup.
-    def pass(): Seq[Double] = selected.map { case (name, fn) =>
+    // predecessor's cleanup; the CPU reading, like perfbench's, ends
+    // after it. Each call gives (wall seconds, CPU seconds).
+    def pass(): Seq[(Double, Double)] = selected.map { case (name, fn) =>
+      val cpu0 = threadCpu()
       val t0 = System.nanoTime()
       val ok = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -167,13 +196,14 @@ object Bench {
       }
       lastResult = System.nanoTime()
       Cleanup(spark)
-      if (ok) (lastResult - t0) / 1e9 else -1.0
+      (if (ok) (lastResult - t0) / 1e9 else -1.0, cpuSince(cpu0))
     }
     val cold = pass()
     val coldE2eSec = (lastResult - start) / 1e9
     val warm = Seq.fill(warmPasses)(pass())
     val timings = selected.indices.map(i =>
-      Timing(selected(i)._1, cold(i), warm.map(_(i))))
+      Timing(selected(i)._1, cold(i)._1, warm.map(_(i)._1), cold(i)._2,
+        warm.map(_(i)._2)))
     val run = Run(setupSec, coldE2eSec, Memo.evictions, Memo.rebuilds,
       Memo.rebuildSeconds, sfDir)
     new java.io.File("target").mkdirs()

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Shared quantized design: y = extendedprice cents, x1 = quantity,
   * x2 = discount cents — all integer-valued, so Gram/Xᵀy are bit-exact in
-  * both engines; the solves (Breeze LU vs DuckDB Cramer) agree to ≪1e-4 and
+  * both engines; the solves (LU vs DuckDB Cramer) agree to ≪1e-4 and
   * β is rounded to 4 decimals (SURVEY.md §7.4 risk note).
   */
 object MlQueries {

@@ -18,17 +18,19 @@ import org.apache.spark.sql.functions._
   * as CTEs.
   *
   * Scale shape (100 TB): the edge list and degree table materialize
-  * once (eager localCheckpoint — 5 reuses each); each iteration
-  * joins the NODE-width rank and degree frames into the streaming
-  * edge scan (size-dispatched: broadcast under the
-  * `graft.graph.broadcastStateBytes` budget, shuffle join beyond —
-  * [[Graph.stateHint]]) and exchanges ONE map-side-combined aggregate
-  * on dst carrying (dst, long) pairs — rank state is 16 bytes/node,
-  * never adjacency or payload. Where |V| outgrows broadcast the
-  * dispatch flips to the plain join and the right deployment buckets
-  * the edge table by src (exchange-free on src, pinned in
-  * ScaleTechniquesSpec); the loop adds no driver-side state beyond
-  * N.
+  * once (eager localCheckpoint — 5 reuses each). While the rank state
+  * (16 bytes/node) fits the `graft.graph.broadcastStateBytes` budget,
+  * the rank loop holds it on the driver as a plain array and each round
+  * is ONE job over the edges indexed once into dst-range blocks, each
+  * task returning the exact sums of its own range ([[DriverRank]]) —
+  * driver state is O(|V|), the size a broadcast join would ship anyway.
+  * Beyond the budget each round joins the NODE-width rank and degree
+  * frames into the streaming edge scan as plain shuffle joins
+  * ([[Graph.stateHint]]) and exchanges ONE map-side-combined aggregate
+  * on dst carrying (dst, long) pairs, never adjacency or payload; the
+  * right deployment then buckets the edge table by src (exchange-free
+  * on src, pinned in ScaleTechniquesSpec) and the loop holds no
+  * driver-side state beyond N.
   */
 object Graph {
 
@@ -47,8 +49,10 @@ object Graph {
 
   /** One rank iteration from the materialized edge/degree frames —
     * factored out so ShuffleAuditSpec can plan-assert its exchange
-    * budget. Rank state and degrees are NODE-width (|V| ≪ |E|), so both
-    * ride broadcast hash joins (below the [[stateHint]] budget —
+    * budget. The rank loop runs it only over the state budget
+    * ([[rankForm]]); within it, [[DriverRank]] does the same arithmetic
+    * on a driver-held vector. Rank state and degrees are NODE-width
+    * (|V| ≪ |E|), so both ride broadcast hash joins (below the [[stateHint]] budget —
     * beyond it the dispatch plans plain joins) and the edge table streams through
     * un-shuffled and un-sorted in whatever layout it sits — the only
     * exchange is the map-side-combined (dst, long) partial aggregate.
@@ -111,16 +115,21 @@ object Graph {
     * (ScaleTechniquesSpec pins that layout consumes exchange-free), so
     * the un-hinted join is the co-keyed form, not a regression. */
   def stateHint(state: DataFrame, rows: Long,
-      bytesPerRow: Long = 16L): DataFrame = {
+      bytesPerRow: Long = 16L): DataFrame =
+    if (fitsState(state.sparkSession, rows, bytesPerRow)) broadcast(state)
+    else state
+
+  /** The size test behind [[stateHint]]: do `rows` state rows of
+    * `bytesPerRow` fit `graft.graph.broadcastStateBytes`? */
+  private[graft] def fitsState(s: org.apache.spark.sql.SparkSession,
+      rows: Long, bytesPerRow: Long = 16L): Boolean = {
     // malformed conf falls back to the default rather than throwing out
     // of plan construction; the size test divides instead of multiplying
     // so extreme row counts cannot overflow into a spurious broadcast
-    val budget = state.sparkSession.conf
-      .getOption("graft.graph.broadcastStateBytes")
+    val budget = s.conf.getOption("graft.graph.broadcastStateBytes")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .getOrElse(1L << 30)
-    val fits = bytesPerRow <= 0 || rows <= budget / bytesPerRow
-    if (fits) broadcast(state) else state
+    bytesPerRow <= 0 || rows <= budget / bytesPerRow
   }
 
   /** Pack a non-negative key pair into ONE 8-byte long (hi·2³² + lo) —
@@ -275,8 +284,9 @@ object Graph {
     * fixpoint run) over the shared [[edgeFrames]]. Each query reads only
     * its own entry: a session running only the bounded query pays no
     * convergence probes and no rounds past [[iters]], and no entry pins a
-    * state another entry also holds. Every form checkpoints its last
-    * round, so the entry is a materialized leaf. */
+    * state another entry also holds. Both arms of [[rankForm]] end in a
+    * localCheckpoint of the (node, pr) frame, so the entry is a
+    * materialized leaf the memo budget accounts. */
   private[graft] def rankRun(s: org.apache.spark.sql.SparkSession, d: String,
       ppr: Boolean, fixpoint: Boolean): DataFrame =
     graft.Memo(s, s"graph.${if (ppr) "ppr" else "pagerank"}" +
@@ -296,21 +306,39 @@ object Graph {
     * graphs; [[pagerankFixpoint]] must equal it at the round it stopped). */
   def pagerankRanksOn(e: DataFrame, deg: DataFrame, n: Long,
       nIters: Int): DataFrame =
-    rankLoop(deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
-      rankIteration(e, deg, _, n), n, nIters, None)._1
+    rankForm(e, deg, n, None, nIters, None)._1
 
-  /** The one loop behind every rank form, bounded and fixpoint, PageRank
-    * and PPR (they differ only in init frame, step function and stop
-    * rule, so a cadence or probe change cannot apply to one form and not
-    * another): iterate `step` from `init`, at most `maxRounds` times.
-    * Each round ends in an EAGER localCheckpoint (the CC-loop discipline,
-    * Dedup.scala), so round i's plan starts from a LogicalRDD leaf and
-    * lineage depth, plan size and planner time stay O(1) in the round
-    * count; the returned state is materialized too. With `eps` set, each
-    * round is probed by [[rankDelta12]] and the loop stops at the first
-    * round whose quantized L1 delta drops below `eps`. Returns (state,
-    * rounds run). Dangling mass: the undirected edge construction gives
-    * every node outdeg ≥ 1, so no sink-redistribution term exists. */
+  /** Every rank form, bounded and fixpoint, PageRank (`reset` empty) and
+    * PPR, dispatched on the rank state's size: while |V| × 16 B fits
+    * `graft.graph.broadcastStateBytes` ([[fitsState]], the test
+    * [[stateHint]] applies), the rank vector is a driver-side array and
+    * each round is one job ([[DriverRank]]); beyond it, the DataFrame
+    * rounds of [[rankLoop]]. Both arms give bit-identical ranks and stop
+    * at the same round (GraphFixpointSpec runs both). */
+  private def rankForm(e: DataFrame, deg: DataFrame, n: Long,
+      reset: Option[org.apache.spark.sql.Column], maxRounds: Int,
+      eps: Option[Double]): (DataFrame, Int) =
+    if (fitsState(deg.sparkSession, n)) DriverRank.run(e, deg, n, reset,
+      maxRounds, eps)
+    else reset match {
+      case None => rankLoop(
+        deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
+        rankIteration(e, deg, _, n), n, maxRounds, eps)
+      case Some(r) => rankLoop(deg.select(col("src").as("node"), r.as("pr")),
+        pprIteration(e, deg, _, n, r), n, maxRounds, eps)
+    }
+
+  /** The over-budget rank loop, PageRank and PPR (they differ only in
+    * init frame and step function): iterate `step` from `init`, at most
+    * `maxRounds` times. Each round ends in an EAGER localCheckpoint (the
+    * CC-loop discipline, Dedup.scala), so round i's plan starts from a
+    * LogicalRDD leaf and lineage depth, plan size and planner time stay
+    * O(1) in the round count; the returned state is materialized too.
+    * With `eps` set, each round is probed by [[rankDelta12]] and the loop
+    * stops at the first round whose quantized L1 delta drops below `eps`.
+    * Returns (state, rounds run). Dangling mass: the undirected edge
+    * construction gives every node outdeg ≥ 1, so no sink-redistribution
+    * term exists. */
   private def rankLoop(init: DataFrame, step: DataFrame => DataFrame,
       n: Long, maxRounds: Int, eps: Option[Double]): (DataFrame, Int) = {
     val budget12 = eps.map(x => math.round(x * 1e12))
@@ -362,13 +390,13 @@ object Graph {
     * (fixpoint ranks, r) is bit-identical to [[pagerankRanksOn]](…, r)
     * whether the ε-probe or the cap fired (pinned differentially in
     * GraphFixpointSpec). The declared queries keep their fixed
-    * 5-iteration form — oracle determinism — and the convergence probe
-    * costs one node-width join + scalar aggregate per round on top of
-    * the loop's existing exchange budget. */
+    * 5-iteration form — oracle determinism. Under the state budget the
+    * convergence probe is driver-side arithmetic on the held rank
+    * vector ([[DriverRank]]); over it, one node-width join + scalar
+    * aggregate per round ([[rankDelta12]]). */
   def pagerankFixpoint(e: DataFrame, deg: DataFrame, n: Long,
       eps: Double, maxRounds: Int): (DataFrame, Int) =
-    rankLoop(deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),
-      rankIteration(e, deg, _, n), n, maxRounds, Some(eps))
+    rankForm(e, deg, n, None, maxRounds, Some(eps))
 
   /** The q_pagerank oracle, parameterized by iteration count so the
     * declared bounded query (5 rounds) and the declared fixpoint query
@@ -448,8 +476,7 @@ object Graph {
     * restart distribution as a column expression over `node`. */
   def pprRanksOn(e: DataFrame, deg: DataFrame, n: Long,
       reset: org.apache.spark.sql.Column, nIters: Int): DataFrame =
-    rankLoop(deg.select(col("src").as("node"), reset.as("pr")),
-      pprIteration(e, deg, _, n, reset), n, nIters, None)._1
+    rankForm(e, deg, n, Some(reset), nIters, None)._1
 
   /** Converge-and-stop personalized PageRank — same contract as
     * [[pagerankFixpoint]]: stops when the quantized L1 rank delta drops
@@ -458,8 +485,7 @@ object Graph {
   def pprFixpoint(e: DataFrame, deg: DataFrame, n: Long,
       reset: org.apache.spark.sql.Column, eps: Double,
       maxRounds: Int): (DataFrame, Int) =
-    rankLoop(deg.select(col("src").as("node"), reset.as("pr")),
-      pprIteration(e, deg, _, n, reset), n, maxRounds, Some(eps))
+    rankForm(e, deg, n, Some(reset), maxRounds, Some(eps))
 
   private def pprIterSql(i: Int): String =
     s"""c$i AS MATERIALIZED (SELECT e.dst,

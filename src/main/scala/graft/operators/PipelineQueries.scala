@@ -646,15 +646,6 @@ object PipelineQueries {
         .orderBy("doc_id")
   }
 
-  /** The composed corpus FILTER — the production quality gate every
-    * pretraining pipeline runs before dedup/mixing, declared as one
-    * query instead of living only in tests: per document, the Gopher-
-    * style signals (length, stopword ratio, top-term concentration,
-    * duplicate-shingle fraction) and a keep/drop verdict from explicit
-    * thresholds. One corpus-side tf aggregate + the narrow shingle pass
-    * feed everything; the verdict is arithmetic on the ROUND(6) signals
-    * so both engines compare identical doubles. Docs too short to
-    * shingle (< 3 tokens) ride the left join with dup = 0. */
   /** Oracle fragment: per-doc quality signals `sig`(doc_id, n_tokens,
     * stop_r, top_r, dup_r) — requires `$tokSql` upstream. Shared by
     * q_corpus_filter and q_corpus_assembly. */
@@ -717,6 +708,15 @@ object PipelineQueries {
     col("n_tokens") >= 25 && col("stop_r") >= 0.03 &&
       col("top_r") <= 0.12 && col("dup_r") <= 0.2
 
+  /** The composed corpus FILTER — the production quality gate every
+    * pretraining pipeline runs before dedup/mixing, declared as one
+    * query instead of living only in tests: per document, the Gopher-
+    * style signals (length, stopword ratio, top-term concentration,
+    * duplicate-shingle fraction) and a keep/drop verdict from explicit
+    * thresholds. One corpus-side tf aggregate + the narrow shingle pass
+    * feed everything; the verdict is arithmetic on the ROUND(6) signals
+    * so both engines compare identical doubles. Docs too short to
+    * shingle (< 3 tokens) ride the left join with dup = 0. */
   private val qCorpusFilter = Q("q_corpus_filter",
     s"""WITH $tokSql,
        |$qualitySigSql
@@ -936,21 +936,6 @@ object PipelineQueries {
       .orderBy("part_id", "chunk_id")
   }
 
-  /** Temperature-based corpus mixing (multilingual-LM style): source s
-    * with n_s tokens is sampled at a rate ∝ n_s^α / n_s (α = 0.5 — the
-    * sampling-temperature flattening), normalized so the expected output
-    * is half the corpus's tokens. The per-source token totals are ONE
-    * aggregation pass over the corpus, collected to the driver
-    * (|sources| rows — the k-bounded collect discipline of S2); the
-    * rates come back as a broadcast |sources|-row frame, so doc
-    * selection is the same narrow deterministic LCG filter as
-    * q_stratified_sample riding a BroadcastHashJoin — the corpus is
-    * scanned exactly twice (stats, selection) and never shuffled.
-    * Determinism discipline: the normalizer z = Σ√n_s is quantized to
-    * an integer sum (round(√n·10⁶) summed as BIGINT) so its value is
-    * independent of aggregation order, and every rate is derived with
-    * the identical IEEE operation sequence in both engines (sqrt and
-    * round are correctly-rounded; pow would not be). */
   /** Corpus assembly: LEAKAGE-FREE train/val/test split — the split key
     * is an engine-portable hash of the exact-dup GROUP digest
     * (md5(text)), not the doc id, so every copy of a duplicated
@@ -989,6 +974,21 @@ object PipelineQueries {
       .orderBy("split")
   }
 
+  /** Temperature-based corpus mixing (multilingual-LM style): source s
+    * with n_s tokens is sampled at a rate ∝ n_s^α / n_s (α = 0.5 — the
+    * sampling-temperature flattening), normalized so the expected output
+    * is half the corpus's tokens. The per-source token totals are ONE
+    * aggregation pass over the corpus, collected to the driver
+    * (|sources| rows — the k-bounded collect discipline of S2); the
+    * rates come back as a broadcast |sources|-row frame, so doc
+    * selection is the same narrow deterministic LCG filter as
+    * q_stratified_sample riding a BroadcastHashJoin — the corpus is
+    * scanned exactly twice (stats, selection) and never shuffled.
+    * Determinism discipline: the normalizer z = Σ√n_s is quantized to
+    * an integer sum (round(√n·10⁶) summed as BIGINT) so its value is
+    * independent of aggregation order, and every rate is derived with
+    * the identical IEEE operation sequence in both engines (sqrt and
+    * round are correctly-rounded; pow would not be). */
   private val qMixTemperature = Q("q_mix_temperature",
     s"""WITH wc AS (SELECT doc_id, source, $ntokSql AS ntok
        |  FROM documents),
@@ -1029,15 +1029,6 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
-  /** Train/test decontamination — the benchmark-overlap filter every
-    * training-corpus assembly runs before release (flag training docs
-    * sharing any 8-token shingle with an eval/benchmark set; here the
-    * benchmark is the doc_id % 20 == 0 slice). Scale shape: the benchmark
-    * shingle set is bounded by the EVAL corpus (thousands of docs, not the
-    * training corpus), so its distinct hashes ride a broadcast semi-join —
-    * the 100 TB training side is one narrow shingle pass plus a per-doc
-    * aggregate, and the wide exchange moves 8-byte xxhash64 keys only
-    * (collisions can only ADD a flag at odds ~n²/2⁶⁴ — immaterial). */
   /** Per-(doc, 8-token-window-hash) multiplicities, memoized per
     * (session, dir) — ONE k=8 shingle pass serves THREE queries:
     * q_substring_dup consumes the counts, and q_decontaminate /
@@ -1063,6 +1054,15 @@ object PipelineQueries {
       d: String): org.apache.spark.sql.DataFrame =
     sh8Counts(s, d).select("doc_id", "h")
 
+  /** Train/test decontamination — the benchmark-overlap filter every
+    * training-corpus assembly runs before release (flag training docs
+    * sharing any 8-token shingle with an eval/benchmark set; here the
+    * benchmark is the doc_id % 20 == 0 slice). Scale shape: the benchmark
+    * shingle set is bounded by the EVAL corpus (thousands of docs, not the
+    * training corpus), so its distinct hashes ride a broadcast semi-join —
+    * the 100 TB training side is one narrow shingle pass plus a per-doc
+    * aggregate, and the wide exchange moves 8-byte xxhash64 keys only
+    * (collisions can only ADD a flag at odds ~n²/2⁶⁴ — immaterial). */
   private val qDecontaminate = Q("q_decontaminate",
     s"""WITH $tokSql,
        |sh8 AS (SELECT DISTINCT doc_id, sh FROM (
@@ -2228,13 +2228,6 @@ object PipelineQueries {
       .orderBy("q_id", "rank")
   }
 
-  /** X14 scale path #2: IVF (inverted-file) ANN — a k-means coarse
-    * quantizer (the Bahmani sketch + weighted Lloyd from the ml layer,
-    * deterministic seed) partitions vectors into cells; each query probes
-    * its `nprobe` nearest cells only. Complements q_ann_lsh: IVF adapts
-    * to the data distribution where LSH is data-oblivious. At 100 TB the
-    * cell id is the partition key — a probe touches nprobe/k of the
-    * corpus. Rows-only check; recall vs brute force asserted in tests. */
   /** The IVF coarse quantizer (Bahmani sketch + weighted Lloyd, seed 42,
     * 16 cells), memoized per (session, dir): q_ann_ivf and q_ann_ivf_sq
     * train the IDENTICAL quantizer — the sketch's 4 distributed rounds
@@ -2250,6 +2243,13 @@ object PipelineQueries {
       graft.ml.Bahmani.lloydOnSketch(sk, w, nCells)
     }
 
+  /** X14 scale path #2: IVF (inverted-file) ANN — a k-means coarse
+    * quantizer (the Bahmani sketch + weighted Lloyd from the ml layer,
+    * deterministic seed) partitions vectors into cells; each query probes
+    * its `nprobe` nearest cells only. Complements q_ann_lsh: IVF adapts
+    * to the data distribution where LSH is data-oblivious. At 100 TB the
+    * cell id is the partition key — a probe touches nprobe/k of the
+    * corpus. Rows-only check; recall vs brute force asserted in tests. */
   private val qAnnIvf = Q.noOracle("q_ann_ivf") { (s, d) =>
     import s.implicits._
     val nCells = 16

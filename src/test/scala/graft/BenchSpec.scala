@@ -14,9 +14,11 @@ class BenchSpec extends AnyFunSuite with Matchers {
   private val timings = (0 until 150).map { i =>
     val name = f"q_synthetic_$i%03d"
     if (failedNames.contains(name)) {
-      if (i % 2 == 0) Bench.Timing(name, -1.0, Seq(-1.0, -1.0, -1.0))
-      else Bench.Timing(name, 1.5, Seq(0.4, -1.0, 0.5))
-    } else Bench.Timing(name, 0.5 + i * 0.123, Seq(0.3, 0.1 + i * 0.01, 0.2))
+      if (i % 2 == 0) Bench.Timing(name, -1.0, Seq(-1.0, -1.0, -1.0), 0.1,
+        Seq(0.1, 0.1, 0.1))
+      else Bench.Timing(name, 1.5, Seq(0.4, -1.0, 0.5), 2.0, Seq(0.6, 0.1, 0.7))
+    } else Bench.Timing(name, 0.5 + i * 0.123, Seq(0.3, 0.1 + i * 0.01, 0.2),
+      1.0 + i, Seq(0.9, 0.5, 0.7))
   }
 
   private val run = Bench.Run(setupSec = 6.789, coldE2eSec = 1234.567,
@@ -61,6 +63,10 @@ class BenchSpec extends AnyFunSuite with Matchers {
     q.get("warm_calls").size() shouldBe Bench.warmPasses
     full.get("queries").get("q_synthetic_099").get("warm").asDouble() shouldBe
       -1.0
+    // CPU seconds next to the wall figures: the cold call's and the
+    // median warm call's
+    q.get("cold_cpu").asDouble() shouldBe 11.0
+    q.get("warm_cpu").asDouble() shouldBe 0.7
   }
 
   test("the selection keeps suite order, takes named queries once in argument order, and lists every unknown name") {

@@ -165,6 +165,102 @@ class GraphFixpointSpec extends SparkSpec {
     rankMap(pr) shouldBe rankMap(Graph.pprRanksOn(e, deg, n, reset, 3))
   }
 
+  /** `f` on both rank arms: the driver-held rank vector at the default
+    * `graft.graph.broadcastStateBytes`, then the DataFrame rounds at a
+    * zero budget; with each arm's Spark job count. */
+  private def bothArms[T](f: => T): ((T, Int), (T, Int)) = {
+    val key = "graft.graph.broadcastStateBytes"
+    spark.conf.unset(key)
+    try {
+      val held = jobsOf(f)
+      spark.conf.set(key, "0")
+      (held, jobsOf(f))
+    } finally spark.conf.unset(key)
+  }
+
+  /** The four rank forms on (e, deg, n), ε and cap as given, each with
+    * its rounds (the bounded forms run `bounded` rounds). */
+  private def fourForms(e: DataFrame, deg: DataFrame, n: Long,
+      reset: org.apache.spark.sql.Column, bounded: Int, eps: Double,
+      cap: Int): Seq[(Map[Long, Double], Int)] = Seq(
+    rankMap(Graph.pagerankRanksOn(e, deg, n, bounded)) -> bounded,
+    Graph.pagerankFixpoint(e, deg, n, eps, cap) match {
+      case (pr, r) => rankMap(pr) -> r },
+    rankMap(Graph.pprRanksOn(e, deg, n, reset, bounded)) -> bounded,
+    Graph.pprFixpoint(e, deg, n, reset, eps, cap) match {
+      case (pr, r) => rankMap(pr) -> r })
+
+  test("both rank arms agree bit for bit on the corpus: driver-held under the budget, DataFrame rounds at budget 0") {
+    try {
+      val (e, deg, n) = Graph.edgeFrames(spark, sfDir)
+      val reset = when(col("node") < 1000000L && col("node") % 100 === 0,
+        lit(1.0) / 7).otherwise(lit(0.0))
+      val ((held, heldJobs), (frames, frameJobs)) =
+        bothArms(fourForms(e, deg, n, reset, 5, 1e-12, 8))
+      held shouldBe frames
+      held.map(_._2) shouldBe Seq(5, 8, 5, 8)
+      held.foreach(_._1.size shouldBe n)
+      // the dispatch took each arm: one job per held round, several per
+      // DataFrame round plus its probe
+      info(s"jobs: driver-held $heldJobs, DataFrame rounds $frameJobs")
+      heldJobs should be < frameJobs
+    } finally {
+      Memo.release(spark); Cleanup(spark)
+    }
+  }
+
+  test("both rank arms stop at the same round when a loose ε fires mid-run") {
+    // the caterpillar of the PageRank ε test; PPR seeded at the tail end
+    val (e, deg, n) = rankFrames(
+      (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)) ++
+        Seq((4L, 5L), (5L, 6L)))
+    val reset = when(col("node") === 6, lit(1.0)).otherwise(lit(0.0))
+    val ((held, _), (frames, _)) =
+      bothArms(fourForms(e, deg, n, reset, 4, 5e-3, 64))
+    held shouldBe frames
+    Seq(held(1)._2, held(3)._2).foreach { r =>
+      r should be > 1
+      r should be < 64
+    }
+  }
+
+  test("both rank arms keep the same node set on directed graphs with sources and sinks") {
+    // directed: 1 has no in-edges and 9 no out-edges (no degree row), so
+    // PageRank drops 1 and gains 9 after round 1 while PPR keeps every
+    // degree src; the 2 → 3 → 4 → 2 cycle keeps rank circulating
+    val e = Seq((1L, 3L), (2L, 3L), (3L, 4L), (4L, 2L), (4L, 9L), (2L, 5L),
+      (5L, 6L), (6L, 9L)).toDF("src", "dst").localCheckpoint(true)
+    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint(true)
+    val n = deg.count()
+    val reset = when(col("node") === 1, lit(1.0)).otherwise(lit(0.0))
+    for (rounds <- 1 to 4) withClue(s"$rounds rounds: ") {
+      val ((held, _), (frames, _)) =
+        bothArms(fourForms(e, deg, n, reset, rounds, 1e-3, rounds))
+      held shouldBe frames
+    }
+    val ((one, _), _) = bothArms(rankMap(Graph.pagerankRanksOn(e, deg, n, 1)))
+    // round 1 reaches exactly the dst nodes of the degree srcs' edges
+    one.keySet shouldBe Set(2L, 3L, 4L, 5L, 6L, 9L)
+  }
+
+  test("round0 is Spark's round-to-long: HALF_UP on the shortest decimal string") {
+    val rnd = new scala.util.Random(5)
+    val xs = Seq(0.5, 1.5, 2.5, -0.5, -2.5, 0.49999999999999994, -0.49999999999999994,
+      4503599627370495.5, 4503599627370496.0, 9.007199254740993e15, 1e18,
+      -1e18, 0.0, -0.0, 1e12 / 3, 123456.49999999999, 123456.50000000001) ++
+      Seq.fill(2000)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(18))) ++
+      Seq.fill(2000)((rnd.nextInt(1000000) + 0.5) * (if (rnd.nextBoolean()) 1 else -1)) ++
+      Seq.fill(2000)(math.nextAfter(rnd.nextInt(1000000) + 0.5,
+        if (rnd.nextBoolean()) 0.0 else 1e7))
+    val df = xs.toDF("x").select(col("x"), round(col("x")).cast("long").as("r"))
+    df.collect().foreach { r =>
+      withClue(s"x=${r.getDouble(0)}: ") {
+        graft.operators.DriverRank.round0(r.getDouble(0)) shouldBe r.getLong(1)
+      }
+    }
+  }
+
   private def countBhj(df: DataFrame): Int = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec

@@ -34,12 +34,51 @@ class OptimizerSpec extends SparkSpec {
         round(col("l_extendedprice")).as("y"))
     val (f, g) = BFGS.leastSquares(li, Seq(col("x1"), col("x2")), col("y"))
     // Normal-equations truth from the Ridge path (lambda=0).
-    val fit = Ridge.fit(li, Seq(col("x1"), col("x2")), col("y"), lambda = 0)
+    val beta = DenseVector(
+      Ridge.fit(li, Seq(col("x1"), col("x2")), col("y"), lambda = 0).beta)
     val r = BFGS.minimize(f, g, DenseVector.zeros[Double](3), maxIter = 200,
-      epsilon = 1e-3 * norm(fit.beta), // scaled: f is summed over 6k rows
+      epsilon = 1e-3 * norm(beta), // scaled: f is summed over 6k rows
       lineSearch = BFGS.backtracking(), strict = false)
     // Relative parameter error, not gradient norm, is the meaningful gate.
-    norm(r.x - fit.beta) / norm(fit.beta) should be < 1e-2
+    norm(r.x - beta) / norm(beta) should be < 1e-2
+  }
+
+  test("ridge solve on plain arrays agrees with a Breeze LU reference") {
+    // seeded systems from integer-valued designs (the quantization
+    // discipline of Ridge.sums), k ∈ {2, 3, 5} and λ ∈ {0, 10}, plus one
+    // near-collinear design: x2 = x1 + a ±1 perturbation on 1 row in 50
+    def system(k: Int, seed: Long, collinear: Boolean) = {
+      val rnd = new scala.util.Random(seed)
+      val rows = (0 until 400).map { i =>
+        val x = Array.fill(k - 1)(rnd.nextInt(50).toDouble)
+        if (collinear) x(1) = x(0) + (if (i % 50 == 0) rnd.nextInt(3) - 1 else 0)
+        val y = math.rint(7.0 + x.zipWithIndex.map { case (v, j) =>
+          (j + 1.5) * v }.sum + rnd.nextGaussian() * 4.0)
+        (1.0 +: x, y)
+      }
+      val g = Array.tabulate(k, k)((p, q) => rows.map(r => r._1(p) * r._1(q)).sum)
+      val b = Array.tabulate(k)(p => rows.map(r => r._1(p) * r._2).sum)
+      (g, b, rows.map(r => r._2 * r._2).sum, rows.size.toLong)
+    }
+    def rel(a: Double, b: Double): Double =
+      math.abs(a - b) / math.max(math.abs(b), 1e-300)
+    val cases = (for (k <- Seq(2, 3, 5); lambda <- Seq(0.0, 10.0))
+      yield (k, lambda, false)) :+ ((3, 0.0, true))
+    for ((k, lambda, collinear) <- cases) withClue(s"k=$k λ=$lambda collinear=$collinear: ") {
+      val (g, b, yy, n) = system(k, 100L + k, collinear)
+      val fit = Ridge.solve(g, b, yy, n, lambda)
+      val gm = DenseMatrix.tabulate(k, k)((p, q) => g(p)(q))
+      val bv = DenseVector(b)
+      val reg = gm + DenseMatrix.eye[Double](k) * lambda
+      val beta = reg \ bv
+      val inv = breeze.linalg.inv(reg)
+      val ssr = math.max(0.0, yy - 2.0 * (beta dot bv) + (beta dot (gm * beta)))
+      for (j <- 0 until k) {
+        rel(fit.beta(j), beta(j)) should be < 1e-9
+        rel(fit.gramInv(j)(j), inv(j, j)) should be < 1e-9
+      }
+      rel(fit.ssr, ssr) should be < 1e-9
+    }
   }
 
   test("parallel in-core mmul matches sequential within 1e-5 Frobenius") {
