@@ -44,8 +44,4 @@ object Q {
     * mirror the oracle SQL with `ROUND(x, d) + 0.0`; tools/signbit_sweep.py
     * audits all oracles for surviving signed zeros. */
   def roundz(c: Column, d: Int): Column = round(c, d) + lit(0.0)
-
-  /** Driver-side counterpart of [[roundz]] for values rounded in Scala
-    * before `createDataFrame` (the solver finale pattern). */
-  def normz(x: Double): Double = x + 0.0
 }

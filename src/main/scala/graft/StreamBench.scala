@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * checkpoint: the time to drain the backlog includes the state-store
   * reload, the recovery path a production ingest actually exercises).
   *
-  * Pipelines (SPARK_GRAFT_STREAM_PIPELINES, default all three):
+  * Pipelines (the main arguments, default all three):
   *  - `monitor`  — [[graft.streaming.EventStreams.windowedMonitor]],
   *    the fused sketch aggregate. State = |open windows| × (64 + d·w +
   *    bins) cells: bounded by the event-time RANGE, flat in event count.
@@ -30,11 +30,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    bounded by the dedup horizon, not stream lifetime.
   *
   * Shape: each pipeline's source table is split (untimed prep) into
-  * `SPARK_GRAFT_STREAM_FILES` time-range-partitioned parquet files; a
-  * `SPARK_GRAFT_STREAM_SPLIT` fraction lands before the first query
-  * instance, the rest lands while it is STOPPED and is drained by the
-  * restarted instance (catch-up). Output goes to the `noop` sink so the
-  * measured cost is the operator, not a sink; a
+  * `nFiles` time-range-partitioned parquet files; a `split` fraction
+  * lands before the first query instance, the rest lands while it is
+  * STOPPED and is drained by the restarted instance (catch-up). Output
+  * goes to the `noop` sink so the measured cost is the operator, not a
+  * sink; a
   * [[StreamingQueryListener]] records every batch's input rows,
   * duration, and state-operator footprint. Listener events are posted
   * asynchronously — after each stop the harness polls until the batch
@@ -48,14 +48,27 @@ object StreamBench {
   private final case class B(id: Long, rows: Long, durMs: Long,
       stateRows: Long, stateBytes: Long)
 
+  // the stream shape: files per source table, `maxFilesPerTrigger`, the
+  // fraction of the files landed before the first query instance, and
+  // the median batch rows below which a run is flagged `overhead_bound`
+  private val nFiles = 100
+  private val perTrigger = 5
+  private val split = 0.7
+  private val overheadFloor = 50000L
+  private val allPipelines = Seq("monitor", "sessionize", "ingest")
+
   def main(args: Array[String]): Unit = {
+    val pipelines = Bench.selection(
+      collection.immutable.ListMap.from(allPipelines.map(p => p -> p)),
+      args.toSeq) match {
+      case Right(sel) => sel.map(_._1)
+      case Left(unknown) =>
+        System.err.println(
+          s"[streambench] unknown pipelines: ${unknown.mkString(", ")}")
+        sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "100").toInt
-    val perTrigger = sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "5")
-    val split = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLIT", "0.7").toDouble
-    val pipelines = sys.env.getOrElse("SPARK_GRAFT_STREAM_PIPELINES",
-      "monitor,sessionize,ingest").split(",").map(_.trim).filter(_.nonEmpty)
     val spark = HarnessSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -125,7 +138,7 @@ object StreamBench {
 
       def drain(): (Double, Long) = {
         val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", perTrigger).parquet(srcDir)
+          .option("maxFilesPerTrigger", perTrigger.toLong).parquet(srcDir)
         val t0 = System.nanoTime()
         val q = query(stream)
           .writeStream.format("noop").outputMode(outputMode)
@@ -163,8 +176,6 @@ object StreamBench {
         val rs = bs.map(_.rows).sorted
         if (rs.nonEmpty) rs(rs.size / 2) else 0L
       }
-      val overheadFloor =
-        sys.env.getOrElse("SPARK_GRAFT_OVERHEAD_ROWS", "50000").toLong
       val summary =
         s""""$name":{"rows_per_sec":${r2((rowsA + rowsB) / (wallA + wallB))},""" +
         s""""rows_per_batch_median":$rowsMed,""" +
@@ -220,7 +231,7 @@ object StreamBench {
           df.as[graft.streaming.CorpusIngest.Doc]).toDF(),
         schemaAt, "append")))
 
-    val results = pipelines.flatMap(p => defs.get(p).map(f => p -> f()))
+    val results = pipelines.map(p => p -> defs(p)())
     val json =
       s"""{"metric":"stream_bench","sf":"$sfDir","files":$nFiles,""" +
       s""""files_per_trigger":$perTrigger,"split":$split,""" +

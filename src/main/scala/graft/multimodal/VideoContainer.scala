@@ -44,8 +44,6 @@ object VideoContainer {
       ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
   private def u64(b: Array[Byte], o: Int): Long =
     (u32(b, o) << 32) | u32(b, o + 4)
-  private def u16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
   private def u32le(b: Array[Byte], o: Int): Long =
     ((b(o + 3) & 0xffL) << 24) | ((b(o + 2) & 0xffL) << 16) |
       ((b(o + 1) & 0xffL) << 8) | (b(o) & 0xffL)

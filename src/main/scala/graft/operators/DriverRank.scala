@@ -7,8 +7,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The driver-held arm of [[Graph]]'s rank loop, taken while the rank
   * state fits `graft.graph.broadcastStateBytes` (the [[Graph.stateHint]]
-  * test at 16 B/node): the Samsara shape of a distributed reduce into a
-  * small in-core object followed by driver-side math on it
+  * test at [[bytesPerNode]]): the Samsara shape of a distributed reduce
+  * into a small in-core object followed by driver-side math on it
   * (`allreduceBlock`, reference TWCNB.scala:54-83).
   *
   * The edges are indexed ONCE into a persisted RDD of [[Block]]s, one
@@ -38,6 +38,15 @@ private[graft] object DriverRank {
 
   private val q = 1000000000000L
 
+  /** Driver bytes [[run]] holds per node, at most, rounded up: the
+    * figure [[Graph.rankForm]] sizes this arm by. The round loop keeps
+    * twelve 8-byte node-width arrays (ids, outdeg, reset, block dsts,
+    * all, pr, contrib, sums, sumAt, next, and the serialized copies of
+    * the two broadcasts: 96 B) and four narrower ones (srcAt, dstAt,
+    * live, nextLive: 10 B); the result adds the held positions, nodes
+    * and ranks, their slices and the slices' serialized tasks (52 B). */
+  val bytesPerNode = 160L
+
   /** Spark's `round(x)` at scale 0 cast to long: HALF_UP (away from
     * zero) on `java.math.BigDecimal.valueOf(x)`, the shortest decimal
     * string of `x`. Below 2⁵² every k + ½ is a double, and that string
@@ -60,14 +69,7 @@ private[graft] object DriverRank {
       maxRounds: Int, eps: Option[Double]): (DataFrame, Int) = {
     val s = deg.sparkSession
     val sc = s.sparkContext
-    // the init frame's nodes: one row per degree src, sorted by id
-    val nodes = deg.select(col("src").cast("long").as("node"), col("outdeg"))
-      .select(Seq(col("node"), col("outdeg").cast("double")) ++
-        reset.map(_.cast("double")): _*)
-      .collect().sortBy(_.getLong(0))
-    val ids = nodes.map(_.getLong(0))
-    val outdeg = nodes.map(_.getDouble(1))
-    val resetOf = reset.map(_ => nodes.map(_.getDouble(2)))
+    val (ids, outdeg, resetOf) = initNodes(deg, reset)
 
     // dst ranges cut at equal strides of the sorted degree ids
     val parts = math.max(1, math.min(sc.defaultParallelism, ids.length))
@@ -186,6 +188,38 @@ private[graft] object DriverRank {
       blocks.unpersist(blocking = false)
       idsB.destroy(); boundsB.destroy()
     }
+  }
+
+  /** The init frame's nodes, one per degree src, sorted by id: (ids,
+    * outdeg, reset when given). Each task sends its rows as primitive
+    * columns, so the driver never holds a `Row` per node. */
+  private def initNodes(deg: DataFrame, reset: Option[Column])
+      : (Array[Long], Array[Double], Option[Array[Double]]) = {
+    val width = 1 + reset.size // outdeg, then reset when given
+    val chunks = deg.select(col("src").cast("long").as("node"), col("outdeg"))
+      .select(Seq(col("node"), col("outdeg").cast("double")) ++
+        reset.map(_.cast("double")): _*)
+      .rdd.mapPartitions { rows =>
+        val id = Array.newBuilder[Long]
+        val xs = Array.fill(width)(Array.newBuilder[Double])
+        rows.foreach { r =>
+          id += r.getLong(0)
+          xs.indices.foreach(j => xs(j) += r.getDouble(j + 1))
+        }
+        Iterator.single((id.result(), xs.map(_.result())))
+      }.collect()
+    val unsorted = chunks.flatMap(_._1)
+    val ids = unsorted.clone()
+    java.util.Arrays.sort(ids)
+    def sorted(j: Int): Array[Double] = {
+      val x = chunks.flatMap(_._2(j))
+      val out = new Array[Double](x.length)
+      unsorted.indices.foreach { i =>
+        out(java.util.Arrays.binarySearch(ids, unsorted(i))) = x(i)
+      }
+      out
+    }
+    (ids, sorted(0), reset.map(_ => sorted(1)))
   }
 
   /** The distinct values of `a`, ascending. */

@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   * as CTEs.
   *
   * Scale shape (100 TB): the edge list and degree table materialize
-  * once (eager localCheckpoint — 5 reuses each). While the rank state
-  * (16 bytes/node) fits the `graft.graph.broadcastStateBytes` budget,
-  * the rank loop holds it on the driver as a plain array and each round
-  * is ONE job over the edges indexed once into dst-range blocks, each
-  * task returning the exact sums of its own range ([[DriverRank]]) —
+  * once (eager localCheckpoint — 5 reuses each). While the driver-held
+  * rank state ([[DriverRank.bytesPerNode]] bytes/node) fits the
+  * `graft.graph.broadcastStateBytes` budget, the rank loop holds it on
+  * the driver as a plain array and each round is ONE job over the edges
+  * indexed once into dst-range blocks, each task returning the exact
+  * sums of its own range ([[DriverRank]]) —
   * driver state is O(|V|), the size a broadcast join would ship anyway.
   * Beyond the budget each round joins the NODE-width rank and degree
   * frames into the streaming edge scan as plain shuffle joins
@@ -309,17 +310,18 @@ object Graph {
     rankForm(e, deg, n, None, nIters, None)._1
 
   /** Every rank form, bounded and fixpoint, PageRank (`reset` empty) and
-    * PPR, dispatched on the rank state's size: while |V| × 16 B fits
-    * `graft.graph.broadcastStateBytes` ([[fitsState]], the test
-    * [[stateHint]] applies), the rank vector is a driver-side array and
-    * each round is one job ([[DriverRank]]); beyond it, the DataFrame
+    * PPR, dispatched on the rank state's size: while |V| ×
+    * [[DriverRank.bytesPerNode]], the bytes the driver arm holds per
+    * node, fits `graft.graph.broadcastStateBytes` ([[fitsState]], the
+    * test [[stateHint]] applies), the rank vector is a driver-side array
+    * and each round is one job ([[DriverRank]]); beyond it, the DataFrame
     * rounds of [[rankLoop]]. Both arms give bit-identical ranks and stop
     * at the same round (GraphFixpointSpec runs both). */
   private def rankForm(e: DataFrame, deg: DataFrame, n: Long,
       reset: Option[org.apache.spark.sql.Column], maxRounds: Int,
       eps: Option[Double]): (DataFrame, Int) =
-    if (fitsState(deg.sparkSession, n)) DriverRank.run(e, deg, n, reset,
-      maxRounds, eps)
+    if (fitsState(deg.sparkSession, n, DriverRank.bytesPerNode))
+      DriverRank.run(e, deg, n, reset, maxRounds, eps)
     else reset match {
       case None => rankLoop(
         deg.select(col("src").as("node"), (lit(1.0) / n).as("pr")),

@@ -1186,6 +1186,26 @@ object PipelineQueries {
     * the plain corpus. */
   private val embPairsOracle = s"WITH $embSql,\n${embPairsSql("e", 0.4)}"
 
+  /** The embedding corpus as (vec_id, vec: ARRAY<DOUBLE>), the input of
+    * every query in the similarity family. */
+  private def embVecs(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec"))
+
+  /** The top-k readout of the k-NN queries: each q_id's 5 best (q_id,
+    * v_id, cos) rows by cos descending, ties by v_id, as (q_id, rank,
+    * v_id, cos rounded to 6 places). */
+  private def top5(cos: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("v_id"))
+    cos.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= 5)
+      .select(col("q_id"), col("rank"), col("v_id"),
+        round(col("cos"), 6).as("cos"))
+      .orderBy("q_id", "rank")
+  }
+
   /** X14: brute-force cosine top-k — the exactness baseline for ANN.
     * Array-native dot products (zip_with/aggregate, codegen'd) over a
     * bounded query set; no explode of the corpus side. */
@@ -1204,23 +1224,16 @@ object PipelineQueries {
     // Norms precomputed once per vector (same doubles as a per-pair
     // computation — deterministic function of the same input), so each of
     // the n·|Q| pairs costs exactly one codegen'd dot.
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec"))
+    val emb = embVecs(s, d)
       .withColumn("nrm", sqrt(TextFns.dot(col("vec"), col("vec"))))
     val qs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("vec").as("qvec"),
         col("nrm").as("qnrm"))
-    val cos = emb.crossJoin(broadcast(qs))
+    top5(emb.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("v_id"),
         (TextFns.dot(col("qvec"), col("vec")) / (col("qnrm") * col("nrm")))
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("v_id"))
-    cos.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("v_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rank")
+          .as("cos")))
   }
 
   /** Exact quadratic near-dup verdict over (vec_id, vec: ARRAY<DOUBLE>)
@@ -1255,14 +1268,12 @@ object PipelineQueries {
     * declared scale path with the same verdict schema is
     * [[qDedupEmbedLsh]]. */
   private val qDedupEmbed = Q("q_dedup_embed", embPairsOracle) { (s, d) =>
-    embedNearDupBrute(Tables.embeddings(s, d)
-      .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec")),
-      tau = 0.4)
+    embedNearDupBrute(embVecs(s, d), tau = 0.4)
   }
 
   /** Deterministic ±1 hyperplane bank (splitmix64 parity of (plane, dim))
-    * — shared by the LSH operators so every signing pass, on any side of
-    * any join, derives the identical plane family with no stored state. */
+    * that [[lshCandidates]] signs against: every operating point derives
+    * its plane family with no stored state. */
   private def hyperplaneSigns(nPlanes: Int, dims: Int): Array[Array[Double]] =
     Array.tabulate(nPlanes) { p =>
       Array.tabulate(dims) { k =>
@@ -1291,22 +1302,27 @@ object PipelineQueries {
       sig
     }
 
-  /** Shared LSH candidate machinery for the embedding near-dup family:
-    * sign `emb` (vec_id, vec: ARRAY<DOUBLE>[64]) ONCE into L b-bit
-    * hyperplane signatures (one narrow typed map, eagerly checkpointed so
-    * every consumer reads the stored blocks), then emit distinct
-    * candidate pairs sharing any (table, bucket) key, where one side
-    * probes every bucket within Hamming distance ≤ `hamming` of its
-    * signature (multiprobe, Lv et al. VLDB'07). The flip set is a
+  /** The similarity family's one multiprobe LSH candidate generator, for
+    * the near-dup pairs and the ANN k-NN alike: sign `emb` (vec_id,
+    * vec: ARRAY<DOUBLE>[64]) ONCE into L b-bit hyperplane signatures
+    * (one narrow typed map, eagerly checkpointed so every consumer reads
+    * the stored blocks), then emit distinct candidate pairs sharing any
+    * (table, bucket) key, where the `probe` rows (the whole corpus for
+    * near-dup, the query set for ANN) probe every bucket within Hamming
+    * distance ≤ `hamming` of their signature (multiprobe, Lv et al.
+    * VLDB'07) and `pair` (a_id, b_id) keeps a pair (`<` for unordered
+    * pairs, `=!=` for a query's neighbours). The flip set is a
     * BROADCAST mask table (1 + b [+ C(b,2)] rows) crossed against the
     * per-table signatures with a codegen'd XOR — a CONSTANT-bounded
     * fan-out (the one intentional nested-loop in the plan), not an
     * all-pairs operator; the only wide exchanges key on (table, bucket)
     * and the candidate ids. See [[qDedupEmbedLsh]]'s scaladoc for the
     * measured alternatives this shape beat. Returns (bucketed corpus
-    * carrying the vectors, candidate pairs a_id < b_id). */
+    * carrying the vectors, candidate pairs (a_id probe, b_id)). */
   private def lshCandidates(s: org.apache.spark.sql.SparkSession,
-      emb: org.apache.spark.sql.DataFrame, nTables: Int, nBits: Int,
+      emb: org.apache.spark.sql.DataFrame, probe: org.apache.spark.sql.Column,
+      pair: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column, nTables: Int, nBits: Int,
       hamming: Int, n: Long): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
     import s.implicits._
@@ -1334,7 +1350,7 @@ object PipelineQueries {
           b2 <- b1 + 1 until nBits
         } yield (1L << b1) ^ (1L << b2)
       else Seq.empty[Long])).toDF("mask")
-    val probeSide = bucketed
+    val probeSide = bucketed.where(probe)
       .select(col("vec_id").as("a_id"),
         posexplode(col("sigs")).as(Seq("table", "sig")))
       .crossJoin(broadcast(masks))
@@ -1351,10 +1367,45 @@ object PipelineQueries {
     val nCorpus = if (n > 0) n else bucketed.count()
     val cand = probeSide.join(
         Graph.stateHint(corpusSide, nCorpus * nTables, 48L),
-        col("pb") === col("tb") && col("a_id") < col("vec_id"))
+        col("pb") === col("tb") && pair(col("a_id"), col("vec_id")))
       .select(col("a_id"), col("vec_id").as("b_id"))
       .distinct()
     (bucketed, cand)
+  }
+
+  /** The family's one exact re-rank of [[lshCandidates]]' pairs: (a_id,
+    * b_id, cos), one codegen'd cosine per pair, the probe's vector first.
+    *
+    * The vector side is a localCheckpoint'ed LogicalRDD — Catalyst has
+    * no stats for it and plans sort-merge joins, which sort the pair
+    * frame WITH an attached vector payload (~0.5 KB/row) twice. On a
+    * dup-heavy corpus the candidate count is quadratic in the
+    * duplication factor and those wide sorts spill quadratically too:
+    * at the 10× synth (400k twin-augmented vectors, ~40M true pairs)
+    * the two SMJs spilled >60 GB and died on disk. The corpus itself
+    * stays node-width far longer than the pair frame does, so
+    * broadcast the vectors whenever they fit: [[Graph.stateHint]]
+    * under the one graft.graph.broadcastStateBytes budget, on the
+    * ESTIMATED build size of ONE hinted side — n × (id + array header
+    * + 64 doubles) = 536 B/row. va/vb are two separate exchanges, so
+    * the worst-case broadcast state is ~2× the budget. Beyond it the
+    * shuffle join remains — correct, cluster-disk-backed — and a
+    * deployment sizes the conf to its executor memory. `n`, when the
+    * caller knows it (footer count / the dispatch boundary), skips the
+    * count job entirely; n = 0 means unknown and falls back to
+    * counting the checkpointed blocks (cheap metadata scan, but a job
+    * nonetheless — the round-11 lsh_hi regression). */
+  private def lshCosines(bucketed: org.apache.spark.sql.DataFrame,
+      cand: org.apache.spark.sql.DataFrame,
+      n: Long): org.apache.spark.sql.DataFrame = {
+    val nVec = if (n > 0) n else bucketed.count()
+    def hint(side: org.apache.spark.sql.DataFrame) =
+      Graph.stateHint(side, nVec, 536L)
+    val va = hint(bucketed.select(col("vec_id").as("a_id"), col("vec").as("avec")))
+    val vb = hint(bucketed.select(col("vec_id").as("b_id"), col("vec").as("bvec")))
+    cand.join(va, "a_id").join(vb, "b_id")
+      .select(col("a_id"), col("b_id"),
+        TextFns.cosine(col("avec"), col("bvec")).as("cos"))
   }
 
   /** X13 scale path, DECLARED form: bucketed embedding near-dup — LSH
@@ -1407,11 +1458,9 @@ object PipelineQueries {
     * crossover drops by orders of magnitude. */
   private val qDedupEmbedLsh =
     Q("q_dedup_embed_lsh", embPairsOracle) { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec"))
     // parquet footer row count: metadata, no corpus scan
-    val n = Tables.embeddings(s, d).count()
-    embedNearDupLsh(s, emb, n, tau = 0.4)
+    embedNearDupLsh(s, embVecs(s, d), Tables.embeddings(s, d).count(),
+      tau = 0.4)
   }
 
   /** Boundary between the two measured LSH operating points: below it
@@ -1454,35 +1503,9 @@ object PipelineQueries {
         (32, math.min(24, math.max(8,
           if (n <= 50000) ceilLog2 - 1 else ceilLog2 + 1)).toInt, 2)
       }
-    val (bucketed, cand) = lshCandidates(s, emb, nTables, nBits, hamming, n)
-    // exact re-check: one codegen'd cosine per surviving candidate.
-    // The vector side is a localCheckpoint'ed LogicalRDD — Catalyst has
-    // no stats for it and plans sort-merge joins, which sort the pair
-    // frame WITH an attached vector payload (~0.5 KB/row) twice. On a
-    // dup-heavy corpus the candidate count is quadratic in the
-    // duplication factor and those wide sorts spill quadratically too:
-    // at the 10× synth (400k twin-augmented vectors, ~40M true pairs)
-    // the two SMJs spilled >60 GB and died on disk. The corpus itself
-    // stays node-width far longer than the pair frame does, so
-    // broadcast the vectors whenever they fit: [[Graph.stateHint]]
-    // under the one graft.graph.broadcastStateBytes budget, on the
-    // ESTIMATED build size of ONE hinted side — n × (id + array header
-    // + 64 doubles) = 536 B/row. va/vb are two separate exchanges, so
-    // the worst-case broadcast state is ~2× the budget. Beyond it the
-    // shuffle join remains — correct, cluster-disk-backed — and a
-    // deployment sizes the conf to its executor memory. `n`, when the
-    // caller knows it (footer count / the dispatch boundary), skips the
-    // count job entirely; n = 0 means unknown and falls back to
-    // counting the checkpointed blocks (cheap metadata scan, but a job
-    // nonetheless — the round-11 lsh_hi regression).
-    val nVec = if (n > 0) n else bucketed.count()
-    def hint(side: org.apache.spark.sql.DataFrame) =
-      Graph.stateHint(side, nVec, 536L)
-    val va = hint(bucketed.select(col("vec_id").as("a_id"), col("vec").as("avec")))
-    val vb = hint(bucketed.select(col("vec_id").as("b_id"), col("vec").as("bvec")))
-    cand.join(va, "a_id").join(vb, "b_id")
-      .select(col("a_id"), col("b_id"),
-        TextFns.cosine(col("avec"), col("bvec")).as("cos"))
+    val (bucketed, cand) = lshCandidates(s, emb, lit(true), _ < _, nTables,
+      nBits, hamming, n)
+    lshCosines(bucketed, cand, n)
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
       .orderBy("a_id", "b_id")
@@ -1545,8 +1568,7 @@ object PipelineQueries {
     * band. */
   private[graft] def twinAugmented(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val base = Tables.embeddings(s, d)
-      .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec"))
+    val base = embVecs(s, d)
     base.unionAll(base.select((col("vec_id") + twinOffset).as("vec_id"),
       expr("transform(vec, (x, i) -> x * (1.0D + " +
         "((vec_id * 31 + i * 17) % 11 - 5) / 200.0D))").as("vec")))
@@ -2158,74 +2180,19 @@ object PipelineQueries {
     * recall multiplies while the corpus side stays at L rows per vector.
     * At 100 TB only the (table, bucket) equi-join shuffles, the probe
     * fan-out rides the (tiny) query side, and candidates stay a small
-    * fraction of n². Rows-only check (recall@5 ≥ 0.8 vs the brute-force
-    * baseline is asserted in DifferentialSpec). */
+    * fraction of n². The candidates and the exact re-rank are the
+    * near-dup queries' own ([[lshCandidates]], [[lshCosines]]), probed
+    * from the queries only. Rows-only check (recall@5 ≥ 0.8 vs the
+    * brute-force baseline is asserted in DifferentialSpec). */
   private val qAnnLsh = Q.noOracle("q_ann_lsh") { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), TextFns.toDoubleArray(col("embedding")).as("vec"))
-    val nTables = 16
-    val nBits = 10
-    // sign_p(v) = v · σ_p with σ_p a deterministic ±1 hyperplane
-    // (splitmix64 parity of (p, k)). All 160 plane projections happen in
-    // ONE narrow typed map against a broadcast 160×64 sign matrix —
-    // literal arrays in the plan would bloat generated code past codegen
-    // limits.
-    val bcSigns = s.sparkContext.broadcast(
-      hyperplaneSigns(nTables * nBits, 64))
-    import s.implicits._
-    def tableSigs(v: Array[Double]): Array[Long] =
-      tableSigsOf(v, bcSigns.value, nTables, nBits)
-    // The candidate pipeline is NARROW end-to-end: the corpus side keeps
-    // only (vec_id, table, bucket) — no vector payload rides the bucket
-    // join or the cross-table dedup. On a dup-heavy corpus (the 100×
-    // synth puts ~100 near-identical vectors in every probed bucket) the
-    // pre-dedup candidate stream is the big frame, and shuffling it with
-    // two attached 64-dim vectors (~0.5 KB/row) is the same wide-shuffle
-    // mistake the near-dup verdict joins made (SCALE.md round-11 sf10
-    // cliff); vectors re-attach AFTER the id-level dedup from
-    // stats-visible scans, so Catalyst broadcasts them when small and
-    // falls back to a narrow-pair shuffle join beyond.
-    val bucketed = emb.select(col("vec_id"), col("vec"))
-      .as[(Long, Array[Double])]
-      .map { case (id, v) => (id, tableSigs(v)) }
-      .toDF("vec_id", "sigs")
-      .select(col("vec_id"),
-        posexplode(col("sigs")).as(Seq("table", "bucket")))
-    // query-side multiprobe: own bucket + all Hamming-1 and -2 flips.
-    // The query set is filtered BEFORE signing, so the probe fan-out (and
-    // the second signature pass) touches only the tiny query side — the
-    // corpus is signed exactly once, in `bucketed`.
-    val qs = emb.filter(col("vec_id") < 10)
-      .as[(Long, Array[Double])]
-      .flatMap { case (id, v) =>
-        val sigs = tableSigs(v)
-        for {
-          t <- sigs.indices.iterator
-          p <- (Iterator.single(sigs(t)) ++
-            (0 until nBits).iterator.map(b1 => sigs(t) ^ (1L << b1)) ++
-            (for {
-              b1 <- (0 until nBits).iterator
-              b2 <- (b1 + 1 until nBits).iterator
-            } yield sigs(t) ^ (1L << b1) ^ (1L << b2)))
-        } yield (id, t, p)
-      }
-      .toDF("q_id", "table", "bucket")
-    val cand = bucketed.join(qs, Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .dropDuplicates("q_id", "vec_id")
-    val qv = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vec").as("qvec"))
-    val cv = emb.select(col("vec_id"), col("vec"))
-    val cos = cand.join(qv, "q_id").join(cv, "vec_id")
-      .select(col("q_id"), col("vec_id").as("v_id"),
-        TextFns.cosine(col("qvec"), col("vec")).as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("v_id"))
-    cos.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("v_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rank")
+    // 16 tables × 10 bits, Hamming-2 multiprobe from the 10 queries; the
+    // candidate stream stays (id, id) until the id-level dedup, and the
+    // vectors re-attach only for the exact re-rank ([[lshCosines]])
+    val n = Tables.embeddings(s, d).count() // parquet footer row count
+    val (bucketed, cand) = lshCandidates(s, embVecs(s, d),
+      col("vec_id") < 10, _ =!= _, nTables = 16, nBits = 10, hamming = 2, n)
+    top5(lshCosines(bucketed, cand, n)
+      .select(col("a_id").as("q_id"), col("b_id").as("v_id"), col("cos")))
   }
 
   /** The IVF coarse quantizer (Bahmani sketch + weighted Lloyd, seed 42,
@@ -2243,6 +2210,25 @@ object PipelineQueries {
       graft.ml.Bahmani.lloydOnSketch(sk, w, nCells)
     }
 
+  /** What [[qAnnIvf]] and [[qAnnIvfSq]] share: the corpus points, the
+    * broadcast 16-cell quantizer ([[ivfCenters]]), and the query-probe
+    * step — each query (vec_id < 10) with its 8 nearest cells, as
+    * (q_id, qvec, cell). */
+  private def ivfProbes(s: org.apache.spark.sql.SparkSession, d: String) = {
+    import s.implicits._
+    val nProbe = 8
+    val pts = graft.ml.Bahmani.embeddingPoints(s, d)
+    val bc = s.sparkContext.broadcast(
+      graft.ml.Bahmani.centerIndex(ivfCenters(s, d, nCells = 16)))
+    val probes = pts.filter(_.id < 10).flatMap { p =>
+      val cs = bc.value.centers
+      cs.indices.map(c => (c, graft.ml.Bahmani.distSq(p.vec, cs(c))))
+        .sortBy(_._2).take(nProbe)
+        .map { case (c, _) => (p.id, p.vec, c) }
+    }.toDF("q_id", "qvec", "cell")
+    (pts, bc, probes)
+  }
+
   /** X14 scale path #2: IVF (inverted-file) ANN — a k-means coarse
     * quantizer (the Bahmani sketch + weighted Lloyd from the ml layer,
     * deterministic seed) partitions vectors into cells; each query probes
@@ -2252,34 +2238,14 @@ object PipelineQueries {
     * corpus. Rows-only check; recall vs brute force asserted in tests. */
   private val qAnnIvf = Q.noOracle("q_ann_ivf") { (s, d) =>
     import s.implicits._
-    val nCells = 16
-    val nProbe = 8
-    val pts = graft.ml.Bahmani.embeddingPoints(s, d)
-    val centers = ivfCenters(s, d, nCells)
-    val bc = s.sparkContext.broadcast(graft.ml.Bahmani.centerIndex(centers))
-
+    val (pts, bc, probes) = ivfProbes(s, d)
     val cells = pts.map { p =>
       (p.id, p.vec, graft.ml.Bahmani.nearest(p.vec, bc.value)._1)
     }.toDF("vec_id", "vec", "cell")
-
-    // queries probe their nProbe nearest cells
-    val probes = pts.filter(_.id < 10).flatMap { p =>
-      val cs = bc.value.centers
-      cs.indices.map(c => (c, graft.ml.Bahmani.distSq(p.vec, cs(c))))
-        .sortBy(_._2).take(nProbe)
-        .map { case (c, _) => (p.id, p.vec, c) }
-    }.toDF("q_id", "qvec", "cell")
-
-    val cos = cells.join(probes, "cell")
+    top5(cells.join(probes, "cell")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("v_id"),
-        TextFns.cosine(col("qvec"), col("vec")).as("cos"))
-    val win = Window.partitionBy("q_id").orderBy(col("cos").desc, col("v_id"))
-    cos.withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("v_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rank")
+        TextFns.cosine(col("qvec"), col("vec")).as("cos")))
   }
 
   /** IVF over INT8 codes — the compressed form of [[qAnnIvf]] and the
@@ -2296,12 +2262,8 @@ object PipelineQueries {
     * float IVF's in DifferentialSpec. */
   private val qAnnIvfSq = Q.noOracle("q_ann_ivf_sq") { (s, d) =>
     import s.implicits._
-    val nCells = 16
-    val nProbe = 8
-    val pts = graft.ml.Bahmani.embeddingPoints(s, d)
-    val centers = ivfCenters(s, d, nCells) // memo-shared with q_ann_ivf
-    val bc = s.sparkContext.broadcast(graft.ml.Bahmani.centerIndex(centers))
-
+    // the quantizer is memo-shared with q_ann_ivf
+    val (pts, bc, probes) = ivfProbes(s, d)
     // int8 cell storage: (code bytes, scale) per vector
     val cells = pts.map { p =>
       val amax = p.vec.map(math.abs).max
@@ -2312,14 +2274,7 @@ object PipelineQueries {
       (p.id, code, scale, graft.ml.Bahmani.nearest(p.vec, bc.value)._1)
     }.toDF("vec_id", "code", "scale", "cell")
 
-    val probes = pts.filter(_.id < 10).flatMap { p =>
-      val cs = bc.value.centers
-      cs.indices.map(c => (c, graft.ml.Bahmani.distSq(p.vec, cs(c))))
-        .sortBy(_._2).take(nProbe)
-        .map { case (c, _) => (p.id, p.vec, c) }
-    }.toDF("q_id", "qvec", "cell")
-
-    val scored = cells.join(probes, "cell")
+    top5(cells.join(probes, "cell")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("v_id"), col("code"),
         col("qvec"))
@@ -2335,13 +2290,7 @@ object PipelineQueries {
         val cos = if (nc == 0 || nq == 0) -1.0
         else dot / (math.sqrt(nc) * math.sqrt(nq))
         (q, v, cos)
-      }.toDF("q_id", "v_id", "cos")
-    val win = Window.partitionBy("q_id").orderBy(col("cos").desc, col("v_id"))
-    scored.withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("v_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rank")
+      }.toDF("q_id", "v_id", "cos"))
   }
 
   /** X13 extension: duplicated-substring detection — for every document,

@@ -266,8 +266,8 @@ object Relational {
     *
     * Scale shape: two scans (per-group min/max/count, then bucket
     * counts) with the tiny stats frame inlined between them as a
-    * codegen'd literal conditional (size-dispatched to a broadcast
-    * join past 128 groups — see the bucket-pass comment); sketch
+    * codegen'd literal conditional, one branch per group (see the
+    * bucket-pass comment); sketch
     * state is ≤ 256 counters per group after partial aggregation —
     * mergeable by cell-wise addition exactly like count-min, so
     * per-source histograms roll up without re-reading data. The

@@ -209,6 +209,33 @@ class GraphFixpointSpec extends SparkSpec {
     }
   }
 
+  test("the driver arm is sized by the bytes it holds per node: at a budget of n × 16 B the DataFrame rounds run, bit-identical") {
+    val key = "graft.graph.broadcastStateBytes"
+    try {
+      val (e, deg, n) = Graph.edgeFrames(spark, sfDir)
+      val reset = when(col("node") < 1000000L && col("node") % 100 === 0,
+        lit(1.0) / 7).otherwise(lit(0.0))
+      spark.conf.unset(key)
+      val (held, heldJobs) = jobsOf(fourForms(e, deg, n, reset, 5, 1e-12, 8))
+      // n × 16 B fits (the node-width state joins still broadcast), but
+      // the driver arm's own footprint does not
+      spark.conf.set(key, (n * 16).toString)
+      Graph.fitsState(spark, n) shouldBe true
+      Graph.fitsState(spark, n,
+        graft.operators.DriverRank.bytesPerNode) shouldBe false
+      val (frames, frameJobs) =
+        jobsOf(fourForms(e, deg, n, reset, 5, 1e-12, 8))
+      frames shouldBe held
+      // several jobs per DataFrame round plus its probe, against one per
+      // driver-held round
+      info(s"jobs: driver-held $heldJobs, at n × 16 B $frameJobs")
+      frameJobs should be > 2 * heldJobs
+    } finally {
+      spark.conf.unset(key)
+      Memo.release(spark); Cleanup(spark)
+    }
+  }
+
   test("both rank arms stop at the same round when a loose ε fires mid-run") {
     // the caterpillar of the PageRank ε test; PPR seeded at the tail end
     val (e, deg, n) = rankFrames(
