@@ -1318,22 +1318,27 @@ object PipelineQueries {
     * all-pairs operator; the only wide exchanges key on (table, bucket)
     * and the candidate ids. See [[qDedupEmbedLsh]]'s scaladoc for the
     * measured alternatives this shape beat. Returns (bucketed corpus
-    * carrying the vectors, candidate pairs (a_id probe, b_id)). */
+    * carrying the vectors, candidate pairs (a_id probe, b_id), corpus
+    * row count — observed on the signing checkpoint, so it costs no
+    * job). */
   private def lshCandidates(s: org.apache.spark.sql.SparkSession,
       emb: org.apache.spark.sql.DataFrame, probe: org.apache.spark.sql.Column,
       pair: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
         org.apache.spark.sql.Column, nTables: Int, nBits: Int,
-      hamming: Int, n: Long): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
+      hamming: Int): (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame, Long) = {
     import s.implicits._
     val bcSigns = s.sparkContext.broadcast(
       hyperplaneSigns(nTables * nBits, 64))
+    val rows = Observation()
     val bucketed = emb.as[(Long, Array[Double])]
       .map { case (id, v) =>
         (id, v, tableSigsOf(v, bcSigns.value, nTables, nBits))
       }
       .toDF("vec_id", "vec", "sigs")
+      .observe(rows, count(lit(1)).as("n"))
       .localCheckpoint() // sign the corpus exactly once
+    val nCorpus = rows.get("n").asInstanceOf[Long]
     // (table, bucket) packed into ONE 8-byte key (the graph family's
     // packPair discipline — table < 32 and bucket < 2^24 by
     // construction, so the guard never fires): the candidate join keys
@@ -1364,13 +1369,12 @@ object PipelineQueries {
     // shuffled both sides on (table, bucket) — the probe side being the
     // widest exchange of the whole operator. Beyond the budget the
     // plain co-shuffled join remains (the 100 TB fallback).
-    val nCorpus = if (n > 0) n else bucketed.count()
     val cand = probeSide.join(
         Graph.stateHint(corpusSide, nCorpus * nTables, 48L),
         col("pb") === col("tb") && pair(col("a_id"), col("vec_id")))
       .select(col("a_id"), col("vec_id").as("b_id"))
       .distinct()
-    (bucketed, cand)
+    (bucketed, cand, nCorpus)
   }
 
   /** The family's one exact re-rank of [[lshCandidates]]' pairs: (a_id,
@@ -1390,17 +1394,13 @@ object PipelineQueries {
     * + 64 doubles) = 536 B/row. va/vb are two separate exchanges, so
     * the worst-case broadcast state is ~2× the budget. Beyond it the
     * shuffle join remains — correct, cluster-disk-backed — and a
-    * deployment sizes the conf to its executor memory. `n`, when the
-    * caller knows it (footer count / the dispatch boundary), skips the
-    * count job entirely; n = 0 means unknown and falls back to
-    * counting the checkpointed blocks (cheap metadata scan, but a job
-    * nonetheless — the round-11 lsh_hi regression). */
+    * deployment sizes the conf to its executor memory. `n` is the
+    * corpus row count [[lshCandidates]] observed while signing. */
   private def lshCosines(bucketed: org.apache.spark.sql.DataFrame,
       cand: org.apache.spark.sql.DataFrame,
       n: Long): org.apache.spark.sql.DataFrame = {
-    val nVec = if (n > 0) n else bucketed.count()
     def hint(side: org.apache.spark.sql.DataFrame) =
-      Graph.stateHint(side, nVec, 536L)
+      Graph.stateHint(side, n, 536L)
     val va = hint(bucketed.select(col("vec_id").as("a_id"), col("vec").as("avec")))
     val vb = hint(bucketed.select(col("vec_id").as("b_id"), col("vec").as("bvec")))
     cand.join(va, "a_id").join(vb, "b_id")
@@ -1490,6 +1490,7 @@ object PipelineQueries {
     *    angle, analytic miss ~10⁻²¹/pair, 136 probes/vector vs the
     *    dense point's ~1800 (see [[qDedupEmbedLshHi]]).
     *
+    * `n`, the corpus row count, sizes the b ladder below τ 0.75 only.
     * Probe-side fan-out notes and the rejected alternatives (typed
     * flatMap, literal mask array) are in [[lshCandidates]]. */
   def embedNearDupLsh(s: org.apache.spark.sql.SparkSession,
@@ -1503,9 +1504,9 @@ object PipelineQueries {
         (32, math.min(24, math.max(8,
           if (n <= 50000) ceilLog2 - 1 else ceilLog2 + 1)).toInt, 2)
       }
-    val (bucketed, cand) = lshCandidates(s, emb, lit(true), _ < _, nTables,
-      nBits, hamming, n)
-    lshCosines(bucketed, cand, n)
+    val (bucketed, cand, nCorpus) = lshCandidates(s, emb, lit(true), _ < _,
+      nTables, nBits, hamming)
+    lshCosines(bucketed, cand, nCorpus)
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
       .orderBy("a_id", "b_id")
@@ -1535,11 +1536,9 @@ object PipelineQueries {
     * `n` must be the TRUE corpus count when τ < [[hiTauBoundary]] (it
     * picks the brute/LSH side and sizes the LSH bit ladder; the parquet
     * footer count is metadata, not a scan). At τ ≥ the boundary the
-    * dispatch is unconditionally LSH, so the n = 0 "unknown" shortcut
-    * is CORRECT there and only there — but since round 12 the LSH
-    * verdict-join broadcast dispatch also consumes n, and n = 0 makes
-    * it schedule a count job over the checkpointed corpus; pass the
-    * real count when it is cheap to know. */
+    * dispatch is unconditionally LSH and n is unused: the LSH
+    * verdict-join broadcast dispatch reads the row count observed on
+    * the signing checkpoint. */
   def embedNearDup(s: org.apache.spark.sql.SparkSession,
       emb: org.apache.spark.sql.DataFrame, n: Long,
       tau: Double): org.apache.spark.sql.DataFrame = {
@@ -1615,15 +1614,10 @@ object PipelineQueries {
     * through the sf1 sweep's 80k augmented vectors); past ~10⁵ vectors
     * production raises b with ⌈log₂ n⌉ like the dense point does. */
   private val qDedupEmbedLshHi = Q("q_dedup_embed_lsh_hi", embHiSql) { (s, d) =>
-    // n no longer sizes the bit ladder here (b fixed at 16 at τ ≥
-    // hiTauBoundary) but it DOES drive the verdict-join broadcast
-    // dispatch, and the twin-augmented corpus size is exactly 2× the
-    // parquet footer count — metadata, not a scan — so thread it
-    // through instead of making embedNearDupLsh schedule a count job
-    // over the checkpointed blocks (the round-11 0.63 → 1.12 s
-    // regression's avoidable half).
-    embedNearDupLsh(s, twinAugmented(s, d),
-      n = 2L * Tables.embeddings(s, d).count(), tau = 0.9)
+    // n sizes only the bit ladder below hiTauBoundary (b is fixed at 16
+    // here), and the broadcast dispatch reads the row count observed
+    // while signing, so no footer count is needed
+    embedNearDupLsh(s, twinAugmented(s, d), n = 0L, tau = 0.9)
   }
 
   /** Int8 scalar quantization of the embedding column — the compression
@@ -2188,9 +2182,8 @@ object PipelineQueries {
     // 16 tables × 10 bits, Hamming-2 multiprobe from the 10 queries; the
     // candidate stream stays (id, id) until the id-level dedup, and the
     // vectors re-attach only for the exact re-rank ([[lshCosines]])
-    val n = Tables.embeddings(s, d).count() // parquet footer row count
-    val (bucketed, cand) = lshCandidates(s, embVecs(s, d),
-      col("vec_id") < 10, _ =!= _, nTables = 16, nBits = 10, hamming = 2, n)
+    val (bucketed, cand, n) = lshCandidates(s, embVecs(s, d),
+      col("vec_id") < 10, _ =!= _, nTables = 16, nBits = 10, hamming = 2)
     top5(lshCosines(bucketed, cand, n)
       .select(col("a_id").as("q_id"), col("b_id").as("v_id"), col("cos")))
   }

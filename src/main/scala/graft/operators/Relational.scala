@@ -1,10 +1,11 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.functions.Sketches
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{LogBucket, Sketches}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The standard relational surface (SURVEY.md §2.8 X1–X12): scans with
   * pushdown, the join family, aggregates/rollup, windows, set ops,
@@ -261,19 +262,19 @@ object Relational {
     * equal integer bins, counts summed as BIGINTs, nearest-rank bucket
     * picked by integer cumulative sums, estimate = the bucket's lower
     * edge — every step bit-identical in any engine, so the declared
-    * query hash-matches its SQL while keeping the bounded-state property
-    * that makes approximate percentiles worth running at 100 TB.
+    * query hash-matches its SQL.
     *
-    * Scale shape: two scans (per-group min/max/count, then bucket
-    * counts) with the tiny stats frame inlined between them as a
-    * codegen'd literal conditional, one branch per group (see the
-    * bucket-pass comment); sketch
-    * state is ≤ 256 counters per group after partial aggregation —
-    * mergeable by cell-wise addition exactly like count-min, so
-    * per-source histograms roll up without re-reading data. The
-    * cumulative window runs over ≤ 256 rows per group. Error is
-    * one-sided and bounded by one bin width ((mx−mn+1)/256 cents),
-    * asserted against the exact percentile in ShuffleAuditSpec. */
+    * Scale shape: the 256-bin histogram is never built. The bin of a
+    * value, ((x − mn)·256) DIV (mx − mn + 1), is non-decreasing in x, so
+    * the SQL form's "lowest bin whose running count reaches r" is the bin
+    * of the r-th smallest value x₍ᵣ₎. [[rankSelect]] gives n, mn, mx and
+    * x₍ᵣ₎ at r = (n+1) DIV 2 and (19n+19) DIV 20 from one bounded
+    * histogram pass and one narrow band pass, and the SQL's integer
+    * readout runs on that one-row-per-group local frame. The pass-1 plan
+    * is q_percentile's, so whichever runs second reuses its generated
+    * code. Driver state: [[rankSelect]]'s bound. Error is one-sided and
+    * bounded by one bin width ((mx−mn+1)/256 cents), asserted against
+    * the exact percentile in ShuffleAuditSpec. */
   private val qHistPercentile = Q("q_hist_percentile",
     """WITH x AS (SELECT l_returnflag AS rf,
       |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS c FROM lineitem),
@@ -298,61 +299,34 @@ object Relational {
       |  mm.n AS n
       |FROM mm JOIN s50 ON mm.rf = s50.rf JOIN s95 ON mm.rf = s95.rf
       |ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-    // floor(v + 0.5), NOT round(v): Spark's Round on DoubleType
-    // allocates a BigDecimal PER ROW (RoundBase — confirmed in the 4.1
-    // bytecode), and this is the one expression here evaluated per
-    // FACT row — twice (stats pass + bucket pass), 1.2 B allocations
-    // at sf100, the dominant term of the round-13 ledger anomaly
-    // (67.3 s vs 3–9 s neighbors; re-measured round 15, SCALE.md).
-    // floor is a bare Math.floor in codegen, and for the strictly
-    // positive prices the two are identical: HALF_UP(v) = ⌊v + 0.5⌋
-    // for v ≥ 0, and v + 0.5 is exact in double for v < 2⁵¹. The
-    // DuckDB oracle keeps ROUND — both sides compute the same c.
-    val x = Tables.lineitem(s, d).select(col("l_returnflag").as("rf"),
-      floor(col("l_extendedprice") * 100 + 0.5).as("c"))
-    // |groups| rows; materialize once — its three consumers (bucket
-    // pass, rank thresholds, edge reconstruction) would otherwise each
-    // re-run the stats scan of the fact table
-    val mm = x.groupBy("rf")
-      .agg(min("c").as("mn"), max("c").as("mx"), count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    // Bucket pass: per-group (mn, mx) inlined as a codegen'd literal
-    // conditional, NOT a broadcast hash join. The BHJ probe costs
-    // ~60 ns per FACT row even inside whole-stage codegen (string key
-    // hash + HashedRelation lookup + joined-row projection) — measured
-    // round 15 at sf10n as 4.3 s vs 0.6 s for the identical bucket
-    // histogram via the literal form, and it was the dominant term of
-    // the 67 s sf100 ledger anomaly. Collecting mm moves nothing new
-    // to the driver — the broadcast variant already materializes the
-    // same |groups| rows there as a HashedRelation — and the literal
-    // DIV is exact integer arithmetic, same as the join form. The
-    // chain is linear in |groups|; l_returnflag has 3.
-    val b = mm.select("rf", "mn", "mx").collect()
-      .foldLeft(lit(null).cast("long")) { (acc, r) =>
-        val (mn, mx) = (r.getLong(1), r.getLong(2))
-        when(col("rf") === lit(r.getString(0)),
-          expr(s"((c - ${mn}L) * 256) DIV ${mx - mn + 1}L")).otherwise(acc)
-      }
-    val h = x.select(col("rf"), b.as("b"))
-      .groupBy("rf", "b").agg(count(lit(1)).as("cnt"))
-    val cum = h.withColumn("cum",
-      sum("cnt").over(Window.partitionBy("rf").orderBy("b")))
-      .join(broadcast(mm), "rf")
-    // both rank picks in ONE conditional-min pass over the (≤256-row per
-    // group) cumulative histogram — separate filter+agg branches would
-    // rebuild the whole two-scan histogram subtree per percentile
-    val sel = cum.groupBy("rf").agg(
-      min(when(col("cum") >= expr("(n + 1) DIV 2"), col("b"))).as("b50"),
-      min(when(col("cum") >= expr("(19 * n + 19) DIV 20"), col("b")))
-        .as("b95"))
-    mm.join(sel, "rf")
-      .select(col("rf").as("l_returnflag"),
-        round((col("mn") + expr("(b50 * (mx - mn + 1)) DIV 256")) / 100.0, 6)
-          .as("p50_hist"),
-        round((col("mn") + expr("(b95 * (mx - mn + 1)) DIV 256")) / 100.0, 6)
-          .as("p95_hist"),
-        col("n"))
-      .orderBy("l_returnflag")
+    histPercentiles(Tables.lineitem(s, d), "l_returnflag", cents)
+  }
+
+  /** Price in cents: `floor(v + 0.5)`, NOT `round(v)` — Spark's Round on
+    * DoubleType allocates a BigDecimal PER ROW (RoundBase, confirmed in
+    * the 4.1 bytecode), while floor is a bare Math.floor in codegen. For
+    * the strictly positive prices the two are identical: HALF_UP(v) =
+    * ⌊v + 0.5⌋ for v ≥ 0, and v + 0.5 is exact in double for v < 2⁵¹.
+    * The DuckDB oracles keep ROUND — both sides compute the same c. */
+  private def cents: Column = floor(col("l_extendedprice") * 100 + 0.5)
+
+  /** q_hist_percentile's p50_hist, p95_hist and n of BIGINT `c` per
+    * String `key`, in key order (see the query's scaladoc). */
+  private[graft] def histPercentiles(df: DataFrame, key: String, c: Column,
+      bandBound: Long = DefaultBandBound): DataFrame = {
+    val s = df.sparkSession
+    import s.implicits._
+    val ranks = (n: Long) => Seq((n + 1) / 2, (19 * n + 19) / 20)
+    // the SQL form's integer readout: bin of x, then the bin's lower edge
+    val w = "(mx - mn + 1)"
+    def readout(x: String): Column = round((col("mn") +
+      expr(s"(((($x - mn) * 256) DIV $w) * $w) DIV 256")) / 100.0, 6)
+    rankSelect(df, key, c, ranks, bandBound).map { g =>
+      val Seq(r50, r95) = ranks(g.n)
+      (g.key, g.min, g.max, g.n, g.at.get(r50), g.at.get(r95))
+    }.toDF(key, "mn", "mx", "n", "x50", "x95")
+      .select(col(key), readout("x50").as("p50_hist"),
+        readout("x95").as("p95_hist"), col("n"))
   }
 
   /** Exact distinct aggregation (expand + two-phase agg under the hood). */
@@ -621,31 +595,187 @@ object Relational {
 
   /** X6+: exact interpolated percentiles per group — Spark `percentile`
     * and DuckDB `quantile_cont` share the definition; quantized input
-    * keeps the interpolation float-exact. At 100 TB the approximate
-    * sketch (`approx_percentile`) replaces this; the exact form is its
-    * correctness baseline. */
+    * keeps the interpolation float-exact. The order statistics come from
+    * [[rankSelect]], so no task buffers, serializes or sorts a group's
+    * values: the driver holds [[rankSelect]]'s bound whatever the row
+    * count, and the exact form runs at any scale (`q_approx_percentile`
+    * stays the mergeable-sketch alternative). */
   private val qPercentile = Q("q_percentile",
     """SELECT l_returnflag,
       |  ROUND(quantile_cont(CAST(ROUND(l_extendedprice*100) AS BIGINT), 0.5)/100.0, 6) AS p50,
       |  ROUND(quantile_cont(CAST(ROUND(l_extendedprice*100) AS BIGINT), 0.95)/100.0, 6) AS p95
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) {
-    (s, d) =>
-      val cents = round(col("l_extendedprice") * 100).cast("long")
-      p50p95(Tables.lineitem(s, d), "l_returnflag", cents)
-        .orderBy("l_returnflag")
+    (s, d) => percentiles(Tables.lineitem(s, d), "l_returnflag", cents)
   }
 
-  /** Exact p50 and p95 of `cents` per `key`, as `round(p / 100, 6)`,
-    * from ONE `percentile` aggregate over both fractions: each group
-    * buffers, serializes and sorts its values once, not once per
-    * percentile. */
-  private[graft] def p50p95(df: DataFrame, key: String,
-      cents: Column): DataFrame = {
-    val p = col("percentiles")
-    df.groupBy(key)
-      .agg(percentile(cents, array(lit(0.5), lit(0.95))).as("percentiles"))
-      .select(col(key), round(p(0) / 100.0, 6).as("p50"),
-        round(p(1) / 100.0, 6).as("p95"))
+  /** Spark's `percentile` of BIGINT `c` at 0.5 and 0.95 per String `key`,
+    * exactly, as `round(p / 100, 6)` columns p50 and p95 in key order. */
+  private[graft] def percentiles(df: DataFrame, key: String, c: Column,
+      bandBound: Long = DefaultBandBound): DataFrame = {
+    val s = df.sparkSession
+    import s.implicits._
+    val ps = Seq(0.5, 0.95)
+    val groups = rankSelect(df, key, c,
+      n => ps.flatMap { p =>
+        val (_, lower, higher) = position(n, p)
+        Seq(lower + 1, higher + 1)
+      }, bandBound)
+    groups.map(g => (g.key, interpolated(g, ps(0)), interpolated(g, ps(1))))
+      .toDF(key, "p50", "p95")
+      .select(col(key), round(col("p50") / 100.0, 6).as("p50"),
+        round(col("p95") / 100.0, 6).as("p95"))
+  }
+
+  /** Where Spark's `percentile` reads fraction p of n values: position
+    * (n − 1)·p and its floor and ceiling, 0-based. */
+  private def position(n: Long, p: Double): (Double, Long, Long) = {
+    val pos = (n - 1) * p
+    (pos, pos.floor.toLong, pos.ceil.toLong)
+  }
+
+  /** Spark's `percentile` of group `g` at fraction p, bit for bit: the
+    * arithmetic of `Percentile.getPercentile` (no interpolation when the
+    * position is whole or both neighbours are the same value). */
+  private[graft] def interpolated(g: Ranked, p: Double): Option[Double] =
+    Option.when(g.n > 0) {
+      val (pos, lower, higher) = position(g.n, p)
+      val (a, b) = (g.at(lower + 1), g.at(higher + 1))
+      if (higher == lower || a == b) a.toDouble
+      else (higher - pos) * a.toDouble + (pos - lower) * b.toDouble
+    }
+
+  /** One group of [[rankSelect]]: its key, the count n of its non-null
+    * values, their min and max (None when n = 0) and the value at each
+    * requested rank. */
+  private[graft] final case class Ranked(key: String, n: Long,
+      min: Option[Long], max: Option[Long], at: Map[Long, Long])
+
+  /** [[rankSelect]]'s default band bound: a target bucket holding more
+    * values than this is split before its values are collected. */
+  private val DefaultBandBound = 1L << 16
+
+  /** Index of the first cell whose running count `cum` reaches rank r
+    * (1-based): with the cells in value order, the cell holding the r-th
+    * smallest value. The driver-side select of [[rankSelect]] and of
+    * q_event_hist_pct's nearest-rank bins. */
+  private[graft] def cellOfRank(cum: Array[Long], r: Long): Int =
+    cum.indexWhere(_ >= r)
+
+  /** A value interval [lo, hi] of one group that holds `cnt` of its
+    * values, with `below` of them under lo, and the group ranks in it
+    * still unknown. */
+  private final case class Band(key: String, lo: Long, hi: Long, cnt: Long,
+      below: Long, ranks: Seq[Long])
+
+  /** Collected histogram rows (band or key, cell, cnt, lo, hi) as cells
+    * (cnt, lo, hi) in value order. */
+  private def cellsOf(rows: Array[Row]): Seq[(Long, Long, Long)] =
+    rows.sortBy(_.getLong(1))
+      .map(r => (r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+
+  /** The bands of cells (cnt, lo, hi) in value order that hold ranks
+    * `rs`; the cells lie above `below` values of the group. */
+  private def bandsOf(key: String, cells: Seq[(Long, Long, Long)],
+      below: Long, rs: Seq[Long]): Seq[Band] = {
+    val cum = cells.scanLeft(below)(_ + _._1).tail.toArray
+    rs.groupBy(cellOfRank(cum, _)).toSeq.map { case (i, r) =>
+      val (cnt, lo, hi) = cells(i)
+      Band(key, lo, hi, cnt, cum(i) - cnt, r)
+    }
+  }
+
+  /** Exact order statistics of a BIGINT `value` per String `key`: for
+    * each group (including a group whose values are all null, which gets
+    * n = 0), n, min, max and the value at each 1-based rank in
+    * `ranks(n)` (ranks in [1, n]), in Spark's ascending key order (null
+    * first). Samsara's allreduceBlock shape: reduce the data to a small
+    * in-core object, then do the math on the driver.
+    *
+    *  - Pass 1: one aggregate over (key, [[LogBucket]](value)) collected
+    *    to the driver — count, min and max per bucket. The bucket is
+    *    data-independent, monotone and at most 1/256 of its values wide,
+    *    so the driver finds the bucket that holds each rank and the count
+    *    below it. A rank at a bucket's first or last place, or in a
+    *    bucket whose min equals its max, is read off with no further
+    *    pass.
+    *  - Refine: while a target bucket holds more than `bandBound` values,
+    *    one sub-bucket pass splits every such band on its next 8 bits
+    *    ((v − lo) >> shift, ≤ 256 cells), and the cell holding the rank
+    *    becomes the band. Each pass narrows a band's span over 128-fold.
+    *  - Pass 2: one narrow filter collects the values of the remaining
+    *    target bands, and each rank is taken from them after sorting on
+    *    the driver.
+    *
+    * Driver bound: groups × 28,672 bucket rows from pass 1, plus at most
+    * `bandBound` values (or 256 cells in a refine pass) per target rank.
+    * Each pass reads a band through a literal conditional on (key, value
+    * range), one branch per band, not a join. */
+  private[graft] def rankSelect(df: DataFrame, key: String, value: Column,
+      ranks: Long => Seq[Long],
+      bandBound: Long = DefaultBandBound): Seq[Ranked] = {
+    val x = df.select(col(key).as("k"), value.as("v"))
+    val hist = x.groupBy(col("k"), LogBucket.on(col("v")).as("b"))
+      .agg(count("v").as("cnt"), min("v").as("lo"), max("v").as("hi"))
+      .collect().groupBy(_.getString(0))
+    // Spark's ascending order: null first, then UTF-8 bytes
+    val keys = hist.keys.toSeq.sortBy(k => Option(k).map(UTF8String.fromString))
+    val at = scala.collection.mutable.Map.empty[(String, Long), Long]
+    // read off each rank at a band's edge or in a one-value band; keep
+    // the bands with a rank still unknown
+    def settle(bands: Seq[Band]): Seq[Band] = bands.flatMap { b =>
+      val open = b.ranks.filter { r =>
+        val j = r - b.below
+        val v = if (b.lo == b.hi || j == 1) Some(b.lo)
+          else if (j == b.cnt) Some(b.hi) else None
+        v.foreach(at((b.key, r)) = _)
+        v.isEmpty
+      }
+      Option.when(open.nonEmpty)(b.copy(ranks = open))
+    }
+    // a row's band index, null outside every band
+    def bandOf(bands: Seq[Band]): Column =
+      bands.zipWithIndex.foldLeft(lit(null).cast("int")) {
+        case (acc, (b, i)) => when(col("k") <=> lit(b.key) &&
+          col("v").between(b.lo, b.hi), lit(i)).otherwise(acc)
+      }
+    def inBands(bands: Seq[Band]): DataFrame =
+      x.select(bandOf(bands).as("band"), col("v"))
+        .where(col("band").isNotNull)
+    val groups = keys.map { k =>
+      val cells = cellsOf(hist(k).filterNot(_.isNullAt(1)))
+      val n = cells.map(_._1).sum
+      (k, n, cells, if (n > 0) ranks(n).distinct else Nil)
+    }
+    var open = settle(groups.flatMap { case (k, _, cells, rs) =>
+      bandsOf(k, cells, 0L, rs)
+    })
+    while (open.exists(_.cnt > bandBound)) {
+      val (heavy, light) = open.partition(_.cnt > bandBound)
+      // the shift that leaves 8 bits of the band's span
+      val sub = heavy.zipWithIndex.foldLeft(lit(null).cast("long")) {
+        case (acc, (b, i)) => when(col("band") === i, shiftright(
+          col("v") - b.lo, math.max(0,
+            56 - java.lang.Long.numberOfLeadingZeros(b.hi - b.lo))))
+          .otherwise(acc)
+      }
+      val cells = inBands(heavy).groupBy(col("band"), sub.as("s"))
+        .agg(count(lit(1)), min("v"), max("v"))
+        .collect().groupBy(_.getInt(0))
+      open = light ++ settle(heavy.zipWithIndex.flatMap { case (b, i) =>
+        bandsOf(b.key, cellsOf(cells(i)), b.below, b.ranks)
+      })
+    }
+    if (open.nonEmpty)
+      inBands(open).collect().groupBy(_.getInt(0)).foreach { case (i, rs) =>
+        val b = open(i)
+        val vs = rs.map(_.getLong(1))
+        java.util.Arrays.sort(vs)
+        b.ranks.foreach(r => at((b.key, r)) = vs((r - b.below - 1).toInt))
+      }
+    groups.map { case (k, n, cells, rs) =>
+      Ranked(k, n, cells.headOption.map(_._2), cells.lastOption.map(_._3),
+        rs.map(r => r -> at((k, r))).toMap)
+    }
   }
 
   /** X5+: tolerance-bounded as-of join — the feature-store freshness
@@ -1203,7 +1333,9 @@ object Relational {
     * integer-exact). The sketch aggregates the event volume; this query
     * touches only |windows| × 256 cells — the separation that lets the
     * readout run on a dashboard tick while the sketch runs on the
-    * stream. */
+    * stream. The cells are collected once and both bins are picked on
+    * the driver ([[cellOfRank]]), so the readout runs no window, join or
+    * second aggregate. */
   private val qEventHistPct = Q("q_event_hist_pct",
     """WITH h AS (SELECT date_trunc('day', ts) AS ws,
       |    LEAST(255, GREATEST(0, CAST(FLOOR(value / 4.0) AS BIGINT))) AS bin,
@@ -1219,19 +1351,25 @@ object Relational {
       |    AS p95_est,
       |  MAX(n) AS n
       |FROM c GROUP BY ws ORDER BY ws""".stripMargin) { (s, d) =>
+    import s.implicits._
+    // ≤ 256 cells per window, collected once; the window start travels
+    // as epoch micros so the local frame rebuilds the same timestamp, and
+    // Options keep the columns as nullable as the aggregate form's
     val cells = graft.streaming.EventStreams
       .windowedValueHist(Tables.events(s, d), "1 day")
-    val tot = cells.groupBy("ws").agg(sum("cnt").as("n"))
-    val c = cells.withColumn("cum",
-        sum("cnt").over(Window.partitionBy("ws").orderBy("bin")))
-      .join(broadcast(tot), "ws")
-    c.groupBy("ws").agg(
-        (min(when(col("cum") >= expr("(n + 1) DIV 2"), col("bin"))) * 4.0)
-          .as("p50_est"),
-        (min(when(col("cum") >= expr("(19 * n + 19) DIV 20"), col("bin")))
-          * 4.0).as("p95_est"),
-        max("n").as("n"))
-      .orderBy("ws")
+      .select(unix_micros(col("ws")), col("bin"), col("cnt"))
+      .collect().groupBy(_.getLong(0))
+    cells.keys.toSeq.sorted.map { ws =>
+      val c = cells(ws).sortBy(_.getLong(1))
+      val cum = c.scanLeft(0L)(_ + _.getLong(2)).tail
+      val n = cum.last
+      def bin(r: Long) = c(cellOfRank(cum, r)).getLong(1)
+      (Option(ws), Option(bin((n + 1) / 2)),
+        Option(bin((19 * n + 19) / 20)), Option(n))
+    }.toDF("ws", "b50", "b95", "n")
+      .select(timestamp_micros(col("ws")).as("ws"),
+        (col("b50") * 4.0).as("p50_est"), (col("b95") * 4.0).as("p95_est"),
+        col("n"))
   }
 
   /** X15+: single-pass windowed multi-sketch — batch twin of

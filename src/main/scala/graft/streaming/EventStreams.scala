@@ -122,13 +122,14 @@ object EventStreams {
     * count-min → frequencies, histogram → quantiles): per tumbling
     * `width` window, counts of `value` in `bins` ABSOLUTE equal-width
     * bins over [lo, hi) with out-of-range values clamped into the edge
-    * bins. Absolute bins because streaming admits no two-pass min/max
-    * (contrast `q_hist_percentile`, whose batch form sizes bins from
-    * per-group extremes): the range is an operating parameter, which is
-    * how a production latency monitor runs anyway. State is bounded at
-    * |open windows| × bins counters regardless of event volume; cells
-    * from different windows/sources merge by ADDITION (count-min's
-    * merge), and any percentile is a downstream cumulative-sum readout
+    * bins. Absolute bins because streaming admits no second pass
+    * (contrast `q_hist_percentile`, whose batch form reads per-group
+    * extremes and exact order statistics off a data-independent log
+    * bucket pass plus a band pass): the range is an operating
+    * parameter, which is how a production latency monitor runs anyway.
+    * State is bounded at |open windows| × bins counters regardless of
+    * event volume; cells from different windows/sources merge by
+    * ADDITION (count-min's merge), and any percentile is a downstream cumulative-sum readout
     * over ≤ `bins` cells. Determinism: the default bin width (hi−lo)/bins
     * = 4.0 is a power of two, so value/4.0 is an exponent shift — exact
     * in any IEEE engine — and floor/clamp are integer-identical. Pure
