@@ -2,6 +2,9 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -26,7 +29,9 @@ import org.apache.spark.sql.types.StructType
   *  - Failures: a failed inference is not cached; a missing or
   *    unreadable path throws on every call.
   * The cache is JVM-wide and unbounded, one small entry per (path,
-  * confs) pair; the session is not part of the key.
+  * confs) pair; the session is not part of the key. [[rowCount]] keeps
+  * a table's footer row count beside it, one entry per path under the
+  * same fingerprint rule.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -36,6 +41,10 @@ object Tables {
 
   private val schemas =
     new ConcurrentHashMap[(String, Seq[(String, String)]), Resolved]
+
+  private final case class Counted(fingerprint: Long, rows: Long)
+
+  private val rowCounts = new ConcurrentHashMap[String, Counted]
 
   private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
     spark.conf.getAll.toSeq.filter { case (k, _) =>
@@ -55,6 +64,31 @@ object Tables {
       val df = spark.read.parquet(path) // infers eagerly; throws uncached
       if (fp > 0) schemas.put(key, Resolved(fp, df.schema))
       df
+    }
+  }
+
+  /** The row count of table `name`, summed from the parquet footers of
+    * its files (skipping `_`- and `.`-prefixed names, as Spark's listing
+    * does) on the driver: no Spark job. */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val path = s"$sfDir/$name.parquet"
+    val fp = Memo.fingerprint(path)
+    val hit = rowCounts.get(path)
+    if (hit != null && hit.fingerprint == fp) hit.rows
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = new Path(path).getFileSystem(conf).listFiles(new Path(path), true)
+      var n = 0L
+      while (files.hasNext) {
+        val f = files.next()
+        val base = f.getPath.getName
+        if (!base.startsWith("_") && !base.startsWith(".")) {
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+          try n += r.getRecordCount finally r.close()
+        }
+      }
+      if (fp > 0) rowCounts.put(path, Counted(fp, n))
+      n
     }
   }
 

@@ -108,7 +108,8 @@ object MlQueries {
       (j.toLong, Ridge.round4(fit.beta(j) / 100.0),
         Ridge.round4(se(j) / 100.0), Ridge.round4(t(j)))
     }
-    s.createDataFrame(rows).toDF("j", "beta", "se", "t").orderBy("j")
+    // rows in j order; a local table keeps it, so no sort job runs
+    s.createDataFrame(rows).toDF("j", "beta", "se", "t")
   }
 
   /** T7: nearest-center assignment, brute-force oracle form (reference

@@ -156,13 +156,14 @@ object Ridge {
     }
   }
 
-  /** β as a (j, beta) DataFrame rounded for the oracle hash-match.
+  /** β as a (j, beta) DataFrame rounded for the oracle hash-match, in j
+    * order (a local table keeps its row order, so no sort job runs).
     * `scale` divides β back to natural units after quantization. */
   def betaFrame(s: SparkSession, fit: Fit, scale: Double): DataFrame = {
     val rows = fit.beta.zipWithIndex.map { case (b, j) =>
       (j.toLong, round4(b / scale))
     }
-    s.createDataFrame(rows.toIndexedSeq).toDF("j", "beta").orderBy("j")
+    s.createDataFrame(rows.toIndexedSeq).toDF("j", "beta")
   }
 
   def round4(x: Double): Double =

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The generic per-block escape hatch — Samsara's `mapBlock`/
   * `allreduceBlock` signature kept for parity (mahout-samsara-book:
@@ -64,5 +65,27 @@ object Block {
   def rowsOf(coo: DataFrame, ncol: Int): Dataset[RowVec] = {
     import coo.sparkSession.implicits._
     Coo.toRows(coo, ncol).select(col("i"), col("vec")).as[RowVec]
+  }
+
+  /** `n` rows built on the driver, in row order, as one materialized
+    * frame (a localCheckpoint, a leaf like any eager checkpoint) — the
+    * way back from an [[allreduceBlock]]-shaped driver computation. The
+    * rows are cut into as many slices as AQE coalesces a shuffle of
+    * `rowBytes`-byte rows into (`spark.sql.adaptive.
+    * advisoryPartitionSizeInBytes` each): a gate-scale frame is one
+    * slice, so a consumer's sort runs one task per stage, as it does on
+    * the coalesced output of a shuffle. `slice(a, b)` packs rows [a, b)
+    * on the driver; `rows` unpacks one slice in its task, so it must
+    * capture nothing of the driver's state. */
+  private[graft] def driverFrame[T: scala.reflect.ClassTag](s: SparkSession,
+      schema: StructType, n: Int, rowBytes: Long)(slice: (Int, Int) => T)(
+      rows: T => Iterator[Row]): DataFrame = {
+    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    val parts = (n * rowBytes / advisory + 1).toInt
+    val cut = (0 to parts).map(p => (p.toLong * n / parts).toInt)
+    val slices = (0 until parts).map(p => slice(cut(p), cut(p + 1)))
+    s.createDataFrame(s.sparkContext.parallelize(slices, parts).flatMap(rows),
+      schema).localCheckpoint(true)
   }
 }

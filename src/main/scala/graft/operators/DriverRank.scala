@@ -231,24 +231,16 @@ private[graft] object DriverRank {
     java.util.Arrays.copyOf(s, m)
   }
 
-  /** The (node, pr) state as a materialized frame, cut into as many
-    * slices as AQE coalesces the DataFrame round's 16-byte rows into
-    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes` each): a
-    * gate-scale state is one slice, so a consumer's sort runs one task
-    * per stage, as it does on the DataFrame arm's output. */
+  /** The (node, pr) state as a materialized frame, sliced as AQE
+    * coalesces the DataFrame round's 16-byte rows
+    * ([[graft.operators.Block.driverFrame]]). */
   private def frame(s: org.apache.spark.sql.SparkSession, nodes: Array[Long],
       pr: Array[Double]): DataFrame = {
     val schema = StructType(Seq(StructField("node", LongType, nullable = false),
       StructField("pr", DoubleType, nullable = false)))
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    val parts = (nodes.length * 16L / advisory + 1).toInt
-    val cut = (0 to parts).map(p => (p.toLong * nodes.length / parts).toInt)
-    val slices = (0 until parts).map(p =>
-      (nodes.slice(cut(p), cut(p + 1)), pr.slice(cut(p), cut(p + 1))))
-    val rows = s.sparkContext.parallelize(slices, parts).flatMap {
+    graft.operators.Block.driverFrame(s, schema, nodes.length, 16L)((a, b) =>
+      (nodes.slice(a, b), pr.slice(a, b))) {
       case (ns, ps) => ns.indices.iterator.map(i => Row(ns(i), ps(i)))
     }
-    s.createDataFrame(rows, schema).localCheckpoint(true)
   }
 }

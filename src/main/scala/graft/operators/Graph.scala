@@ -123,15 +123,18 @@ object Graph {
   /** The size test behind [[stateHint]]: do `rows` state rows of
     * `bytesPerRow` fit `graft.graph.broadcastStateBytes`? */
   private[graft] def fitsState(s: org.apache.spark.sql.SparkSession,
-      rows: Long, bytesPerRow: Long = 16L): Boolean = {
-    // malformed conf falls back to the default rather than throwing out
-    // of plan construction; the size test divides instead of multiplying
-    // so extreme row counts cannot overflow into a spurious broadcast
-    val budget = s.conf.getOption("graft.graph.broadcastStateBytes")
+      rows: Long, bytesPerRow: Long = 16L): Boolean =
+    // the size test divides instead of multiplying so extreme row
+    // counts cannot overflow into a spurious broadcast
+    bytesPerRow <= 0 || rows <= stateBudget(s) / bytesPerRow
+
+  /** `graft.graph.broadcastStateBytes`, default 1 GiB: the bytes of
+    * state a driver may hold or broadcast. A malformed conf falls back
+    * to the default rather than throwing out of plan construction. */
+  private[graft] def stateBudget(s: org.apache.spark.sql.SparkSession): Long =
+    s.conf.getOption("graft.graph.broadcastStateBytes")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .getOrElse(1L << 30)
-    bytesPerRow <= 0 || rows <= budget / bytesPerRow
-  }
 
   /** Pack a non-negative key pair into ONE 8-byte long (hi·2³² + lo) —
     * the pair-exchange width discipline: a single radix-sortable long

@@ -1458,8 +1458,9 @@ object PipelineQueries {
     * crossover drops by orders of magnitude. */
   private val qDedupEmbedLsh =
     Q("q_dedup_embed_lsh", embPairsOracle) { (s, d) =>
-    // parquet footer row count: metadata, no corpus scan
-    embedNearDupLsh(s, embVecs(s, d), Tables.embeddings(s, d).count(),
+    // the corpus size sets the bit ladder: read off the parquet footers
+    // on the driver, no Spark job
+    embedNearDupLsh(s, embVecs(s, d), Tables.rowCount(s, d, "embeddings"),
       tau = 0.4)
   }
 

@@ -148,28 +148,31 @@ object TextQueries {
 
   /** The counts-trained TWCNB model, materialized once per (session,
     * dir) and shared by its two independent consumers (q_twcnb_model
-    * DECLARES it, q_nb_score SCORES with it — round-15, the
-    * [[graft.Memo]] discipline): one |V|·L model build per harness run
-    * instead of two. The tfidf-weighted model (q_twcnb_tfidf) trains on
-    * different weights and keeps its own chain. */
+    * DECLARES it, q_nb_score SCORES with it — the [[graft.Memo]]
+    * discipline): one |V|·L model build per harness run instead of two.
+    * The tfidf-weighted model (q_twcnb_tfidf) trains on different
+    * weights and keeps its own build. The |V|·L row count is memoized
+    * WITH the model, for q_nb_score's broadcast dispatch: the driver arm
+    * of [[TWCNB.fit]] returns it with its materialized model at no job;
+    * over the state budget the plan arm's model is checkpointed here and
+    * counted once. */
   private[graft] def twcnbCountModel(s: org.apache.spark.sql.SparkSession,
       d: String): (DataFrame, Long) =
     graft.Memo(s, s"text.twcnbModel:$d", d) {
       // train(tokens) is trainWeighted with f = 1 per occurrence; feeding
       // the shared tf matrix with f = tf yields the identical ntc aggregate
-      val m = TWCNB.trainWeighted(tfMatrix(s, d)
-        .select(col("lang").as("label"), col("term"), col("tf").as("f")))
-        .localCheckpoint(true)
-      // |V|·L row count memoized WITH the model (round-15 advice): the
-      // score join's broadcast dispatch was re-running a count job per
-      // q_nb_score execution; counting the materialized blocks once at
-      // build time is the triangleFrames |V| discipline
-      (m, m.count())
+      TWCNB.fit(tfMatrix(s, d)
+        .select(col("lang").as("label"), col("term"), col("tf").as("f")),
+        alpha = 1.0) match {
+        case (m, Some(rows)) => (m, rows)
+        case (plan, None) =>
+          val m = plan.localCheckpoint(true)
+          (m, m.count())
+      }
     }
 
-  /** N5: the full TWCNB training chain (TWCNB.scala:28-148) — one Catalyst
-    * plan (trained on counts; the tfidf-weighted variant is exercised in
-    * the ScalaTest differential suite). */
+  /** N5: the full TWCNB training chain (TWCNB.scala:28-148), trained on
+    * counts ([[twcnbCountModel]]; q_twcnb_tfidf trains on tf-idf). */
   private val qTwcnbModel = Q("q_twcnb_model",
     s"""WITH $twcnbSql
        |SELECT label, term, ROUND(w, 6) + 0.0 AS w FROM model

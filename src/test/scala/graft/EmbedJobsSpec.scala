@@ -12,7 +12,7 @@ class EmbedJobsSpec extends SparkSpec {
     "q_ann_lsh", "q_ann_ivf", "q_ann_ivf_sq")
 
   private val coldBound = Map("q_cosine_topk" -> 5, "q_dedup_embed" -> 4,
-    "q_dedup_embed_lsh" -> 10, "q_dedup_embed_hi" -> 4,
+    "q_dedup_embed_lsh" -> 8, "q_dedup_embed_hi" -> 4,
     "q_dedup_embed_lsh_hi" -> 8, "q_ann_lsh" -> 10, "q_ann_ivf" -> 35,
     "q_ann_ivf_sq" -> 5)
   /** Only the IVF quantizer is memoized: a hit skips its 30 build jobs. */

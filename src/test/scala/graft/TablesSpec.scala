@@ -142,6 +142,26 @@ class TablesSpec extends SparkSpec {
     df.limit(1).count() shouldBe 1L
   }
 
+  test("rowCount: every table's footer count equals count(), with no Spark job") {
+    for (name <- Tables.names) {
+      val (n, jobs) = jobsOf(Tables.rowCount(spark, sfDir, name))
+      withClue(s"$name: ") {
+        jobs shouldBe 0
+        n shouldBe Tables(spark, sfDir, name).count()
+      }
+    }
+  }
+
+  test("rowCount: a directory of part files sums its parts and follows a rewrite") {
+    import spark.implicits._
+    val dir = tmp("graft-rowcount")
+    val path = s"$dir/t.parquet"
+    (1L to 10L).toDF("id").repartition(3).write.parquet(path)
+    Tables.rowCount(spark, dir, "t") shouldBe 10L
+    (1L to 4L).toDF("id").write.mode("overwrite").parquet(path)
+    Tables.rowCount(spark, dir, "t") shouldBe 4L
+  }
+
   test("schema cache: a table rewritten at the same path is re-inferred") {
     import spark.implicits._
     val dir = tmp("graft-rewrite")
